@@ -1470,7 +1470,7 @@ def q_posting_value_weight(spark, sf_dir):
     return _mset(spark, sf_dir, ops.AndMaybe(ops.Term("batch"), ps))
 
 
-# the batch workload shared by q_bm25_batch and its oracle:
+# the batch workload shared by q_wand_batch and its oracle:
 # (query_id, terms, op) — duplicate terms merge into wqf
 _BATCH_WORKLOAD = [
     ("b_or", ["batch", "scan", "spark"], "or"),
@@ -1487,30 +1487,13 @@ def q_wand_batch(spark, sf_dir):
     index's batch kernel (WandEnquire.get_mset_batch): per segment,
     each workload term's chunks decode ONCE and every query scores
     vectorized against the decoded arrays — decode amortization across
-    the workload's shared terms, no postings shuffle.  Results are
-    identical to bm25_batch (same oracle SQL)."""
+    the workload's shared terms, no postings shuffle.  Per-query
+    results equal Enquire.get_mset on the flat index."""
     from xapian_spark.query.wand import WandEnquire
 
     wq = WandEnquire(_segment_index(spark, sf_dir))
     df = wq.get_mset_batch(
         [(q, t) for q, t, _o in _BATCH_WORKLOAD], 10,
-        ops_by_id={q: o for q, _t, o in _BATCH_WORKLOAD})
-    return df.select("query_id", "rank", "doc_id",
-                     F.round("score", 6).alias("score"))
-
-
-def q_bm25_batch(spark, sf_dir):
-    """The whole 6-query workload answered in ONE dataflow
-    (query/batch.py): broadcast query terms onto a single postings
-    scan, one candidate shuffle, per-query top-10 with the mset
-    tiebreak.  The reference answers queries one at a time
-    (matcher/multimatch.cc); batching is the Spark-native serving
-    path — per-query scores stay identical to Enquire.get_mset."""
-    from xapian_spark.query.batch import bm25_batch
-
-    df = bm25_batch(
-        _index(spark, sf_dir),
-        [(q, t) for q, t, _o in _BATCH_WORKLOAD], k=10,
         ops_by_id={q: o for q, _t, o in _BATCH_WORKLOAD})
     return df.select("query_id", "rank", "doc_id",
                      F.round("score", 6).alias("score"))
@@ -1918,7 +1901,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ccnet_buckets": q_ccnet_buckets,
         "paragraph_dedup": q_paragraph_dedup,
         "embed_neardup_lsh": q_embed_neardup_lsh,
-        "bm25_batch": q_bm25_batch,
         "neardup_clusters": q_neardup_clusters,
         "streaming_commit": q_streaming_commit,
         "segment_manifest": q_segment_manifest,
@@ -2632,7 +2614,7 @@ ORDER BY score DESC, doc_id ASC LIMIT 10
     _bq = ",\n         ".join(_bq_vals)
     # the prelude's part has the k3 wqf factor at wqf=1 (== 1); scale
     # by (k3+1)*wqf/(k3+wqf) = 2*wqf/(1+wqf) per (query, term)
-    out["bm25_batch"] = f"""{_BM25_PRELUDE}
+    out["wand_batch"] = f"""{_BM25_PRELUDE}
 , batchq(query_id, term, wqf, is_and) AS (
   VALUES {_bq}
 ),
@@ -2658,8 +2640,6 @@ SELECT query_id, rank::INT AS rank, doc_id, round(score, 6) AS score
 FROM ranked WHERE rank <= 10
 ORDER BY query_id, rank
 """
-    # the segment batch kernel must produce the identical result set
-    out["wand_batch"] = out["bm25_batch"]
     out["wildcard"] = f"""{_BM25_PRELUDE}
 , syn AS (
   SELECT p.doc_id,

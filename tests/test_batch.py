@@ -1,17 +1,49 @@
 """Batch query evaluation == the single-query path, per query.
 
-The contract (query/batch.py): one dataflow answering a whole query
-workload must reproduce Enquire.get_mset exactly — same docids, same
-BM25 scores, same tiebreak — for every query in the batch, for OR and
-AND semantics, wqf-merged duplicates, and unknown terms.
+The contract (WandEnquire.get_mset_batch): one job answering a whole
+query workload over a chunk-encoded SegmentIndex must reproduce
+Enquire.get_mset on the flat index exactly — same docids, same BM25
+scores, same tiebreak — for every query in the batch, for OR and AND
+semantics, wqf-merged duplicates, and unknown terms.
 """
 
 import pytest
-from pyspark.sql import functions as F
 
 from xapian_spark.query import ops
-from xapian_spark.query.batch import bm25_batch
 from xapian_spark.query.executor import Enquire
+from xapian_spark.query.wand import WandEnquire
+
+SPECS = [
+    ("or3", ["batch", "scan", "dup"], "or"),
+    ("and2", ["join", "hash"], "and"),
+    ("single", ["dup"], "or"),
+    ("wqf", ["merge", "merge", "filter"], "or"),
+    ("missing_and", ["batch", "zzzznotaterm"], "and"),
+    ("missing_or", ["dup", "zzzznotaterm"], "or"),
+    ("all_missing", ["zzzznotaterm"], "or"),
+]
+
+
+@pytest.fixture(scope="module")
+def docs(spark):
+    return spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+
+
+@pytest.fixture(scope="module")
+def flat_index(docs):
+    from xapian_spark.index.build import build_index
+
+    idx = build_index(docs, analyzer="simple")
+    idx.postings = idx.postings.persist()
+    return idx
+
+
+@pytest.fixture(scope="module")
+def seg_index(docs, tmp_path_factory):
+    from xapian_spark.index.segments import build_segments
+
+    path = str(tmp_path_factory.mktemp("batch_seg"))
+    return build_segments(docs, path, n_segments=4, analyzer="simple")
 
 
 def _single(enq, terms, op, k):
@@ -28,9 +60,10 @@ def _single(enq, terms, op, k):
             for i, r in enumerate(rows)]
 
 
-def _batch(idx, specs, k):
-    res = bm25_batch(idx, [(q, t) for q, t, _o in specs], k=k,
-                     ops_by_id={q: o for q, _t, o in specs}).collect()
+def _batch(seg, specs, k):
+    res = WandEnquire(seg).get_mset_batch(
+        [(q, t) for q, t, _o in specs], k,
+        ops_by_id={q: o for q, _t, o in specs}).collect()
     out = {}
     for r in res:
         out.setdefault(r["query_id"], []).append(
@@ -40,96 +73,19 @@ def _batch(idx, specs, k):
     return out
 
 
-SPECS = [
-    ("or3", ["paragraph", "word", "banana"], "or"),
-    ("and2", ["paragraph", "word"], "and"),
-    ("single", ["paragraph"], "or"),
-    ("wqf", ["paragraph", "paragraph", "word"], "or"),
-    ("missing_and", ["paragraph", "zzzznotaterm"], "and"),
-    ("missing_or", ["paragraph", "zzzznotaterm"], "or"),
-    ("all_missing", ["zzzznotaterm"], "or"),
-]
-
-
-def test_batch_matches_single_path(simpledata_index):
-    enq = Enquire(simpledata_index)
-    got = _batch(simpledata_index, SPECS, k=10)
+def test_wand_batch_matches_flat_single_path(seg_index, flat_index):
+    enq = Enquire(flat_index)
+    got = _batch(seg_index, SPECS, k=10)
     for qid, terms, op in SPECS:
         exp = _single(enq, terms, op, 10)
         assert got.get(qid, []) == exp, qid
-
-
-def test_batch_k_truncates(simpledata_index):
-    got = _batch(simpledata_index, [("or3", ["paragraph", "word"], "or")],
-                 k=2)
-    assert len(got["or3"]) == 2
-    assert [r[0] for r in got["or3"]] == [1, 2]
-
-
-def test_batch_dataframe_input(simpledata_index, spark):
-    qt = spark.createDataFrame(
-        [("a", "paragraph"), ("a", "word"), ("b", "banana")],
-        "query_id string, term string")
-    res = bm25_batch(simpledata_index, qt, k=10).collect()
-    enq = Enquire(simpledata_index)
-    by_q = {}
-    for r in res:
-        by_q.setdefault(r["query_id"], []).append(
-            (r["rank"], r["doc_id"], round(r["score"], 9)))
-    for q in by_q:
-        by_q[q].sort()
-    assert by_q["a"] == _single(enq, ["paragraph", "word"], "or", 10)
-    assert by_q["b"] == _single(enq, ["banana"], "or", 10)
-
-
-def test_batch_plan_shape(simpledata_index):
-    """The workload plan must broadcast the query side (postings are
-    never shuffled pre-aggregation) and push the rank filter map-side
-    (WindowGroupLimit — partial top-k before the query_id shuffle)."""
-    df = bm25_batch(simpledata_index,
-                    [("q1", ["paragraph", "word"]), ("q2", ["banana"])])
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("BroadcastHashJoin") >= 2
-    assert "WindowGroupLimit" in plan
-    assert "CartesianProduct" not in plan
-
-
-def test_batch_rejects_generalized_weights(simpledata_index):
-    from xapian_spark.query.bm25 import TfIdfWeight
-
-    with pytest.raises(ValueError):
-        bm25_batch(simpledata_index, [("q", ["paragraph"])],
-                   weight=TfIdfWeight("ntn"))
-
-
-# ---------------------------------------------------------------------------
-# batch over the chunk-encoded segment index (WandEnquire.get_mset_batch)
-# ---------------------------------------------------------------------------
-
-@pytest.fixture(scope="module")
-def seg_index(simpledata_index, tmp_path_factory, spark):
-    from xapian_spark.index.build import build_index  # noqa: F401
-    from xapian_spark.index.segments import build_segments
-    from xapian_spark.io.apitest import corpus_df
-
-    docs = corpus_df(spark, "apitest_simpledata")
-    path = str(tmp_path_factory.mktemp("batch_seg"))
-    return build_segments(docs, path, n_segments=4, analyzer="apitest",
-                          text_col="data", input_desc="apitest_simpledata")
+    assert got["or3"] and got["and2"] and got["wqf"]
+    assert "missing_and" not in got and "all_missing" not in got
 
 
 def test_wand_batch_matches_single_wand(seg_index):
-    from xapian_spark.query.wand import WandEnquire
-
     wq = WandEnquire(seg_index)
-    res = wq.get_mset_batch([(q, t) for q, t, _o in SPECS], 10,
-                            ops_by_id={q: o for q, _t, o in SPECS}).collect()
-    by_q = {}
-    for r in res:
-        by_q.setdefault(r["query_id"], []).append(
-            (r["rank"], r["doc_id"], round(r["score"], 9)))
-    for q in by_q:
-        by_q[q].sort()
+    got = _batch(seg_index, SPECS, k=10)
     for qid, terms, op in SPECS:
         wqf = {}
         for t in terms:
@@ -138,47 +94,15 @@ def test_wand_batch_matches_single_wand(seg_index):
                            wqf=wqf).collect()
         exp = [(i + 1, r["doc_id"], round(r["score"], 9))
                for i, r in enumerate(rows)]
-        assert by_q.get(qid, []) == exp, qid
+        assert got.get(qid, []) == exp, qid
 
 
-def test_wand_batch_matches_flat_batch(seg_index, simpledata_index):
-    """Cross-engine identity: the segment batch kernel and the flat
-    DataFrame batch produce the same docids and scores."""
-    from xapian_spark.query.wand import WandEnquire
-
-    flat = _batch(simpledata_index, SPECS, k=10)
-    wq = WandEnquire(seg_index)
-    res = wq.get_mset_batch([(q, t) for q, t, _o in SPECS], 10,
-                            ops_by_id={q: o for q, _t, o in SPECS}).collect()
-    by_q = {}
-    for r in res:
-        by_q.setdefault(r["query_id"], []).append(
-            (r["rank"], r["doc_id"], round(r["score"], 9)))
-    for q in by_q:
-        by_q[q].sort()
-    assert by_q == {q: rows for q, rows in flat.items() if rows}
+def test_wand_batch_k_truncates(seg_index):
+    got = _batch(seg_index, [("or2", ["batch", "scan"], "or")], k=2)
+    assert [r[0] for r in got["or2"]] == [1, 2]
 
 
-def test_batch_dataframe_input_ops_by_id(simpledata_index, spark):
-    """ops_by_id must apply to DataFrame query inputs too (it used to
-    be silently ignored there): per-query AND override, default for
-    unlisted queries, bad op rejected."""
-    qt = spark.createDataFrame(
-        [("a", "paragraph"), ("a", "word"),
-         ("m", "paragraph"), ("m", "zzzznotaterm"),
-         ("d", "paragraph")],
-        "query_id string, term string")
-    res = bm25_batch(simpledata_index, qt, k=10,
-                     ops_by_id={"a": "and", "m": "and"}).collect()
-    by_q = {}
-    for r in res:
-        by_q.setdefault(r["query_id"], []).append(
-            (r["rank"], r["doc_id"], round(r["score"], 9)))
-    for q in by_q:
-        by_q[q].sort()
-    enq = Enquire(simpledata_index)
-    assert by_q["a"] == _single(enq, ["paragraph", "word"], "and", 10)
-    assert "m" not in by_q  # AND with an unindexed term matches nothing
-    assert by_q["d"] == _single(enq, ["paragraph"], "or", 10)
+def test_wand_batch_rejects_bad_op(seg_index):
     with pytest.raises(ValueError, match="unsupported batch op"):
-        bm25_batch(simpledata_index, qt, ops_by_id={"a": "xor"})
+        WandEnquire(seg_index).get_mset_batch(
+            [("a", ["batch"])], 10, ops_by_id={"a": "xor"})

@@ -131,6 +131,14 @@ def test_charset_sniffing_edges():
     # utf-16 document (every tag byte is multibyte) decodes via BOM
     doc = "<body>café</body>".encode("utf-16")  # LE BOM
     assert "café" in decode_html(doc)
+    # "charset=" in a non-content-type meta's content declares nothing
+    h = ('<meta name="description" content="pages in charset=shift_jis">'
+         "<body>caf\u00e9</body>").encode("utf-8")
+    assert sniff_charset(h) == "utf-8"
+    assert "caf\u00e9" in decode_html(h)
+    assert sniff_charset(
+        b'<meta content="text/html; charset=koi8-r" '
+        b'http-equiv="content-type">') == "koi8-r"
     # default when nothing declares
     assert sniff_charset(b"<body>x</body>") == "utf-8"
     assert sniff_charset(b"<body>x</body>", "iso-8859-1") == \

@@ -32,6 +32,19 @@ def test_group_selection():
     assert parse_robots("User-agent: *\nDisallow:\n") == []
 
 
+def test_matching_groups_merge():
+    """RFC 9309 §2.2.1: every group matching the agent merges — two
+    separate ``*`` groups both apply, and exact-token groups merge
+    (and still win over ``*``)."""
+    body = ("User-agent: *\nDisallow: /a\n\n"
+            "User-agent: bot\nDisallow: /b\n\n"
+            "User-agent: *\nDisallow: /c\n\n"
+            "User-agent: BOT\nAllow: /b/ok\n")
+    assert parse_robots(body) == [(False, "/a"), (False, "/c")]
+    assert parse_robots(body, "bot") == [(False, "/b"), (True, "/b/ok")]
+    assert parse_robots(body, "other") == parse_robots(body)
+
+
 def test_pattern_regex():
     import re
 

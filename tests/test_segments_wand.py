@@ -228,3 +228,69 @@ def test_positions_in_segment_index(spark, tmp_path):
     out = compact(seg, str(tmp_path / "pidx2"), n_segments=2)
     c = _pairs(Enquire(out.to_inverted_index()).get_mset(q, 0, 10))
     assert c == b
+
+
+# ---------------------------------------------------------------------------
+# one encoder, one docid→segment rule: byte identity across build paths
+# ---------------------------------------------------------------------------
+
+def _manifest(seg: SegmentIndex):
+    """Per-segment manifest metrics plus a pos_data checksum."""
+    pos = {r["seg_id"]: r["p"] for r in seg.chunks.groupBy("seg_id").agg(
+        F.sum(F.crc32(F.coalesce("pos_data", F.lit(b"")))).alias("p"))
+        .collect()}
+    return [(r["seg_id"], r["n_docs"], r["n_postings"], r["n_chunks"],
+             r["bytes"], r["checksum"], pos[r["seg_id"]])
+            for r in seg.manifest().orderBy("seg_id").collect()]
+
+
+@pytest.mark.parametrize("keep_positions", [False, True])
+def test_compact_equals_fresh_build(spark, tmp_path, keep_positions):
+    """compact(build(n=4), n=2) with no deletes writes the same chunk
+    bytes as build(n=2): both encode through one chunk encoder and
+    place docs with one docid→segment rule. The corpus holds doc_id 0,
+    which that rule puts in the last segment."""
+    from xapian_spark.index.segments import compact
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    assert docs.filter(F.col("doc_id") == 0).count() == 1
+    four = build_segments(docs, str(tmp_path / "four"), n_segments=4,
+                          analyzer="simple", keep_positions=keep_positions)
+    two = build_segments(docs, str(tmp_path / "two"), n_segments=2,
+                         analyzer="simple", keep_positions=keep_positions)
+    out = compact(four, str(tmp_path / "compacted"), n_segments=2)
+    assert _manifest(out) == _manifest(two)
+
+
+def test_build_independent_of_input_partitioning(spark, tmp_path):
+    """The same docs from one input partition and from four shuffled
+    partitions build byte-identical segments."""
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    one = build_segments(docs.coalesce(1), str(tmp_path / "one"),
+                         n_segments=4, analyzer="simple",
+                         keep_positions=True)
+    shuffled = build_segments(docs.repartition(4, F.rand(seed=7)),
+                              str(tmp_path / "shuffled"), n_segments=4,
+                              analyzer="simple", keep_positions=True)
+    assert _manifest(one) == _manifest(shuffled)
+
+
+def test_simple_overlong_term_dropped_by_both_builds(spark, tmp_path):
+    """build_index and build_segments share one analyze step: a
+    300-byte "simple" token is dropped by both, and the doclen counts
+    only the kept terms."""
+    long_tok = "x" * 300
+    docs = spark.createDataFrame(
+        [(1, f"alpha {long_tok} beta"), (2, "alpha gamma")],
+        "doc_id long, text string")
+    flat = build_index(docs, analyzer="simple")
+    seg = build_segments(docs, str(tmp_path / "seg"), n_segments=1,
+                         analyzer="simple")
+    cols = ["term", "doc_id", "wdf", "doclen"]
+    got_flat = sorted(tuple(r) for r in flat.postings.select(*cols)
+                      .collect())
+    got_seg = sorted(tuple(r) for r in seg.to_postings().select(*cols)
+                     .collect())
+    assert got_flat == got_seg == [
+        ("alpha", 1, 1, 2), ("alpha", 2, 1, 2), ("beta", 1, 1, 2),
+        ("gamma", 2, 1, 2)]

@@ -1,6 +1,8 @@
 """Local stand-in for the driver's correctness gate: run every
 queries() entry on Spark and its oracle_sql() on DuckDB at sf0.01,
-compare row count, column names, and order-insensitive values.
+compare row count, column names, and order-insensitive values. An
+oracle_sql() key with no queries() entry is dead oracle SQL and also
+FAILs. Spark runs at local[<CPUs this process may use>].
 
 Usage: python tools/check_oracle.py [query ...]
 """
@@ -8,6 +10,7 @@ Usage: python tools/check_oracle.py [query ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 
 sys.path.insert(0, ".")
@@ -42,7 +45,8 @@ def main():
 
     only = set(sys.argv[1:])
     spark = (
-        SparkSession.builder.master("local[8]")
+        SparkSession.builder
+        .master(f"local[{len(os.sched_getaffinity(0))}]")
         .config("spark.sql.shuffle.partitions", "8")
         .config("spark.driver.memory", "6g")
         .config("spark.ui.enabled", "false")
@@ -57,6 +61,11 @@ def main():
     qs = e.queries()
     oracles = e.oracle_sql()
     n_pass = n_fail = n_weak = 0
+    for name in sorted(set(oracles) - set(qs)):
+        if only and name not in only:
+            continue
+        print(f"FAIL {name}: oracle_sql() entry with no queries() entry")
+        n_fail += 1
     for name, fn in qs.items():
         if only and name not in only:
             continue

@@ -75,15 +75,17 @@ _PI_RE = re.compile(r"<\?.*?\?>", re.DOTALL)
 
 
 # meta-declared charset, mirroring myhtmlparse.cc:210-255: the
-# http-equiv=content-type "charset=" token (quoted or bare, bare ends
-# at the reference's separator set) and the HTML5 <meta charset=...>
-# attribute. Scanned on the RAW bytes (tags are ASCII in every
-# ASCII-compatible charset, which is everything the web uses once
-# UTF-16 BOMs are handled first).
+# "charset=" token (quoted or bare, bare ends at the reference's
+# separator set) of an http-equiv=content-type tag's content, and the
+# HTML5 <meta charset=...> attribute. "charset=" inside any other
+# meta content (a description, keywords) is text, not a declaration.
+# Scanned on the RAW bytes (tags are ASCII in every ASCII-compatible
+# charset, which is everything the web uses once UTF-16 BOMs are
+# handled first).
 _META_TAG_RE = re.compile(rb"<meta\s[^>]*>", re.IGNORECASE | re.DOTALL)
 _CHARSET_TOKEN_RE = re.compile(
-    rb"charset\s*=\s*(?:\"([^\"]*)\"|'([^']*)'"
-    rb"|([^\s\"';()<>@,:\\/\[\]?={}]+))",
+    r"charset\s*=\s*(?:\"([^\"]*)\"|'([^']*)'"
+    r"|([^\s\"';()<>@,:\\/\[\]?={}]+))",
     re.IGNORECASE)
 
 
@@ -101,10 +103,20 @@ def sniff_charset(data: bytes, default: str = "utf-8") -> str:
     if data[:2] == b"\xfe\xff":
         return "utf-16-be"
     for tag in _META_TAG_RE.finditer(data):
-        m = _CHARSET_TOKEN_RE.search(tag.group(0))
+        attrs: dict = {}
+        for a in _ATTR_RE.finditer(tag.group(0).decode("latin-1")):
+            attrs.setdefault(a.group(1).lower(), next(
+                g for g in a.groups()[2:] if g is not None))
+        if "charset" in attrs:
+            decl = "charset=" + attrs["charset"]
+        elif attrs.get("http-equiv", "").strip().lower() == "content-type":
+            decl = attrs.get("content", "")
+        else:
+            continue
+        m = _CHARSET_TOKEN_RE.search(decl)
         if m:
-            val = next(g for g in m.groups() if g is not None)
-            name = val.decode("ascii", "replace").strip().lower()
+            name = next(g for g in m.groups() if g is not None)
+            name = name.strip().lower()
             if name:
                 return name
     return default

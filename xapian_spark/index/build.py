@@ -6,12 +6,12 @@ brass_inverter.h:45-249): tokenize → explode → groupBy(term, doc) → per-te
 posting rows; doclen = Σ wdf over ALL of a doc's terms (including Z-stems,
 brass_database.cc:1058-1071); global stats mirror brass_dbstats.h:41-61.
 
-Two tokenize paths:
-- analyzer="simple": pure Spark SQL (lowercase, split on non-alnum) — stays
-  entirely inside whole-stage codegen, and is expressible in ANSI SQL for
-  the DuckDB oracle cross-check.
-- analyzer="xapian" (default) or any callable: the TermGenerator rules via
-  an Arrow-batched mapInPandas (vectorized; no per-row Python UDF calls).
+One tokenize path, shared with the segment build (segments.py): every
+analyzer — a name in ANALYZERS ("xapian", the default TermGenerator rules;
+"apitest"; "simple", lowercase + split on non-alnum, the DuckDB-oracle
+tokenization) or any callable — resolves through resolve_analyzer and runs
+per document through analyze_document inside an Arrow-batched mapInPandas
+(no per-row Python UDF calls).
 
 Scale notes (100 TB / 10^12 docs):
 - the tokenize → explode stage is embarrassingly parallel (no shuffle);
@@ -23,8 +23,9 @@ Scale notes (100 TB / 10^12 docs):
 
 from __future__ import annotations
 
+import re
 from dataclasses import dataclass
-from typing import Callable, Iterator, Optional
+from typing import Callable, Iterator, List, Optional, Tuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -148,10 +149,55 @@ def _munge_term(term: str) -> str:
     return "".join(out)
 
 
+# the DuckDB-parity tokenization: lowercase, split on runs of non-alnum
+SIMPLE_SPLIT_RE = "[^a-z0-9]+"
+
+
+def simple_analyzer(text: str):
+    """Lowercase, split on SIMPLE_SPLIT_RE, sequential positions — the
+    tokenization the DuckDB oracle SQL restates with lower/split, so an
+    index built with it stays oracle-checkable."""
+    terms = {}
+    for i, tok in enumerate(
+            t for t in re.split(SIMPLE_SPLIT_RE, (text or "").lower()) if t):
+        wdf, positions = terms.get(tok, (0, []))
+        positions.append(i + 1)
+        terms[tok] = (wdf + 1, positions)
+    return [(t, w, p) for t, (w, p) in terms.items()]
+
+
 ANALYZERS = {
     "xapian": xapian_analyzer,
     "apitest": apitest_analyzer,
+    "simple": simple_analyzer,
 }
+
+
+def resolve_analyzer(analyzer, lang_col: Optional[str] = None) -> Callable:
+    """`analyzer` (a name in ANALYZERS or a callable) → the callable.
+    With lang_col the analyzer is called as (text, lang); the default
+    "xapian" then means multilingual_analyzer."""
+    if lang_col:
+        fn = multilingual_analyzer if analyzer in ("xapian", None) \
+            else analyzer
+        if not callable(fn):
+            raise ValueError(
+                f"lang_col needs a (text, lang) callable, got "
+                f"{analyzer!r}")
+        return fn
+    fn = analyzer if callable(analyzer) else ANALYZERS.get(analyzer)
+    if fn is None:
+        raise ValueError(f"unknown analyzer: {analyzer!r}")
+    return fn
+
+
+def analyze_document(fn: Callable, *args) -> Tuple[List, int]:
+    """One document through an analyzer → ([(term, wdf, positions)],
+    doclen). Terms over MAX_SAFE_TERM_LENGTH bytes are dropped, and
+    doclen = Σ wdf over the kept terms (incl. Z-stems)."""
+    tl = [(t, w, p) for t, w, p in fn(*args)
+          if len(t.encode("utf-8")) <= MAX_SAFE_TERM_LENGTH]
+    return tl, sum(w for _t, w, _p in tl)
 
 
 @dataclass
@@ -249,15 +295,10 @@ def _tokenize_python(
             langs = pdf[lang_col] if lang_col else pdf[id_col]
             for doc_id, text, lang in zip(pdf[id_col], pdf[text_col],
                                           langs):
-                toks = analyzer(text, lang) if lang_col \
-                    else analyzer(text)
-                tl = [
-                    (t, w, p) for t, w, p in toks
-                    if len(t.encode("utf-8")) <= MAX_SAFE_TERM_LENGTH
-                ]
                 # doclen known at tokenize time — denormalized into every
                 # posting row so scoring never joins doclens at query time
-                doclen = sum(w for _t, w, _p in tl)
+                tl, doclen = analyze_document(analyzer, text, lang) \
+                    if lang_col else analyze_document(analyzer, text)
                 for term, wdf, positions in tl:
                     ids.append(doc_id)
                     terms.append(term)
@@ -276,52 +317,6 @@ def _tokenize_python(
         gen, POSTINGS_SCHEMA)
 
 
-# the DuckDB-parity tokenization: lowercase, split on runs of non-alnum
-SIMPLE_SPLIT_RE = "[^a-z0-9]+"
-
-
-def _tokenize_simple(
-    docs: DataFrame, id_col: str, text_col: str, keep_positions: bool
-) -> DataFrame:
-    """Pure-SQL tokenize (no Python): lower → split → posexplode → group."""
-    # project BEFORE spreading: the repartition exchange then moves
-    # only (id, text), not every input column (html, metadata, ...)
-    docs = spread_input(docs.select(
-        F.col(id_col).cast("long").alias(id_col), text_col))
-    toks = (
-        docs.select(
-            F.col(id_col).alias("doc_id"),
-            F.posexplode(
-                F.filter(
-                    F.split(F.lower(F.col(text_col)), SIMPLE_SPLIT_RE),
-                    lambda t: t != "",
-                )
-            ).alias("pos0", "term"),
-        )
-    )
-    agg = [
-        F.count(F.lit(1)).cast("int").alias("wdf"),
-    ]
-    if keep_positions:
-        agg.append(
-            F.sort_array(
-                F.collect_list((F.col("pos0") + 1).cast("int"))
-            ).alias("positions")
-        )
-    out = toks.groupBy("term", "doc_id").agg(*agg)
-    if not keep_positions:
-        out = out.withColumn(
-            "positions", F.lit(None).cast(ArrayType(IntegerType()))
-        )
-    # denormalize doclen into every posting row (one window shuffle at
-    # build time buys join-free scoring at query time)
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("doc_id")
-    out = out.withColumn("doclen", F.sum("wdf").over(w).cast("long"))
-    return out.select("term", "doc_id", "wdf", "doclen", "positions")
-
-
 def build_index(
     docs: DataFrame,
     text_col: str = "text",
@@ -333,31 +328,14 @@ def build_index(
 ) -> InvertedIndex:
     """Build the four index tables from a (doc_id, text) DataFrame.
 
-    `analyzer` is "simple", a name in ANALYZERS, or a callable
+    `analyzer` is a name in ANALYZERS or a callable
     text -> [(term, wdf, positions)]. With `lang_col`, each row is
     analyzed with the Snowball stemmer for its language column
     (analyzer must accept (text, lang); default multilingual_analyzer).
     """
-    if lang_col:
-        fn = multilingual_analyzer if analyzer in ("xapian", None) \
-            else analyzer
-        if not callable(fn):
-            raise ValueError(
-                f"lang_col needs a (text, lang) callable, got "
-                f"{analyzer!r}")
-        postings = _tokenize_python(docs, id_col, text_col, fn,
-                                    keep_positions, lang_col=lang_col)
-    elif analyzer == "simple":
-        postings = _tokenize_simple(docs, id_col, text_col, keep_positions)
-    else:
-        fn = ANALYZERS.get(analyzer, analyzer) if not callable(analyzer) \
-            else analyzer
-        if not callable(fn):
-            raise ValueError(f"unknown analyzer: {analyzer!r}")
-        postings = _tokenize_python(docs, id_col, text_col, fn,
-                                    keep_positions)
-
-    postings = postings.persist()
+    fn = resolve_analyzer(analyzer, lang_col)
+    postings = _tokenize_python(docs, id_col, text_col, fn,
+                                keep_positions, lang_col=lang_col).persist()
 
     # doclen = Σ wdf over the doc's full termlist (incl. Z-stems).
     doclens = (

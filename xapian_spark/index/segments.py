@@ -40,24 +40,25 @@ metadata-only aggregation over chunk rows.
 from __future__ import annotations
 
 import time
-from typing import Callable, Iterable, List, Optional
+from typing import Callable, Iterable, Optional
 
 import numpy as np
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType, DoubleType, IntegerType, LongType, StringType, StructField,
     StructType,
 )
 
-from xapian_spark.index.build import ANALYZERS, MAX_SAFE_TERM_LENGTH
+from xapian_spark.index.build import analyze_document, resolve_analyzer
 from xapian_spark.index.codec import (
-    CHUNK_TARGET_BYTES, CODEC_VERSION, encode_chunks, encode_positions,
+    CHUNK_TARGET_BYTES, CODEC_VERSION, decode_chunk, decode_positions,
+    encode_chunks, encode_positions,
 )
 
-DOCLEN_TERM = ""  # reserved pseudo-term whose chunks hold (doc_id, 0, doclen)
+DOCLEN_TERM = ""  # reserved pseudo-term: chunks hold (doc_id, doclen, doclen)
 
 CHUNKS_SCHEMA = StructType([
     StructField("term", StringType(), False),
@@ -71,6 +72,11 @@ CHUNKS_SCHEMA = StructType([
     StructField("data", BinaryType(), False),
     StructField("pos_data", BinaryType(), True),
 ])
+
+# one row per posting, decoded from chunk rows (the flat postings layout
+# plus the source seg_id the tombstone anti-join needs)
+DECODED_SCHEMA = ("term string, doc_id long, wdf int, doclen long,"
+                  " seg_id int, positions array<int>")
 
 MANIFEST_SCHEMA = StructType([
     StructField("seg_id", IntegerType(), False),
@@ -184,23 +190,72 @@ def _check_format(spark: SparkSession, path: str) -> None:
             f"reader (expects v{CODEC_VERSION}); rebuild the index")
 
 
-def simple_analyzer(text: str):
-    """Python twin of build.py's pure-SQL "simple" tokenization
-    (lowercase, split on non-alnum) — identical output, so a chunk
-    index built with it stays DuckDB-oracle-checkable."""
-    import re
-
-    terms = {}
-    for i, tok in enumerate(
-            t for t in re.split("[^a-z0-9]+", (text or "").lower()) if t):
-        wdf, positions = terms.get(tok, (0, []))
-        positions.append(i + 1)
-        terms[tok] = (wdf + 1, positions)
-    return [(t, w, p) for t, (w, p) in terms.items()]
+def _segment_of(doc_id: Column, n_segments: int, offset: int = 0
+                ) -> Column:
+    """seg_id = offset + (doc_id - 1) mod n_segments — the reference's
+    multi-database interleave (multimatch.cc:175-176); pmod puts doc_id
+    0 in segment n_segments - 1. The one docid→segment rule: the build
+    and compact both assign segments with it."""
+    return (F.lit(offset)
+            + F.pmod(doc_id.cast("long") - 1, F.lit(n_segments))
+            ).cast("int")
 
 
-SEG_ANALYZERS = dict(ANALYZERS)
-SEG_ANALYZERS["simple"] = simple_analyzer
+def _encode_term(rows: dict, term: str, seg_id: int, ids: np.ndarray,
+                 wdf: np.ndarray, doclen: np.ndarray, positions,
+                 target_bytes: int) -> None:
+    """One term's docid-ascending postings within one segment → chunk
+    rows appended to `rows` (CHUNKS_SCHEMA columns). The one chunk
+    encoder: the build, replace_documents and compact all write
+    through it.
+
+    Per-chunk cf = Σ wdf, so the global term dictionary is a
+    metadata-only sum. The doclen pseudo-term stores each doc's doclen
+    in the wdf slot, so the same rule makes its cf = Σ doclen (global
+    total_doclen is a metadata-only sum too) and its max_wdf /
+    min_doclen the doclen upper/lower bounds. positions=None stores
+    no pos_data."""
+    pos = 0
+    for c in encode_chunks(ids, wdf, doclen, target_bytes):
+        rows["term"].append(term)
+        rows["seg_id"].append(seg_id)
+        rows["first_doc_id"].append(c.first_doc_id)
+        rows["last_doc_id"].append(c.last_doc_id)
+        rows["n"].append(c.n)
+        rows["cf"].append(int(wdf[pos: pos + c.n].sum()))
+        rows["max_wdf"].append(c.max_wdf)
+        rows["min_doclen"].append(c.min_doclen)
+        rows["data"].append(c.data)
+        rows["pos_data"].append(
+            None if positions is None
+            else encode_positions(positions[pos: pos + c.n]))
+        pos += c.n
+
+
+def _decode_chunk_rows(pdf):
+    """Chunk rows (term, seg_id, data, pos_data) → one row per posting
+    (DECODED_SCHEMA). The one chunk reader behind to_postings, doclens
+    and compact; positions is NULL for chunks stored without
+    pos_data."""
+    import pandas as pd
+
+    ids_l, w_l, dl_l, pos_l = [], [], [], []
+    for data, pdata in zip(pdf["data"], pdf["pos_data"]):
+        ids, wdf, dl = decode_chunk(bytes(data))
+        ids_l.append(ids)
+        w_l.append(wdf)
+        dl_l.append(dl)
+        pos_l.extend([None] * ids.size if pdata is None
+                     else decode_positions(bytes(pdata), ids.size))
+    counts = [a.size for a in ids_l]
+    return pd.DataFrame({
+        "term": np.repeat(pdf["term"].to_numpy(), counts),
+        "doc_id": np.concatenate(ids_l),
+        "wdf": np.concatenate(w_l),
+        "doclen": np.concatenate(dl_l),
+        "seg_id": np.repeat(pdf["seg_id"].to_numpy(), counts),
+        "positions": pos_l,
+    })
 
 
 def _invert_segment(
@@ -215,9 +270,7 @@ def _invert_segment(
     terms_acc: dict = {}
     doclens = np.zeros(doc_ids.size, dtype=np.int64)
     for i, text in enumerate(pdf[text_col]):
-        tl = [(t, w, p) for t, w, p in analyzer(text)
-              if len(t.encode("utf-8")) <= MAX_SAFE_TERM_LENGTH]
-        doclens[i] = sum(w for _t, w, _p in tl)
+        tl, doclens[i] = analyze_document(analyzer, text)
         for t, w, p in tl:
             terms_acc.setdefault(t, ([], [], []))
             terms_acc[t][0].append(i)
@@ -226,53 +279,41 @@ def _invert_segment(
 
     seg_id = int(pdf["seg_id"].iloc[0]) if "seg_id" in pdf else 0
     rows = {k.name: [] for k in CHUNKS_SCHEMA.fields}
-
-    def emit(term: str, idxs: List[int], wdfs: List[int], plists):
-        ids = doc_ids[idxs]
-        dls = doclens[idxs]
-        w = np.asarray(wdfs, dtype=np.int64)
-        pos = 0
-        for c in encode_chunks(ids, w, dls, target_bytes):
-            rows["term"].append(term)
-            rows["seg_id"].append(seg_id)
-            rows["first_doc_id"].append(c.first_doc_id)
-            rows["last_doc_id"].append(c.last_doc_id)
-            rows["n"].append(c.n)
-            # per-chunk cf = Σ wdf over the chunk's postings, so the
-            # global term dictionary is a metadata-only sum
-            rows["cf"].append(int(w[pos: pos + c.n].sum()))
-            rows["max_wdf"].append(c.max_wdf)
-            rows["min_doclen"].append(c.min_doclen)
-            rows["data"].append(c.data)
-            rows["pos_data"].append(
-                encode_positions(plists[pos: pos + c.n])
-                if keep_positions else None)
-            pos += c.n
-
     for term in sorted(terms_acc):
         idxs, wdfs, plists = terms_acc[term]
-        emit(term, idxs, wdfs, plists)
-    # doclen pseudo-term: one posting per doc, wdf=0, doclen inline.
-    # per-chunk cf / max_wdf / min_doclen here describe DOClens:
-    # cf = Σ doclen (chunk), max_wdf = max doclen, min_doclen = min.
+        _encode_term(rows, term, seg_id, doc_ids[idxs],
+                     np.asarray(wdfs, dtype=np.int64), doclens[idxs],
+                     plists if keep_positions else None, target_bytes)
+    # doclen pseudo-term: one posting per doc, doclen in the wdf slot
     if doc_ids.size:
-        pos = 0
-        for c in encode_chunks(doc_ids, doclens, doclens, target_bytes):
-            rows["term"].append(DOCLEN_TERM)
-            rows["seg_id"].append(seg_id)
-            rows["first_doc_id"].append(c.first_doc_id)
-            rows["last_doc_id"].append(c.last_doc_id)
-            rows["n"].append(c.n)
-            # cf of a doclen chunk = Σ doclen, so global total_doclen
-            # is a metadata-only sum; max_wdf/min_doclen double as the
-            # doclen upper/lower bounds
-            rows["cf"].append(int(doclens[pos: pos + c.n].sum()))
-            rows["max_wdf"].append(c.max_wdf)
-            rows["min_doclen"].append(c.min_doclen)
-            rows["data"].append(c.data)
-            rows["pos_data"].append(None)
-            pos += c.n
+        _encode_term(rows, DOCLEN_TERM, seg_id, doc_ids, doclens, doclens,
+                     None, target_bytes)
     return pd.DataFrame(rows)
+
+
+def _write_manifest(chunks: DataFrame, path: str, build_sec: float,
+                    input_desc: str, mode: str) -> None:
+    """Per-segment manifest rows (lineage + metrics) aggregated from
+    chunk rows — the one manifest writer for build and compact."""
+    (chunks.groupBy("seg_id").agg(
+        F.sum(F.when(F.col("term") == DOCLEN_TERM, F.col("n"))
+              .otherwise(0)).cast("long").alias("n_docs"),
+        F.sum(F.when(F.col("term") != DOCLEN_TERM, F.col("n"))
+              .otherwise(0)).cast("long").alias("n_postings"),
+        F.count(F.lit(1)).cast("long").alias("n_chunks"),
+        F.count_distinct(
+            F.when(F.col("term") != DOCLEN_TERM, F.col("term"))
+        ).cast("long").alias("n_terms"),
+        F.sum(F.length("data")).cast("long").alias("bytes"),
+        # order-independent checksum: Σ crc32(data) — stable across
+        # shuffles and engines
+        (F.sum(F.crc32("data")) % F.lit(2**63 - 1))
+        .cast("long").alias("checksum"),
+    )
+     .withColumn("build_sec", F.lit(float(build_sec)))
+     .withColumn("input_desc", F.lit(input_desc))
+     .select([f.name for f in MANIFEST_SCHEMA.fields])
+     .write.mode(mode).parquet(f"{path}/manifest"))
 
 
 class SegmentIndex:
@@ -457,46 +498,26 @@ class SegmentIndex:
                 .filter((F.col("_rn") == 1) & (F.col("value") != ""))
                 .select("key").orderBy("key"))
 
-    def to_postings(self) -> DataFrame:
-        """Decode chunks → row-per-posting DataFrame
-        (term, doc_id, wdf, doclen, positions=NULL) — the flat
-        InvertedIndex layout. Lazily evaluated; a `term` filter above
-        it prunes chunk rows before any decode runs."""
-        from xapian_spark.index.codec import decode_chunk
-
-        schema = ("term string, doc_id long, wdf int, doclen long,"
-                  " seg_id int, positions array<int>")
-
-        from xapian_spark.index.codec import decode_positions
+    def _decode(self, chunks: DataFrame) -> DataFrame:
+        """Chunk rows → live posting rows (DECODED_SCHEMA): the shared
+        chunk reader followed by the tombstone anti-join."""
 
         def gen(batches):
-            import pandas as pd
-
             for pdf in batches:
-                out = {"term": [], "doc_id": [], "wdf": [],
-                       "doclen": [], "seg_id": [], "positions": []}
-                for term, seg, data, pd_ in zip(
-                        pdf["term"], pdf["seg_id"], pdf["data"],
-                        pdf["pos_data"]):
-                    ids, wdfs, dls = decode_chunk(bytes(data))
-                    out["term"].extend([term] * len(ids))
-                    out["doc_id"].extend(int(x) for x in ids)
-                    out["wdf"].extend(int(x) for x in wdfs)
-                    out["doclen"].extend(int(x) for x in dls)
-                    out["seg_id"].extend([int(seg)] * len(ids))
-                    if pd_ is None:
-                        out["positions"].extend([None] * len(ids))
-                    else:
-                        out["positions"].extend(
-                            [p.tolist() for p in decode_positions(
-                                bytes(pd_), len(ids))])
-                yield pd.DataFrame(out)
+                if len(pdf):
+                    yield _decode_chunk_rows(pdf)
 
-        rows = (self.postings_chunks
-                .select("term", "seg_id", "data", "pos_data")
-                .mapInPandas(gen, schema))
-        rows = self._filter_tombstoned(rows)
-        return rows.drop("seg_id")
+        rows = (chunks.select("term", "seg_id", "data", "pos_data")
+                .mapInPandas(gen, DECODED_SCHEMA))
+        return self._filter_tombstoned(rows)
+
+    def to_postings(self) -> DataFrame:
+        """Decode chunks → row-per-posting DataFrame
+        (term, doc_id, wdf, doclen, positions) — the flat InvertedIndex
+        layout; positions are NULL unless built with keep_positions.
+        Lazily evaluated; a `term` filter above it prunes chunk rows
+        before any decode runs."""
+        return self._decode(self.postings_chunks).drop("seg_id")
 
     def _filter_tombstoned(self, rows: DataFrame) -> DataFrame:
         """Drop tombstoned (doc_id, seg_id <= before_seg) rows — a
@@ -529,29 +550,7 @@ class SegmentIndex:
         """(doc_id, doclen) decoded straight from the doclen pseudo-term
         chunks — no full-postings decode, no shuffle (each doc's length
         lives in exactly one chunk of one segment)."""
-        from xapian_spark.index.codec import decode_chunk
-
-        def gen(batches):
-            import pandas as pd
-
-            for pdf in batches:
-                ids_l, dl_l, seg_l = [], [], []
-                for seg, data in zip(pdf["seg_id"], pdf["data"]):
-                    ids, _w, dls = decode_chunk(bytes(data))
-                    ids_l.append(ids)
-                    dl_l.append(dls)
-                    seg_l.append(np.full(len(ids), int(seg),
-                                         dtype=np.int64))
-                if ids_l:
-                    yield pd.DataFrame({
-                        "doc_id": np.concatenate(ids_l),
-                        "doclen": np.concatenate(dl_l),
-                        "seg_id": np.concatenate(seg_l)})
-
-        rows = (self.doclen_chunks.select("seg_id", "data")
-                .mapInPandas(gen,
-                             "doc_id long, doclen long, seg_id long"))
-        return self._filter_tombstoned(rows).drop("seg_id")
+        return self._decode(self.doclen_chunks).select("doc_id", "doclen")
 
 
 def compact(
@@ -573,45 +572,10 @@ def compact(
     head-term posting list (the same property the salted multipass
     merge of brass_compact.cc:679-730 buys).
     """
-    from xapian_spark.index.codec import decode_chunk
-
     spark = index.spark
     if not n_segments:
         n_segments = max(1, index.chunks.select("seg_id")
                          .distinct().count() // 4)
-
-    rows_schema = ("term string, doc_id long, wdf int, doclen long,"
-                   " seg_id int, src_seg int, positions array<int>")
-
-    nseg = n_segments
-
-    from xapian_spark.index.codec import decode_positions
-
-    def explode(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            out = {"term": [], "doc_id": [], "wdf": [], "doclen": [],
-                   "seg_id": [], "src_seg": [], "positions": []}
-            for term, src, data, pd_ in zip(pdf["term"], pdf["seg_id"],
-                                            pdf["data"],
-                                            pdf["pos_data"]):
-                ids, wdfs, dls = decode_chunk(bytes(data))
-                out["term"].extend([term] * len(ids))
-                out["doc_id"].extend(int(x) for x in ids)
-                out["wdf"].extend(int(x) for x in wdfs)
-                out["doclen"].extend(int(x) for x in dls)
-                out["seg_id"].extend(
-                    int((x - 1) % nseg) if x >= 1 else int(x % nseg)
-                    for x in ids)
-                out["src_seg"].extend([int(src)] * len(ids))
-                if pd_ is None:
-                    out["positions"].extend([None] * len(ids))
-                else:
-                    out["positions"].extend(
-                        [p.tolist() for p in decode_positions(
-                            bytes(pd_), len(ids))])
-            yield pd.DataFrame(out)
 
     def reencode(batches):
         import pandas as pd
@@ -626,73 +590,27 @@ def compact(
             rows = {k.name: [] for k in CHUNKS_SCHEMA.fields}
             g = g.sort_values(["term", "doc_id"])
             for term, tg in g.groupby("term", sort=True):
-                ids = tg["doc_id"].to_numpy(dtype=np.int64)
-                w = tg["wdf"].to_numpy(dtype=np.int64)
-                dl = tg["doclen"].to_numpy(dtype=np.int64)
                 plists = list(tg["positions"])
-                has_pos = term and any(p is not None for p in plists)
-                pos = 0
-                for c in encode_chunks(ids, w, dl, target_bytes):
-                    rows["term"].append(term)
-                    rows["seg_id"].append(int(seg))
-                    rows["first_doc_id"].append(c.first_doc_id)
-                    rows["last_doc_id"].append(c.last_doc_id)
-                    rows["n"].append(c.n)
-                    rows["cf"].append(
-                        int(w[pos: pos + c.n].sum()) if term
-                        else int(dl[pos: pos + c.n].sum()))
-                    rows["max_wdf"].append(c.max_wdf)
-                    rows["min_doclen"].append(c.min_doclen)
-                    rows["data"].append(c.data)
-                    rows["pos_data"].append(
-                        encode_positions(plists[pos: pos + c.n])
-                        if has_pos else None)
-                    pos += c.n
+                has_pos = any(p is not None for p in plists)
+                _encode_term(rows, term, int(seg),
+                             tg["doc_id"].to_numpy(dtype=np.int64),
+                             tg["wdf"].to_numpy(dtype=np.int64),
+                             tg["doclen"].to_numpy(dtype=np.int64),
+                             plists if has_pos else None, target_bytes)
             yield pd.DataFrame(rows)
 
-    import time as _time
-
-    t0 = _time.time()
-    exploded = index.chunks.select("term", "seg_id", "data", "pos_data") \
-        .mapInPandas(explode, rows_schema)
-    # purge tombstoned postings: compact is where deletes are
+    t0 = time.time()
+    # _decode drops tombstoned postings: compact is where deletes are
     # physically reclaimed (brass_compact's role for changesets)
-    tomb = index.tombstones()
-    if tomb is not None:
-        t = F.broadcast(tomb.select(
-            F.col("doc_id").alias("_t_doc"),
-            F.col("before_seg").alias("_t_seg")))
-        exploded = exploded.join(
-            t, (exploded["doc_id"] == t["_t_doc"])
-            & (exploded["src_seg"] <= t["_t_seg"]), "left_anti")
-    exploded = exploded.drop("src_seg")
-    (exploded
+    (index._decode(index.chunks)
+     .withColumn("seg_id", _segment_of(F.col("doc_id"), n_segments))
      .repartitionByRange(n_segments, "seg_id")
      .mapInPandas(reencode, CHUNKS_SCHEMA)
      .write.mode("overwrite").partitionBy("seg_id")
      .parquet(f"{out_path}/chunks"))
-    build_sec = _time.time() - t0
-
-    built = spark.read.parquet(f"{out_path}/chunks")
-    man = (
-        built.groupBy("seg_id").agg(
-            F.sum(F.when(F.col("term") == DOCLEN_TERM, F.col("n"))
-                  .otherwise(0)).cast("long").alias("n_docs"),
-            F.sum(F.when(F.col("term") != DOCLEN_TERM, F.col("n"))
-                  .otherwise(0)).cast("long").alias("n_postings"),
-            F.count(F.lit(1)).cast("long").alias("n_chunks"),
-            F.count_distinct(
-                F.when(F.col("term") != DOCLEN_TERM, F.col("term"))
-            ).cast("long").alias("n_terms"),
-            F.sum(F.length("data")).cast("long").alias("bytes"),
-            (F.sum(F.crc32("data")) % F.lit(2**63 - 1))
-            .cast("long").alias("checksum"),
-        )
-        .withColumn("build_sec", F.lit(float(build_sec)))
-        .withColumn("input_desc", F.lit(f"compact of {index.path}"))
-        .select([f.name for f in MANIFEST_SCHEMA.fields])
-    )
-    man.write.mode("overwrite").parquet(f"{out_path}/manifest")
+    _write_manifest(spark.read.parquet(f"{out_path}/chunks"), out_path,
+                    time.time() - t0, f"compact of {index.path}",
+                    "overwrite")
     # preserve user metadata across compaction, as the reference's
     # Compactor does (api/compactor.cc:175 resolve_duplicate_metadata):
     # keep each key's latest-revision value, drop deleted (empty) keys,
@@ -750,9 +668,7 @@ def build_segments(
         _stamp_format(spark, path)
     if not n_segments:
         n_segments = max(docs.rdd.getNumPartitions(), 1)
-    fn = SEG_ANALYZERS.get(analyzer, analyzer)
-    if not callable(fn):
-        raise ValueError(f"unknown analyzer: {analyzer!r}")
+    fn = resolve_analyzer(analyzer)
 
     done: set = set()
     if resume:
@@ -772,9 +688,8 @@ def build_segments(
 
     tagged = docs.select(
         F.col(id_col).cast("long").alias(id_col), text_col,
-        (F.lit(seg_id_offset)
-         + F.pmod(F.col(id_col).cast("long") - 1, F.lit(n_segments)))
-        .cast("int").alias("seg_id"),
+        _segment_of(F.col(id_col), n_segments, seg_id_offset)
+        .alias("seg_id"),
     )
     todo = tagged.filter(~F.col("seg_id").isin(list(done))) if done \
         else tagged
@@ -815,32 +730,12 @@ def build_segments(
         _write_dynamic_overwrite(chunk_df, f"{path}/chunks", "seg_id")
         build_sec = time.time() - t0
 
-        # manifest rows for the newly built segments (lineage + metrics)
+        # manifest rows for the newly built segments
         built = spark.read.parquet(f"{path}/chunks")
         if done:
             built = built.filter(~F.col("seg_id").isin(list(done)))
-        man = (
-            built.groupBy("seg_id").agg(
-                F.sum(F.when(F.col("term") == DOCLEN_TERM, F.col("n"))
-                      .otherwise(0)).cast("long").alias("n_docs"),
-                F.sum(F.when(F.col("term") != DOCLEN_TERM, F.col("n"))
-                      .otherwise(0)).cast("long").alias("n_postings"),
-                F.count(F.lit(1)).cast("long").alias("n_chunks"),
-                F.count_distinct(
-                    F.when(F.col("term") != DOCLEN_TERM, F.col("term"))
-                ).cast("long").alias("n_terms"),
-                F.sum(F.length("data")).cast("long").alias("bytes"),
-                # order-independent checksum: Σ crc32(data) — stable
-                # across shuffles and engines
-                (F.sum(F.crc32("data")) % F.lit(2**63 - 1))
-                .cast("long").alias("checksum"),
-            )
-            .withColumn("build_sec", F.lit(float(build_sec)))
-            .withColumn("input_desc",
-                        F.lit(input_desc or "unspecified"))
-            .select([f.name for f in MANIFEST_SCHEMA.fields])
-        )
-        man.write.mode("append").parquet(f"{path}/manifest")
+        _write_manifest(built, path, build_sec,
+                        input_desc or "unspecified", "append")
 
     return SegmentIndex(spark, path)
 
@@ -865,8 +760,6 @@ def delete_documents(index: SegmentIndex, doc_ids: Iterable[int]
 
     Returns a fresh SegmentIndex view of the same path.
     """
-    from xapian_spark.index.codec import decode_chunk
-
     spark = index.spark
     ids = sorted({int(d) for d in doc_ids})
     cur_max = index.chunks.agg(F.max("seg_id")).head()[0]

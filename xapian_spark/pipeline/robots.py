@@ -5,8 +5,9 @@ exclusions; retroactive compliance filtering (drop pages a site's
 robots.txt disallows) is a standard curation step. This module
 implements the RFC 9309 matching model:
 
-- group selection: the record group whose User-agent matches the
-  product token (case-insensitive, exact), else the ``*`` group;
+- group selection: every record group whose User-agent matches the
+  product token (case-insensitive, exact), else every ``*`` group —
+  the selected groups' rules merge into one;
 - rule matching on the URL path (+query) with ``*`` wildcards and
   the ``$`` end anchor;
 - the LONGEST matching pattern wins; on a tie, Allow wins;
@@ -38,9 +39,10 @@ from xapian_spark.pipeline.urls import _RFC3986, host_expr
 
 def parse_robots(text: str, user_agent: str = "*"
                  ) -> List[Tuple[bool, str]]:
-    """robots.txt body → [(allow, pattern)] for the best-matching
-    agent group (RFC 9309 §2.2.1: exact product-token match wins
-    over the ``*`` group; multiple User-agent lines share a group)."""
+    """robots.txt body → [(allow, pattern)] for the matching agent
+    groups (RFC 9309 §2.2.1: exact product-token groups win over the
+    ``*`` groups; multiple User-agent lines share a group; every
+    matching group's rules merge into one)."""
     groups: List[Tuple[List[str], List[Tuple[bool, str]]]] = []
     agents: List[str] = []
     rules: List[Tuple[bool, str]] = []
@@ -67,12 +69,10 @@ def parse_robots(text: str, user_agent: str = "*"
     if agents or rules:
         groups.append((agents, rules))
     ua = user_agent.lower()
-    for ags, rs in groups:
-        if ua != "*" and ua in ags:
-            return rs
-    for ags, rs in groups:
-        if "*" in ags:
-            return rs
+    for token in ([ua] if ua != "*" else []) + ["*"]:
+        hits = [rs for ags, rs in groups if token in ags]
+        if hits:
+            return [r for rs in hits for r in rs]
     return []
 
 

@@ -39,6 +39,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from xapian_spark.index.codec import decode_chunk
 from xapian_spark.index.segments import SegmentIndex
 from xapian_spark.query.bm25 import BM25Weight
 
@@ -100,8 +101,6 @@ class _TermCursor:
         """(doc_ids, parts). With keep_docs (sorted), decodes only
         chunks whose docid range contains a kept doc (block skipping),
         then filters rows to kept docs."""
-        from xapian_spark.index.codec import decode_chunk
-
         ids_l: List[np.ndarray] = []
         w_l: List[np.ndarray] = []
         dl_l: List[np.ndarray] = []
@@ -110,13 +109,9 @@ class _TermCursor:
                 lo = np.searchsorted(keep_docs, self.firsts[i], "left")
                 if lo >= keep_docs.size or keep_docs[lo] > self.lasts[i]:
                     continue  # no candidate falls in this chunk's range
-            ids, wdf, dl = decode_chunk(self.datas[i])
-            if self.dead is not None:
-                m = ~_member_sorted(ids, self.dead)
-                if not m.all():
-                    ids, wdf, dl = ids[m], wdf[m], dl[m]
-                if ids.size == 0:
-                    continue
+            ids, wdf, dl = _decode_live(self.datas[i], self.dead)
+            if ids.size == 0:
+                continue
             if keep_docs is not None:
                 m = _member_sorted(ids, keep_docs)
                 if not m.any():
@@ -142,6 +137,28 @@ def _member_sorted(ids: np.ndarray, keep_sorted: np.ndarray
     m = idx < keep_sorted.size
     m[m] = keep_sorted[idx[m]] == ids[m]
     return m
+
+
+def _segment_dead(dead, pdf) -> Optional[np.ndarray]:
+    """Sorted docids tombstoned in the segment of one kernel group
+    (`dead` is SegmentIndex._dead_arrays()), or None when none are."""
+    if dead is None or not len(pdf):
+        return None
+    ids, before = dead
+    seg_dead = ids[before >= int(pdf["seg_id"].iloc[0])]
+    return seg_dead if seg_dead.size else None
+
+
+def _decode_live(data: bytes, seg_dead: Optional[np.ndarray]
+                 ) -> Tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """decode_chunk minus the segment's tombstoned docids — the one
+    tombstone-aware decode both kernels use."""
+    ids, wdf, dl = decode_chunk(data)
+    if seg_dead is not None:
+        m = ~_member_sorted(ids, seg_dead)
+        if not m.all():
+            ids, wdf, dl = ids[m], wdf[m], dl[m]
+    return ids, wdf, dl
 
 
 def _segment_topk(
@@ -294,13 +311,7 @@ class WandEnquire:
         def kernel(pdf):
             import pandas as pd
 
-            seg_dead = None
-            if dead is not None and len(pdf):
-                seg = int(pdf["seg_id"].iloc[0])
-                ids_, before = dead
-                seg_dead = ids_[before >= seg]  # tombstoned in this seg
-                if seg_dead.size == 0:
-                    seg_dead = None
+            seg_dead = _segment_dead(dead, pdf)
             cursors = []
             for t, g in pdf.groupby("term"):
                 cursors.append(_TermCursor(
@@ -395,24 +406,12 @@ class WandEnquire:
         def kernel(pdf):
             import pandas as pd
 
-            from xapian_spark.index.codec import decode_chunk
-
-            seg_dead = None
-            if dead is not None and len(pdf):
-                seg = int(pdf["seg_id"].iloc[0])
-                ids_, before = dead
-                seg_dead = ids_[before >= seg]
-                if seg_dead.size == 0:
-                    seg_dead = None
+            seg_dead = _segment_dead(dead, pdf)
             decoded = {}
             for t, g in pdf.groupby("term"):
                 ids_l, w_l, dl_l = [], [], []
                 for data in g["data"]:
-                    ids, wdf, dl = decode_chunk(data)
-                    if seg_dead is not None:
-                        m = ~_member_sorted(ids, seg_dead)
-                        if not m.all():
-                            ids, wdf, dl = ids[m], wdf[m], dl[m]
+                    ids, wdf, dl = _decode_live(data, seg_dead)
                     if ids.size:
                         ids_l.append(ids)
                         w_l.append(wdf)
