@@ -98,13 +98,14 @@ def main() -> None:
     enq.get_mset(ops.Wildcard("wind"), 0, 10).collect()
     timings["wildcard"] = time.perf_counter() - t0
 
-    # batch serving workload: 100 queries in ONE job (wand_batch_100
-    # below) — the per-query Spark job overhead that dominates the
-    # single-query lines above amortizes across the workload
+    # batch serving workload: 100 queries per get_mset_batch
+    # (wand_batch_100 below) — the per-query Spark job overhead that
+    # dominates the single-query lines above amortizes across the
+    # workload
     term_dict = sorted(t for t in (enq._full_term_dict() or {})
                        if t.startswith("Z"))
     if not term_dict:
-        # _full_term_dict returns {} past TERM_DICT_CACHE_MAX — fall
+        # _full_term_dict returns None past TERM_DICT_CACHE_MAX — fall
         # back to the top Z-prefixed terms from the term_stats table
         # so the batch line still runs (and never divides by zero)
         term_dict = [r["term"] for r in

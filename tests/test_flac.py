@@ -7,7 +7,8 @@ import numpy as np
 import pytest
 
 from xapian_spark.pipeline.flac import (
-    _BitW, _crc8, _crc16, decode_flac, encode_flac, is_flac,
+    _Bits, _BitW, _crc8, _crc16, _utf8_encode, _utf8_number, decode_flac,
+    encode_flac, is_flac,
 )
 
 
@@ -45,6 +46,15 @@ def test_edge_sizes_and_extremes():
     s = np.array([32767, -32768] * 3000, dtype="<i2")
     assert decode_flac(encode_flac(8000, 2, s.tobytes()))[2] \
         == s.tobytes()
+
+
+@pytest.mark.parametrize("n", [127, 128, 2047, 2048, 65535, 65536])
+def test_utf8_number_roundtrip_at_form_boundaries(n):
+    # each k-byte form holds 5k+1 bits; 2048 needs the 3-byte form
+    # (the 2-byte encoding would be the malformed e0 80)
+    enc = _utf8_encode(n)
+    assert _utf8_number(_Bits(enc)) == n
+    assert len(enc) == 1 + (n >= 128) + (n >= 2048) + (n >= 65536)
 
 
 def test_truncation_and_bitflip_raise():

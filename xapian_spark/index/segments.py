@@ -40,6 +40,7 @@ metadata-only aggregation over chunk rows.
 from __future__ import annotations
 
 import time
+from functools import cached_property
 from typing import Callable, Iterable, Optional
 
 import numpy as np
@@ -56,6 +57,9 @@ from xapian_spark.index.build import analyze_document, resolve_analyzer
 from xapian_spark.index.codec import (
     CHUNK_TARGET_BYTES, CODEC_VERSION, decode_chunk, decode_positions,
     encode_chunks, encode_positions,
+)
+from xapian_spark.index.termdict import (
+    TermFreqs, collect_term_dict, term_freqs,
 )
 
 DOCLEN_TERM = ""  # reserved pseudo-term: chunks hold (doc_id, doclen, doclen)
@@ -426,6 +430,16 @@ class SegmentIndex:
             self._term_stats = ts.persist()
         return self._term_stats
 
+    @cached_property
+    def _term_dict(self) -> Optional[TermFreqs]:
+        return collect_term_dict(self.term_stats())
+
+    def term_freqs(self, terms: Iterable[str]) -> TermFreqs:
+        """term → (tf, cf) for the indexed terms among `terms`, from the
+        driver-side term dictionary collected once per SegmentIndex —
+        no Spark job per query below TERM_DICT_CACHE_MAX terms."""
+        return term_freqs(self.term_stats(), self._term_dict, terms)
+
     def stats(self):
         from xapian_spark.index.build import IndexStats
 
@@ -435,7 +449,9 @@ class SegmentIndex:
                 F.coalesce(F.sum("cf"), F.lit(0)).alias("total_doclen"),
                 F.coalesce(F.min("min_doclen"), F.lit(0)).alias("dl_lb"),
                 F.coalesce(F.max("max_wdf"), F.lit(0)).alias("dl_ub"),
+                F.coalesce(F.max("seg_id") + 1, F.lit(0)).alias("seg_span"),
             ).head()
+            self._seg_span = row.seg_span
             doccount, total_doclen = row.doccount, row.total_doclen
             d = self._deltas()
             if d is not None:
@@ -451,6 +467,13 @@ class SegmentIndex:
             self._stats = IndexStats(
                 doccount, total_doclen, row.dl_lb, row.dl_ub, wdf_ub)
         return self._stats
+
+    def _segment_span(self) -> int:
+        """max(seg_id) + 1: the segment count when seg_ids are
+        contiguous from 0, as build, replace and compact leave them
+        (cached with stats(), so no extra job)."""
+        self.stats()
+        return self._seg_span
 
     def manifest(self) -> DataFrame:
         return self.spark.read.parquet(f"{self.path}/manifest")

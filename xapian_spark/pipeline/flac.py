@@ -386,10 +386,8 @@ def _utf8_encode(n: int) -> bytes:
         return bytes([n])
     out = []
     nbytes = 2
-    while n >= (1 << (5 * nbytes + (7 - nbytes) - 1)) and nbytes < 7:
-        # max payload for k-byte form: (7-k) + 6*(k-1) bits
-        if n < (1 << ((7 - nbytes) + 6 * (nbytes - 1))):
-            break
+    # the k-byte form carries (7-k) + 6*(k-1) = 5k+1 payload bits
+    while n >= 1 << (5 * nbytes + 1):
         nbytes += 1
     payload = [(n >> (6 * i)) & 0x3F for i in range(nbytes - 1)]
     lead_bits = 7 - nbytes

@@ -29,12 +29,16 @@ Terms is evaluated with ONE postings scan (term IN (...)) + one shuffle
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import cached_property
 from typing import Dict, List, Optional, Tuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from xapian_spark.index.build import InvertedIndex
+from xapian_spark.index.termdict import (
+    TermFreqs, collect_term_dict, term_freqs,
+)
 from xapian_spark.query import ops
 from xapian_spark.query.bm25 import BM25Weight
 
@@ -54,50 +58,26 @@ class _QueryStats:
 class Enquire:
     """Xapian::Enquire analog: holds an index + weight, answers queries."""
 
-    # cache the whole term dictionary driver-side when it's below this
-    # many entries (per-query stats gathering then costs zero jobs);
-    # above it, fall back to a per-query filtered collect — the same
-    # tiny aggregation the reference does per query (multimatch.cc
-    # prepare_sub_matches)
-    TERM_DICT_CACHE_MAX = 2_000_000
-
     def __init__(self, index: InvertedIndex, weight: Optional[BM25Weight] = None):
         self.index = index
         self.weight = weight or BM25Weight()
-        self._term_dict: Optional[Dict[str, Tuple[int, int]]] = None
 
     # ------------------------------------------------------------------
 
-    def _full_term_dict(self) -> Optional[Dict[str, Tuple[int, int]]]:
-        if self._term_dict is None:
-            # ONE job: collect capped at CACHE_MAX+1 rows (the limit is
-            # pushed into the scan, so an over-budget web-scale term
-            # dictionary stops after CACHE_MAX+1 rows instead of being
-            # counted in full and then collected in a second job)
-            rows = self.index.term_stats.limit(
-                self.TERM_DICT_CACHE_MAX + 1).collect()
-            if len(rows) > self.TERM_DICT_CACHE_MAX:
-                self._term_dict = {}
-            else:
-                self._term_dict = {
-                    r["term"]: (r["tf"], r["cf"]) for r in rows
-                }
-        return self._term_dict if self._term_dict else None
+    @cached_property
+    def _term_dict(self) -> Optional[TermFreqs]:
+        return collect_term_dict(self.index.term_stats)
+
+    def _full_term_dict(self) -> Optional[TermFreqs]:
+        """The whole term dictionary, collected once per Enquire; None
+        past termdict.TERM_DICT_CACHE_MAX (stats gathering then runs
+        one filtered collect per query)."""
+        return self._term_dict
 
     def _gather_stats(self, terms: List[str]) -> _QueryStats:
         st = self.index.stats
-        tfs: Dict[str, Tuple[int, int]] = {}
-        if terms:
-            full = self._full_term_dict()
-            if full is not None:
-                tfs = {t: full[t] for t in set(terms) if t in full}
-            else:
-                rows = (
-                    self.index.term_stats
-                    .filter(F.col("term").isin(list(set(terms))))
-                    .collect()
-                )
-                tfs = {r["term"]: (r["tf"], r["cf"]) for r in rows}
+        tfs = term_freqs(self.index.term_stats, self._full_term_dict(),
+                         terms) if terms else {}
         return _QueryStats(
             termfreqs=tfs,
             collection_size=st.doccount,

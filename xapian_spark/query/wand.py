@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 
 from xapian_spark.index.codec import decode_chunk
 from xapian_spark.index.segments import SegmentIndex
+from xapian_spark.index.termdict import term_in
 from xapian_spark.query.bm25 import BM25Weight
 
 
@@ -264,10 +265,41 @@ def _take_topk(docs: np.ndarray, scores: np.ndarray, k: int
     return docs[order], scores[order]
 
 
+def _per_segment(index: SegmentIndex, chunk_rows: DataFrame, kernel,
+                 schema: str) -> DataFrame:
+    """kernel(pdf) → pandas rows, run once per segment over that
+    segment's chunk rows: one task per segment, up to the session's
+    parallelism (seg_ids past it share a task, modulo the partition
+    count).
+
+    The build's shape, not groupBy(seg_id).applyInPandas: AQE coalesces
+    that small shuffle into ONE partition, which scores every segment
+    one after another in a single task. An explicit-count
+    repartitionById is not coalesced, and routes each row by its seg_id
+    directly, so unlike repartitionByRange it needs no sampling job."""
+    n = max(1, min(index._segment_span(),
+                   index.spark.sparkContext.defaultParallelism))
+
+    def gen(batches):
+        import pandas as pd
+
+        parts = [b for b in batches if len(b)]
+        if not parts:
+            return
+        pdf = pd.concat(parts, ignore_index=True)
+        for _seg, g in pdf.groupby("seg_id", sort=True):
+            yield kernel(g)
+
+    return chunk_rows.repartitionById(n, "seg_id").mapInPandas(gen, schema)
+
+
 class WandEnquire:
     """Enquire over a SegmentIndex: flat OR/AND term queries via the
-    block-max kernel. One narrow job: chunk rows → per-segment kernel →
-    global top-k. No shuffle of postings."""
+    block-max kernel. Term statistics come from the index's cached
+    driver-side dictionary (no job to plan); chunk rows of the query
+    terms shuffle to one task per segment, and the per-segment top-k
+    merge to the global top-k. Postings are never decoded before the
+    kernel, so only compressed chunks cross the shuffle."""
 
     def __init__(self, index: SegmentIndex,
                  weight: Optional[BM25Weight] = None):
@@ -281,16 +313,14 @@ class WandEnquire:
         terms = list(dict.fromkeys(terms))  # dedupe, keep order
         wqf = wqf or {}
         st = self.index.stats()
-        rows = (self.index.term_stats()
-                .filter(F.col("term").isin(terms)).collect())
-        tfs = {r["term"]: r["tf"] for r in rows}
-        present = [t for t in terms if tfs.get(t)]
+        tfs = self.index.term_freqs(terms)
+        present = [t for t in terms if t in tfs]
         if (not present) or (op == "and" and len(present) < len(terms)):
             return spark.createDataFrame([], "doc_id long, score double")
 
         lf = self.weight.len_factor(st.average_length)
         tws = {
-            t: self.weight.termweight(tfs[t], st.doccount,
+            t: self.weight.termweight(tfs[t][0], st.doccount,
                                       wqf.get(t, 1))
             for t in present
         }
@@ -301,7 +331,7 @@ class WandEnquire:
 
         chunk_rows = (
             self.index.postings_chunks
-            .filter(F.col("term").isin(present))
+            .filter(term_in(present))
             .select("term", "seg_id", "first_doc_id", "last_doc_id",
                     "max_wdf", "min_doclen", "data")
         )
@@ -327,8 +357,7 @@ class WandEnquire:
                                          n_query_terms)
             return pd.DataFrame({"doc_id": docs, "score": scores})
 
-        per_seg = chunk_rows.groupBy("seg_id").applyInPandas(
-            kernel, out_schema)
+        per_seg = _per_segment(self.index, chunk_rows, kernel, out_schema)
         return (per_seg
                 .orderBy(F.desc("score"), F.asc("doc_id"))
                 .limit(k))
@@ -338,7 +367,7 @@ class WandEnquire:
                        ops_by_id: Optional[Dict[str, str]] = None
                        ) -> DataFrame:
         """Batch serving over the chunk-encoded index: a whole query
-        workload in ONE job.
+        workload in one plan, answered by one task per segment.
 
         queries: iterable of (query_id, [term, ...]) — duplicate terms
         merge into wqf; per-query OP_AND via ops_by_id.  Returns
@@ -352,8 +381,10 @@ class WandEnquire:
         segment (term-pruned to the workload's union), then scores
         every query vectorized against the decoded arrays.  Decode
         amortization beats per-query block skipping as soon as terms
-        are shared; the postings still never shuffle (per-segment
-        kernel + a tiny per-(segment,query) top-k merge)."""
+        are shared.  Only compressed chunk rows shuffle (to their
+        segment's task) and only per-(segment, query) top-k rows reach
+        the merge; planning runs no Spark job once the index's term
+        dictionary is cached."""
         from pyspark.sql import Window
 
         spark = self.index.spark
@@ -371,10 +402,7 @@ class WandEnquire:
             union_terms |= set(wqf)
 
         st = self.index.stats()
-        rows = (self.index.term_stats()
-                .filter(F.col("term").isin(sorted(union_terms)))
-                .collect())
-        tfs = {r["term"]: r["tf"] for r in rows}
+        tfs = self.index.term_freqs(union_terms)
         lf = self.weight.len_factor(st.average_length)
 
         # per-query plan: (qid, {term: termweight}, n_terms, is_and);
@@ -383,8 +411,8 @@ class WandEnquire:
         plan = []
         for qid, wqf, is_and in workload:
             tws_q = {
-                t: self.weight.termweight(tfs[t], st.doccount, w)
-                for t, w in wqf.items() if tfs.get(t)
+                t: self.weight.termweight(tfs[t][0], st.doccount, w)
+                for t, w in wqf.items() if t in tfs
             }
             if tws_q and not (is_and and len(tws_q) < len(wqf)):
                 plan.append((qid, tws_q, len(tws_q), is_and))
@@ -393,13 +421,13 @@ class WandEnquire:
             return spark.createDataFrame(
                 [], "query_id string, rank int, doc_id long, score double")
 
-        needed = sorted({t for _q, tws_q, _n, _a in plan for t in tws_q})
+        needed = {t for _q, tws_q, _n, _a in plan for t in tws_q}
         weight = self.weight
         k = maxitems
         dead = self.index._dead_arrays()
         chunk_rows = (
             self.index.postings_chunks
-            .filter(F.col("term").isin(needed))
+            .filter(term_in(needed))
             .select("term", "seg_id", "data")
         )
 
@@ -452,8 +480,7 @@ class WandEnquire:
                 else np.empty(0, dtype=np.float64),
             })
 
-        per_seg = chunk_rows.groupBy("seg_id").applyInPandas(
-            kernel, out_schema)
+        per_seg = _per_segment(self.index, chunk_rows, kernel, out_schema)
         win = (Window.partitionBy("query_id")
                .orderBy(F.col("score").desc(), F.col("doc_id").asc()))
         return (per_seg
