@@ -198,3 +198,25 @@ def test_tombstone_queue_bound_enforced(spark, corpus, tmp_path):
     seg.MAX_TOMBSTONES = 3
     compacted = compact(seg, str(tmp_path / "bound_c"))
     WandEnquire(compacted).get_mset(["the"], 5, op="or").collect()
+
+
+def test_dead_arrays_cached_per_view(spark, corpus, tmp_path):
+    # the tombstone arrays WAND reads are collected once per index view:
+    # a second call on a post-delete view runs no Spark job, and the
+    # next delete's view sees the new tombstones
+    seg = build_segments(corpus, str(tmp_path / "dead"), n_segments=2,
+                         analyzer="simple")
+    seg = delete_documents(seg, [7, 3])
+    first = seg._dead_arrays()
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    try:
+        sc.setJobGroup("dead-warm", "second _dead_arrays call")
+        second = seg._dead_arrays()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(tracker.getJobIdsForGroup("dead-warm")) == []
+    assert second is first
+    assert list(first[0]) == [3, 7]
+    seg = delete_documents(seg, [5])
+    assert list(seg._dead_arrays()[0]) == [3, 5, 7]

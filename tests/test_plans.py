@@ -10,6 +10,8 @@
 - single-term scoring is shuffle-free (no Exchange before the top-k)
 """
 
+import threading
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -118,6 +120,61 @@ def test_percent_flat_path_has_no_join(spark):
     stats = enq._gather_stats(list(q.terms()))
     flat = enq._compile_flat(q, stats, 1.0, keep_n=True)
     assert "Join" not in _plan(flat)
+
+
+def _py4j_calls(spark, plan):
+    """(plan(), the py4j round trips it made): every gateway command
+    goes through the shared client's send_command. py4j's finalizer
+    thread releases dead Java references through it too, so only the
+    calling thread's commands count."""
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    me = threading.get_ident()
+    calls = []
+
+    def counting(*args, **kwargs):
+        if threading.get_ident() == me:
+            calls.append(1)
+        return send(*args, **kwargs)
+
+    client.send_command = counting
+    try:
+        out = plan()
+    finally:
+        client.send_command = send
+    return out, len(calls)
+
+
+def test_get_mset_plans_with_constant_py4j_calls(spark, disk_index):
+    # a flat query is planned as ONE SQL statement: the py4j round
+    # trips per get_mset do not grow with the number of terms (a Column
+    # tree costs one per literal and operator: 300-600 per query)
+    enq = Enquire(disk_index)
+    top = [r["term"] for r in disk_index.term_stats.orderBy(
+        F.desc("tf"), "term").limit(12).collect()]
+    a, b = top[0], top[1]
+    enq.get_mset(ops.Term(a), 0, 10)  # term dict + postings view
+    shapes = {
+        "term": ops.Term(a),
+        "or": ops.Or([ops.Term(t) for t in top[:3]]),
+        "and": ops.And([ops.Term(a), ops.Term(b)]),
+        "phrase": ops.Phrase([a, b]),
+        "or2": ops.Or([ops.Term(t) for t in top[:2]]),
+        "or12": ops.Or([ops.Term(t) for t in top]),
+    }
+    plans, calls = [], {}
+    for name, q in shapes.items():
+        df, calls[name] = _py4j_calls(
+            spark, lambda: enq.get_mset(q, 0, 10))
+        plans.append(df)  # kept alive: no release inside a later count
+    assert calls["term"] <= 60, calls
+    assert calls["or"] <= 60, calls
+    assert calls["and"] <= 60, calls
+    assert calls["phrase"] <= 100, calls
+    assert calls["or2"] == calls["or"] == calls["or12"], calls
+    # and the flat plan is still a bounded top-k over one aggregation
+    assert "TakeOrderedAndProject" in _plan(plans[1])
+    assert "Join" not in _plan(plans[1])
 
 
 def test_synonym_scalar_is_broadcast(spark):

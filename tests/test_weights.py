@@ -140,3 +140,55 @@ def test_bernoulli_family_run(simpledata_index):
         ws = [r["score"] for r in rows]
         assert ws == sorted(ws, reverse=True)
         assert all(w == w for w in ws)  # no NaN
+
+
+# -- the SQL renderings the executor plans with == their scalar twins -----
+
+from hypothesis import HealthCheck, given, settings  # noqa: E402
+from hypothesis import strategies as st  # noqa: E402
+
+
+def _nonneg(hi):
+    return st.floats(min_value=0.0, max_value=hi, allow_nan=False,
+                     allow_infinity=False)
+
+
+_param = st.one_of(_nonneg(10.0), _nonneg(1e300))
+_weights = st.builds(BM25Weight, k1=_param, k2=_param, k3=_param,
+                     b=_nonneg(1.0), min_normlen=_param)
+
+
+@given(w=_weights, lf=_param, n_docs=st.integers(1, 2 ** 53),
+       wqf=st.integers(1, 1000), factor=_param,
+       qlen=st.integers(1, 1000), data=st.data())
+@settings(max_examples=25, deadline=None,
+          suppress_health_check=[HealthCheck.too_slow])
+def test_bm25_sql_is_bit_identical_to_scalar(spark, w, lf, n_docs, wqf,
+                                             factor, qlen, data):
+    rows = data.draw(st.lists(st.tuples(
+        st.floats(allow_nan=False, allow_infinity=False),   # tw
+        st.integers(1, 2 ** 31 - 1),                        # wdf
+        st.integers(0, 2 ** 53),                            # doclen
+        st.integers(1, n_docs),                             # tf
+    ), min_size=1, max_size=20))
+    # the argument termweight() takes the log of, per row
+    args = []
+    for _tw, _wdf, _dl, tf in rows:
+        w.termweight(tf, n_docs, wqf, factor,
+                     log=lambda x: args.append(x) or 0.0)
+    df = spark.createDataFrame(
+        [r + (x,) for r, x in zip(rows, args)],
+        "tw double, wdf int, doclen long, tf long, x double")
+    got = df.selectExpr(
+        f"{w.sumpart_sql('tw', 'wdf', 'doclen', lf)} AS sumpart",
+        f"{w.sumextra_sql('doclen', lf, qlen)} AS sumextra",
+        f"{w.termweight_sql('tf', n_docs, wqf, factor)} AS termweight",
+        "ln(x) AS ln_x").collect()
+    for (tw, wdf, dl, tf), x, r in zip(rows, args, got):
+        assert r["sumpart"].hex() == w.sumpart(tw, wdf, dl, lf).hex()
+        assert r["sumextra"].hex() == w.sumextra(dl, lf, qlen).hex()
+        # Spark's ln and libm's log differ in the last bit for a few
+        # percent of arguments; every other operation must match
+        spark_ln = {x: r["ln_x"]}.__getitem__
+        want = w.termweight(tf, n_docs, wqf, factor, log=spark_ln)
+        assert r["termweight"].hex() == want.hex()

@@ -4,11 +4,17 @@ compare row count, column names, and order-insensitive values. An
 oracle_sql() key with no queries() entry is dead oracle SQL and also
 FAILs. Spark runs at local[<CPUs this process may use>].
 
-Usage: python tools/check_oracle.py [query ...]
+Usage: python tools/check_oracle.py [--dump PATH] [query ...]
+
+--dump PATH also writes every entry's raw Spark rows to PATH, one JSON
+line per entry, with floats as float.hex() and rows sorted, so exact
+score identity between two commits is a file diff. The oracle
+comparison itself still rounds floats to 6 digits.
 """
 
 from __future__ import annotations
 
+import json
 import math
 import os
 import sys
@@ -37,13 +43,42 @@ def canon(rows, cols):
     return out
 
 
+def exact(v):
+    """A value with every float as float.hex(), JSON-ready."""
+    if isinstance(v, float):
+        return v.hex()
+    if hasattr(v, "asDict"):
+        return exact(v.asDict(recursive=True))
+    if isinstance(v, dict):
+        return {str(k): exact(x) for k, x in sorted(v.items(), key=repr)}
+    if isinstance(v, (list, tuple)):
+        return [exact(x) for x in v]
+    if isinstance(v, (bytes, bytearray)):
+        return v.hex()
+    if v is None or isinstance(v, (bool, int, str)):
+        return v
+    return str(v)
+
+
+def dump_line(name, cols, rows) -> str:
+    body = sorted(json.dumps([exact(r[c]) for c in cols]) for r in rows)
+    return json.dumps({"name": name, "columns": cols,
+                       "rows": [json.loads(b) for b in body]})
+
+
 def main():
     import duckdb
     from pyspark.sql import SparkSession
 
     import __spark_entry__ as e
 
-    only = set(sys.argv[1:])
+    args = sys.argv[1:]
+    dump = None
+    if "--dump" in args:
+        i = args.index("--dump")
+        dump = open(args[i + 1], "w")
+        del args[i:i + 2]
+    only = set(args)
     spark = (
         SparkSession.builder
         .master(f"local[{len(os.sched_getaffinity(0))}]")
@@ -77,6 +112,8 @@ def main():
             print(f"FAIL {name}: spark error: {ex}")
             n_fail += 1
             continue
+        if dump:
+            print(dump_line(name, scols, srows), file=dump, flush=True)
         if name not in oracles:
             print(f"WEAK {name}: rows-only ({len(srows)} rows)")
             n_weak += 1
@@ -110,6 +147,8 @@ def main():
         print(f"PASS {name} ({len(srows)} rows)")
         n_pass += 1
     print(f"\n{n_pass} pass, {n_fail} fail, {n_weak} rows-only")
+    if dump:
+        dump.close()
     spark.stop()
     return 1 if n_fail else 0
 

@@ -32,9 +32,14 @@ Design (SURVEY §4.3 / §7):
   already recorded in the manifest (checkpointed segment manifests —
   the analog of revisioned B-trees + changesets, brass_version.cc).
 
-ONE wide op builds the whole index: groupBy(seg_id).applyInPandas.
+One wide op inverts the whole index: groupBy(seg_id).applyInPandas.
 Everything downstream (term stats, global stats, manifest metrics) is
-metadata-only aggregation over chunk rows.
+metadata-only aggregation over chunk rows. Measured end to end
+(perfbench --trace 1, local[4], 400 docs, 4 segments), a fresh build
+runs 11 Spark jobs: the format.json stamp, the chunks write and six
+adaptive query stages around it, the manifest write, and
+SegmentIndex's read-back of format.json (schema inference, then head).
+The first term_stats() adds 4 more.
 """
 
 from __future__ import annotations
@@ -371,7 +376,13 @@ class SegmentIndex:
         """Driver-side (sorted doc_ids, before_seg) numpy pair for the
         WAND kernel, or None. Tombstones are a small delete/replace
         queue purged at compact() — not corpus-scale; past
-        MAX_TOMBSTONES this raises and asks for a compact() first."""
+        MAX_TOMBSTONES this raises and asks for a compact() first.
+        Collected once per index view: a delete or replace returns a
+        new SegmentIndex, so the cache never goes stale."""
+        return self._dead
+
+    @cached_property
+    def _dead(self):
         t = self.tombstones()
         if t is None:
             return None

@@ -21,19 +21,28 @@ TERM_DICT_CACHE_MAX = 2_000_000
 TermFreqs = Dict[str, Tuple[int, int]]
 
 
+def sql_string(s: str) -> str:
+    """A Spark SQL string literal: the hex of its UTF-8 bytes cast to
+    STRING, so quotes, backslashes and non-ASCII need no escaping. The
+    cast folds to a literal at optimization."""
+    return f"CAST(X'{s.encode('utf-8').hex()}' AS STRING)"
+
+
+def term_in_sql(terms: Iterable[str]) -> str:
+    """SQL text of `term IN (...)` over the distinct sorted terms."""
+    terms = sorted(set(terms))
+    if not terms:
+        return "false"
+    return "term IN ({})".format(", ".join(sql_string(t) for t in terms))
+
+
 def term_in(terms: Iterable[str]) -> Column:
     """`term IN (...)` built with a constant number of py4j calls.
 
     Column.isin makes one py4j literal per term (about 1 ms each); one
-    SQL expression costs the same for 1 term or 1000. Each term is
-    written as the hex of its UTF-8 bytes cast to STRING, so quotes,
-    backslashes and non-ASCII terms need no escaping. The casts fold to
-    literals, so the scan still pushes down In(term, ...)."""
-    terms = sorted(set(terms))
-    if not terms:
-        return F.lit(False)
-    return F.expr("term IN ({})".format(", ".join(
-        f"CAST(X'{t.encode('utf-8').hex()}' AS STRING)" for t in terms)))
+    SQL expression costs the same for 1 term or 1000. The scan still
+    pushes down In(term, ...)."""
+    return F.expr(term_in_sql(terms))
 
 
 def collect_term_dict(term_stats: DataFrame) -> Optional[TermFreqs]:

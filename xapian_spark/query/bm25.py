@@ -18,9 +18,20 @@ Mirrors the reference implementation (xapian-core/weight/bm25weight.cc):
 Defaults k1=1, k2=0, k3=1, b=0.5, min_normlen=0.5
 (include/xapian/weight.h:525-528).
 
-Driver-side scalar math is float64; the distributed per-posting part is a
-Spark Column expression (pure JVM, whole-stage codegen — no Python UDF in
-the scoring hot path).
+Driver-side scalar math is float64. The distributed per-posting part is
+rendered as Spark SQL text (`*_sql`), so the executor plans a query as
+one SQL statement (pure JVM, whole-stage codegen — no Python UDF in the
+scoring hot path, and a constant number of py4j calls to build). Each
+double constant is written with sql_double, which round-trips exactly,
+and each rendering performs the same IEEE float64 operations in the same
+order as its scalar twin.
+
+Weight protocol (what query.executor.Enquire calls):
+- separable weights (BM25Weight, TradWeight, BoolWeight): len_factor,
+  termweight, maxpart and sumpart on the driver; termweight_sql and
+  sumpart_sql in the plan; BM25Weight adds maxextra/sumextra_sql (k2).
+- generalized weights (TF-IDF, the DFR family): make_sumpart(tf, cf, N,
+  avlen, ...) returns fn(wdf_sql, doclen_sql) -> SQL text of the part.
 """
 
 from __future__ import annotations
@@ -28,8 +39,22 @@ from __future__ import annotations
 import math
 from dataclasses import dataclass
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
+
+def sql_double(x: float) -> str:
+    """A float64 as a Spark SQL literal that parses back to the same
+    bits: repr() is the shortest round-tripping decimal, and the D
+    suffix makes it a DOUBLE."""
+    x = float(x)
+    if math.isnan(x):
+        return "CAST('NaN' AS DOUBLE)"
+    if math.isinf(x):
+        return "CAST('{}Infinity' AS DOUBLE)".format("-" if x < 0 else "")
+    return f"({x!r}D)" if math.copysign(1.0, x) < 0 else f"{x!r}D"
+
+
+def _normlen_sql(doclen: str, len_factor: float, min_normlen: float) -> str:
+    return (f"greatest((CAST({doclen} AS DOUBLE) * {sql_double(len_factor)}),"
+            f" {sql_double(min_normlen)})")
 
 
 @dataclass(frozen=True)
@@ -47,54 +72,55 @@ class BM25Weight:
 
     def termweight(
         self, termfreq: int, collection_size: int, wqf: int = 1,
-        factor: float = 1.0,
+        factor: float = 1.0, log=math.log,
     ) -> float:
-        """The per-term document-independent weight (bm25weight.cc init)."""
+        """The per-term document-independent weight (bm25weight.cc init).
+        `log` lets a test substitute Spark's ln to check termweight_sql
+        bit for bit."""
         tw = (collection_size - termfreq + 0.5) / (termfreq + 0.5)
         if tw < 2.0:
             tw = tw * 0.5 + 1.0
-        tw = math.log(tw) * factor
+        tw = log(tw) * factor
         if self.k3 != 0:
             tw *= (self.k3 + 1.0) * wqf / (self.k3 + wqf)
         return tw
 
-    def termweight_col(
-        self, termfreq: Column, collection_size: int, wqf: int = 1,
+    def termweight_sql(
+        self, termfreq: str, collection_size: int, wqf: int = 1,
         factor: float = 1.0,
-    ) -> Column:
-        """Column twin of termweight(), for the one case where the
+    ) -> str:
+        """SQL twin of termweight(), for the one case where the
         termfreq is itself computed inside the plan (the synonym
         node's exact unioned docfreq) — keeps query compilation free
-        of driver-side count() jobs."""
-        tf = termfreq.cast("double")
-        tw = ((F.lit(float(collection_size)) - tf + F.lit(0.5))
-              / (tf + F.lit(0.5)))
-        tw = F.when(tw < 2.0, tw * F.lit(0.5) + F.lit(1.0)).otherwise(tw)
-        tw = F.log(tw) * F.lit(factor)
+        of driver-side count() jobs. Spark's ln may differ from libm's
+        log in the last bit; every other operation is identical."""
+        tf = f"CAST({termfreq} AS DOUBLE)"
+        tw = (f"((({sql_double(collection_size)} - {tf}) + 0.5D)"
+              f" / ({tf} + 0.5D))")
+        tw = f"CASE WHEN {tw} < 2.0D THEN (({tw} * 0.5D) + 1.0D) ELSE {tw} END"
+        tw = f"(ln({tw}) * {sql_double(factor)})"
         if self.k3 != 0:
-            tw = tw * F.lit((self.k3 + 1.0) * wqf / (self.k3 + wqf))
+            k3_part = (self.k3 + 1.0) * wqf / (self.k3 + wqf)
+            tw = f"({tw} * {sql_double(k3_part)})"
         return tw
 
-    def sumpart_col(
-        self, termweight: Column, wdf: Column, doclen: Column,
-        len_factor: float,
-    ) -> Column:
-        """get_sumpart as a Spark Column (vectorized JVM-side)."""
-        wdf_d = wdf.cast("double")
-        normlen = F.greatest(
-            doclen.cast("double") * F.lit(len_factor),
-            F.lit(self.min_normlen),
-        )
-        denom = (
-            F.lit(self.k1) * (normlen * F.lit(self.b) + F.lit(1.0 - self.b))
-            + wdf_d
-        )
-        return termweight * F.lit(self.k1 + 1.0) * wdf_d / denom
+    def sumpart_sql(
+        self, termweight: str, wdf: str, doclen: str, len_factor: float,
+    ) -> str:
+        """get_sumpart as SQL text over the given SQL expressions:
+        ((tw * (k1+1)) * wdf) / (k1 * (normlen*b + (1-b)) + wdf)."""
+        wdf_d = f"CAST({wdf} AS DOUBLE)"
+        normlen = _normlen_sql(doclen, len_factor, self.min_normlen)
+        denom = (f"(({sql_double(self.k1)} * (({normlen} * "
+                 f"{sql_double(self.b)}) + {sql_double(1.0 - self.b)}))"
+                 f" + {wdf_d})")
+        return (f"((({termweight} * {sql_double(self.k1 + 1.0)})"
+                f" * {wdf_d}) / {denom})")
 
     def sumpart(
         self, termweight: float, wdf: int, doclen: float, len_factor: float
     ) -> float:
-        """Scalar twin of sumpart_col (tests / WAND kernel)."""
+        """Scalar twin of sumpart_sql (tests / WAND kernel)."""
         normlen = max(doclen * len_factor, self.min_normlen)
         denom = self.k1 * (normlen * self.b + (1.0 - self.b)) + wdf
         return termweight * (self.k1 + 1.0) * wdf / denom
@@ -116,16 +142,20 @@ class BM25Weight:
     def maxextra(self) -> float:
         return self.k2
 
-    def sumextra_col(self, doclen: Column, len_factor: float,
-                     query_length: int) -> Column:
+    def sumextra_sql(self, doclen: str, len_factor: float,
+                     query_length: int) -> str:
         """get_sumextra (bm25weight.cc:203-208): the k2 per-document
         extra weight, added once per matching doc
         (ExtraWeightPostList, matcher/localsubmatch.cc:92-96)."""
         num = 2.0 * self.k2 * query_length
-        normlen = F.greatest(
-            doclen.cast("double") * F.lit(len_factor),
-            F.lit(self.min_normlen))
-        return F.lit(num) / (F.lit(1.0) + normlen)
+        normlen = _normlen_sql(doclen, len_factor, self.min_normlen)
+        return f"({sql_double(num)} / (1.0D + {normlen}))"
+
+    def sumextra(self, doclen: float, len_factor: float,
+                 query_length: int) -> float:
+        """Scalar twin of sumextra_sql."""
+        num = 2.0 * self.k2 * query_length
+        return num / (1.0 + max(doclen * len_factor, self.min_normlen))
 
 
 @dataclass(frozen=True)
@@ -157,23 +187,33 @@ class TfIdfWeight:
         idf = self._idfn(tf, N)
         w = self.normalizations[0]
 
-        def fn(wdf: Column, doclen: Column) -> Column:
-            d = wdf.cast("double")
+        def fn(wdf: str, doclen: str) -> str:
+            d = f"CAST({wdf} AS DOUBLE)"
             if w == "b":
-                wdfn = F.when(wdf == 0, 0.0).otherwise(1.0)
+                wdfn = f"CASE WHEN {wdf} = 0 THEN 0.0D ELSE 1.0D END"
             elif w == "s":
-                wdfn = d * d
+                wdfn = f"({d} * {d})"
             elif w == "l":
-                wdfn = F.when(wdf == 0, 0.0).otherwise(
-                    F.lit(1.0) + F.log(d))
+                wdfn = (f"CASE WHEN {wdf} = 0 THEN 0.0D"
+                        f" ELSE (1.0D + ln({d})) END")
             else:
                 wdfn = d
-            return wdfn * F.lit(idf) * F.lit(factor)
+            return f"(({wdfn} * {sql_double(idf)}) * {sql_double(factor)})"
 
         return fn
 
     def maxextra(self) -> float:
         return 0.0
+
+
+def _unless_zero_wdf(wdf: str, part: str) -> str:
+    return f"CASE WHEN {wdf} = 0 THEN 0.0D ELSE {part} END"
+
+
+def _wdfn_sql(wdf: str, doclen: str, cl: float) -> str:
+    """DFR normalization 2: wdf · log2(1 + c·avlen/len)."""
+    return (f"(CAST({wdf} AS DOUBLE) * log2((1.0D + ({sql_double(cl)}"
+            f" / CAST({doclen} AS DOUBLE)))))")
 
 
 @dataclass(frozen=True)
@@ -192,14 +232,12 @@ class InL2Weight:
         idf = math.log2((N + 1) / (tf + 0.5))
         cl = self.c * avlen
 
-        def fn(wdf: Column, doclen: Column) -> Column:
-            d = wdf.cast("double")
-            wdfn = d * F.log2(F.lit(1.0)
-                              + F.lit(cl) / doclen.cast("double"))
-            big_l = F.lit(1.0) / (wdfn + F.lit(1.0))
-            return F.when(wdf == 0, 0.0).otherwise(
-                F.lit(float(wqf)) * wdfn * big_l * F.lit(idf)
-                * F.lit(factor))
+        def fn(wdf: str, doclen: str) -> str:
+            wdfn = _wdfn_sql(wdf, doclen, cl)
+            big_l = f"(1.0D / ({wdfn} + 1.0D))"
+            return _unless_zero_wdf(
+                wdf, f"(((({sql_double(wqf)} * {wdfn}) * {big_l})"
+                     f" * {sql_double(idf)}) * {sql_double(factor)})")
 
         return fn
 
@@ -234,15 +272,13 @@ class PL2Weight:
                      - p2 * wdfn_lower)
             lower_bound = wqf * p_min / (wdfn_upper + 1.0)
 
-        def fn(wdf: Column, doclen: Column) -> Column:
-            d = wdf.cast("double")
-            wdfn = d * F.log2(F.lit(1.0)
-                              + F.lit(cl) / doclen.cast("double"))
-            p = (F.lit(p1) + (wdfn + F.lit(0.5)) * F.log2(wdfn)
-                 - F.lit(p2) * wdfn)
-            return F.when(wdf == 0, 0.0).otherwise(
-                (F.lit(float(wqf)) * p / (wdfn + F.lit(1.0))
-                 - F.lit(lower_bound)) * F.lit(factor))
+        def fn(wdf: str, doclen: str) -> str:
+            wdfn = _wdfn_sql(wdf, doclen, cl)
+            p = (f"(({sql_double(p1)} + (({wdfn} + 0.5D) * log2({wdfn})))"
+                 f" - ({sql_double(p2)} * {wdfn}))")
+            return _unless_zero_wdf(
+                wdf, f"(((({sql_double(wqf)} * {p}) / ({wdfn} + 1.0D))"
+                     f" - {sql_double(lower_bound)}) * {sql_double(factor)})")
 
         return fn
 
@@ -250,10 +286,10 @@ class PL2Weight:
         return 0.0
 
 
-def _wdfn_col(wdf: Column, doclen: Column, cl: float) -> Column:
-    """DFR normalization 2: wdf · log2(1 + c·avlen/len)."""
-    return wdf.cast("double") * F.log2(
-        F.lit(1.0) + F.lit(cl) / doclen.cast("double"))
+def _bernoulli_sql(wdfn: str, tf: int, cf: int) -> str:
+    """The Bernoulli after-effect (cf + 1) / (tf · (wdfn + 1))."""
+    return (f"({sql_double(cf + 1.0)} / ({sql_double(tf)}"
+            f" * ({wdfn} + 1.0D)))")
 
 
 @dataclass(frozen=True)
@@ -272,13 +308,12 @@ class IfB2Weight:
         idf = math.log2((N + 1.0) / (cf + 0.5))
         cl = self.c * avlen
 
-        def fn(wdf: Column, doclen: Column) -> Column:
-            wdfn = _wdfn_col(wdf, doclen, cl)
-            b = F.lit(cf + 1.0) / (F.lit(float(tf))
-                                   * (wdfn + F.lit(1.0)))
-            return F.when(wdf == 0, 0.0).otherwise(
-                wdfn * F.lit(float(wqf)) * b * F.lit(idf)
-                * F.lit(factor))
+        def fn(wdf: str, doclen: str) -> str:
+            wdfn = _wdfn_sql(wdf, doclen, cl)
+            b = _bernoulli_sql(wdfn, tf, cf)
+            return _unless_zero_wdf(
+                wdf, f"(((({wdfn} * {sql_double(wqf)}) * {b})"
+                     f" * {sql_double(idf)}) * {sql_double(factor)})")
 
         return fn
 
@@ -304,13 +339,12 @@ class IneB2Weight:
         idf = math.log2((N + 1.0) / (expected + 0.5))
         cl = self.c * avlen
 
-        def fn(wdf: Column, doclen: Column) -> Column:
-            wdfn = _wdfn_col(wdf, doclen, cl)
-            b = F.lit(cf + 1.0) / (F.lit(float(tf))
-                                   * (wdfn + F.lit(1.0)))
-            return F.when(wdf == 0, 0.0).otherwise(
-                wdfn * F.lit(idf) * F.lit(float(wqf)) * b
-                * F.lit(factor))
+        def fn(wdf: str, doclen: str) -> str:
+            wdfn = _wdfn_sql(wdf, doclen, cl)
+            b = _bernoulli_sql(wdfn, tf, cf)
+            return _unless_zero_wdf(
+                wdf, f"(((({wdfn} * {sql_double(idf)}) * {sql_double(wqf)})"
+                     f" * {b}) * {sql_double(factor)})")
 
         return fn
 
@@ -336,25 +370,38 @@ class BB2Weight:
         base_change = math.log(2.0)
         wt = -math.log2(N - 1.0) - (1.0 / base_change)
 
-        def stirling(x, y: Column) -> Column:
-            return ((y + F.lit(0.5)) * F.log2(F.lit(float(x)) / y)
-                    + (F.lit(float(x)) - y) * F.lit(math.log2(x)))
+        def stirling(x, y: str) -> str:
+            return (f"((({y} + 0.5D) * log2(({sql_double(x)} / {y})))"
+                    f" + (({sql_double(x)} - {y})"
+                    f" * {sql_double(math.log2(x))}))")
 
-        def fn(wdf: Column, doclen: Column) -> Column:
-            wdfn = _wdfn_col(wdf, doclen, cl)
-            b = F.lit(cf + 1.0) / (F.lit(float(tf))
-                                   * (wdfn + F.lit(1.0)))
-            st = (stirling(N + cf - 1.0,
-                           F.lit(N + cf - 2.0) - wdfn)
-                  - stirling(cf, F.lit(float(cf)) - wdfn))
-            return F.when(wdf == 0, 0.0).otherwise(
-                F.lit(float(wqf)) * (b * (F.lit(wt) + st))
-                * F.lit(factor))
+        def fn(wdf: str, doclen: str) -> str:
+            wdfn = _wdfn_sql(wdf, doclen, cl)
+            b = _bernoulli_sql(wdfn, tf, cf)
+            y_all = f"({sql_double(N + cf - 2.0)} - {wdfn})"
+            y_cf = f"({sql_double(cf)} - {wdfn})"
+            st = (f"({stirling(N + cf - 1.0, y_all)}"
+                  f" - {stirling(cf, y_cf)})")
+            return _unless_zero_wdf(
+                wdf, f"(({sql_double(wqf)} * ({b} * ({sql_double(wt)}"
+                     f" + {st}))) * {sql_double(factor)})")
 
         return fn
 
     def maxextra(self) -> float:
         return 0.0
+
+
+def _dfr_info_sql(d: str, ln: str, avlen: float, nf: float) -> str:
+    """d·log2((d·avlen/len)·N/cf), shared by DLH and DPH."""
+    return (f"({d} * log2(((({d} * {sql_double(avlen)}) / {ln})"
+            f" * {sql_double(nf)})))")
+
+
+def _dfr_tail_sql(d: str, r: str) -> str:
+    """0.5·log2(2π·d·(1 - r)), shared by DLH and DPH."""
+    return (f"(0.5D * log2((({sql_double(2.0 * math.pi)} * {d})"
+            f" * (1.0D - {r}))))")
 
 
 @dataclass(frozen=True)
@@ -374,18 +421,16 @@ class DLHWeight:
         ) / (wdf_upper + 0.5) if wdf_upper else 0.0
         lower_bound = wqf * min_weight
 
-        def fn(wdf: Column, doclen: Column) -> Column:
-            d = wdf.cast("double")
-            ln = doclen.cast("double")
-            r = d / ln
-            wt = (d * F.log2((d * F.lit(avlen) / ln) * F.lit(nf))
-                  + (ln - d) * F.log2(F.lit(1.0) - r)
-                  + F.lit(0.5) * F.log2(
-                      F.lit(2.0 * math.pi) * d * (F.lit(1.0) - r))
-                  ) / (d + F.lit(0.5))
-            return F.when(wdf == 0, 0.0).otherwise(
-                (F.lit(float(wqf)) * wt - F.lit(lower_bound))
-                * F.lit(factor))
+        def fn(wdf: str, doclen: str) -> str:
+            d = f"CAST({wdf} AS DOUBLE)"
+            ln = f"CAST({doclen} AS DOUBLE)"
+            r = f"({d} / {ln})"
+            wt = (f"((({_dfr_info_sql(d, ln, avlen, nf)}"
+                  f" + (({ln} - {d}) * log2((1.0D - {r}))))"
+                  f" + {_dfr_tail_sql(d, r)}) / ({d} + 0.5D))")
+            return _unless_zero_wdf(
+                wdf, f"((({sql_double(wqf)} * {wt})"
+                     f" - {sql_double(lower_bound)}) * {sql_double(factor)})")
 
         return fn
 
@@ -411,18 +456,16 @@ class DPHWeight:
             + 0.5 * math.log2(2.0 * math.pi * wdf_lower / doclen_upper))
         lower_bound = wqf * min_weight
 
-        def fn(wdf: Column, doclen: Column) -> Column:
-            d = wdf.cast("double")
-            ln = doclen.cast("double")
-            r = d / ln
-            norm = F.pow(F.lit(1.0) - r, F.lit(2.0)) / (d + F.lit(1.0))
-            wt = norm * (
-                d * F.log2((d * F.lit(avlen) / ln) * F.lit(nf))
-                + F.lit(0.5) * F.log2(
-                    F.lit(2.0 * math.pi) * d * (F.lit(1.0) - r)))
-            return F.when(wdf == 0, 0.0).otherwise(
-                (F.lit(float(wqf)) * wt - F.lit(lower_bound))
-                * F.lit(factor))
+        def fn(wdf: str, doclen: str) -> str:
+            d = f"CAST({wdf} AS DOUBLE)"
+            ln = f"CAST({doclen} AS DOUBLE)"
+            r = f"({d} / {ln})"
+            norm = f"(power((1.0D - {r}), 2.0D) / ({d} + 1.0D))"
+            wt = (f"({norm} * ({_dfr_info_sql(d, ln, avlen, nf)}"
+                  f" + {_dfr_tail_sql(d, r)}))")
+            return _unless_zero_wdf(
+                wdf, f"((({sql_double(wqf)} * {wt})"
+                     f" - {sql_double(lower_bound)}) * {sql_double(factor)})")
 
         return fn
 
@@ -441,12 +484,12 @@ class BoolWeight:
     def termweight(self, termfreq, collection_size, wqf=1, factor=1.0):
         return 0.0
 
-    def termweight_col(self, termfreq, collection_size, wqf=1,
-                       factor=1.0) -> Column:
-        return F.lit(0.0)
+    def termweight_sql(self, termfreq, collection_size, wqf=1,
+                       factor=1.0) -> str:
+        return "0.0D"
 
-    def sumpart_col(self, termweight, wdf, doclen, len_factor) -> Column:
-        return F.lit(0.0)
+    def sumpart_sql(self, termweight, wdf, doclen, len_factor) -> str:
+        return "0.0D"
 
     def sumpart(self, termweight, wdf, doclen, len_factor) -> float:
         return 0.0
@@ -475,13 +518,13 @@ class TradWeight:
         return self._bm25().termweight(termfreq, collection_size, wqf,
                                        factor)
 
-    def termweight_col(self, termfreq, collection_size, wqf=1,
-                       factor=1.0) -> Column:
-        return self._bm25().termweight_col(termfreq, collection_size,
+    def termweight_sql(self, termfreq, collection_size, wqf=1,
+                       factor=1.0) -> str:
+        return self._bm25().termweight_sql(termfreq, collection_size,
                                            wqf, factor)
 
-    def sumpart_col(self, termweight, wdf, doclen, len_factor) -> Column:
-        return self._bm25().sumpart_col(termweight, wdf, doclen, len_factor)
+    def sumpart_sql(self, termweight, wdf, doclen, len_factor) -> str:
+        return self._bm25().sumpart_sql(termweight, wdf, doclen, len_factor)
 
     def sumpart(self, termweight, wdf, doclen, len_factor) -> float:
         return self._bm25().sumpart(termweight, wdf, doclen, len_factor)

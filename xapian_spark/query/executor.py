@@ -1,46 +1,72 @@
-"""Query execution: Query tree → DataFrame plan → top-k MSet.
+"""Query execution: Query tree → Spark plan → top-k MSet.
 
 Spark restatement of the reference match
 (xapian-core/matcher/multimatch.cc:376-1179 get_mset):
 
-- stats gathering (prepare_sub_matches, :205-240) = one tiny aggregation
-  over term_stats for the query's leaf terms, collected to the driver;
-  termweights are computed driver-side in float64 exactly like
+- stats gathering (prepare_sub_matches, :205-240) = a lookup in the
+  driver-side term dictionary (index/termdict.py), collected once per
+  Enquire; termweights are computed driver-side in float64 exactly like
   BM25Weight::init.
-- the PostList tree = a composition of DataFrame operators (§2.2 SURVEY):
+- the PostList tree = a composition of relational operators (§2.2 SURVEY):
   AND → count-of-matching-children == n over one shared postings scan
   (or inner joins for heterogeneous children), OR → groupBy-sum,
   AND_NOT → left_anti, AND_MAYBE → left join + coalesce, XOR → odd count,
   FILTER → semi join, SYNONYM → wdf-sum scored as one term,
   MAX → groupBy-max, PHRASE/NEAR → AND + positions post-filter (the same
   "positional filters deferred" shape as api/queryinternal.cc:293-355).
-- the bounded-heap top-k (:782-843) = orderBy(score desc, doc_id asc)
-  .limit(k), which Spark executes as TakeOrderedAndProject — a
+- the bounded-heap top-k (:782-843) = ORDER BY score DESC, doc_id
+  LIMIT k, which Spark executes as TakeOrderedAndProject — a
   per-partition bounded heap + driver merge, i.e. the same algorithm
   distributed.
 - tiebreak: weight desc then docid ASC (msetcmp.cc:46-55, default
   docid_order ASCENDING) — required for rank-identity.
 
-The flat single-scan path: a query that is And/Or/Synonym/Max over plain
-Terms is evaluated with ONE postings scan (term IN (...)) + one shuffle
-(groupBy doc_id) — no joins. Deep trees fall back to compositional joins.
+The flat single-scan path: a Term, or an And/Or/Synonym/Max over plain
+Terms, is evaluated with ONE postings scan (term IN (...)) + at most one
+shuffle (groupBy doc_id) — no joins. Its plan is built as ONE SQL
+statement over a temp view of the postings (registered once per Enquire,
+under a name unique to it): terms go in as UTF-8 hex literals, each
+term's tw as a map(...)[term] lookup, and the weight renders its formula
+as SQL text. Building a Column tree instead costs one py4j round trip
+per literal and operator (~300-600 per query, growing with the number
+of terms); the statement costs a constant handful, so `get_mset` plans a
+flat query with fewer than 60 py4j calls whatever its term count
+(tests/test_plans.py pins this). Phrase/Near build their candidate
+aggregation the same way and add the positional check as one DataFrame
+filter. Deep trees (AndNot, Filter, AndMaybe, Xor, nested operators)
+compose DataFrames on top of these results with joins.
 """
 
 from __future__ import annotations
 
+import itertools
 from dataclasses import dataclass
 from functools import cached_property
 from typing import Dict, List, Optional, Tuple
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from xapian_spark.index.build import InvertedIndex
 from xapian_spark.index.termdict import (
-    TermFreqs, collect_term_dict, term_freqs,
+    TermFreqs, collect_term_dict, sql_string, term_freqs, term_in,
+    term_in_sql,
 )
 from xapian_spark.query import ops
-from xapian_spark.query.bm25 import BM25Weight
+from xapian_spark.query.bm25 import BM25Weight, sql_double
+
+# deterministic float summation: sort the collected parts before folding
+# (fixes the summation order across shuffles/runs)
+SUM_SCORES_SQL = ("aggregate(array_sort(collect_list(score)), 0.0D,"
+                  " (acc, x) -> acc + x)")
+
+EMPTY_SQL = ("SELECT CAST(NULL AS BIGINT) AS doc_id,"
+             " CAST(NULL AS DOUBLE) AS score WHERE false")
+EMPTY_N_SQL = ("SELECT CAST(NULL AS BIGINT) AS doc_id,"
+               " CAST(NULL AS DOUBLE) AS score,"
+               " CAST(NULL AS BIGINT) AS _n WHERE false")
+
+_view_ids = itertools.count()
 
 
 @dataclass
@@ -61,6 +87,20 @@ class Enquire:
     def __init__(self, index: InvertedIndex, weight: Optional[BM25Weight] = None):
         self.index = index
         self.weight = weight or BM25Weight()
+        self._view = f"xapian_postings_{next(_view_ids)}"
+        self._view_of = None  # the postings DataFrame the view names
+
+    def _postings_view(self) -> str:
+        """The temp view the SQL plans read postings from: registered
+        on first use, and again only if index.postings is replaced."""
+        postings = self.index.postings
+        if self._view_of is not postings:
+            postings.createOrReplaceTempView(self._view)
+            self._view_of = postings
+        return f"`{self._view}`"
+
+    def _run(self, sql: str) -> DataFrame:
+        return self.index.postings.sparkSession.sql(sql)
 
     # ------------------------------------------------------------------
 
@@ -109,60 +149,43 @@ class Enquire:
 
     # ------------------------------------------------------------------
 
-    def _scored_postings(
+    def _scored_sql(
         self, terms: List[Tuple[str, int, float]], stats: _QueryStats,
         keep: Tuple[str, ...] = (),
-    ) -> DataFrame:
-        """One scan of postings for the given (term, wqf, factor) leaves,
-        with a per-row weight-part column. No shuffle."""
-        df = self.index.postings.filter(
-            F.col("term").isin([t for t, _w, _f in terms]))
-        if hasattr(self.weight, "make_sumpart"):
+    ) -> str:
+        """SQL text of one scan of postings for the given (term, wqf,
+        factor) leaves, with a per-row weight-part column `score` (and
+        the `keep` columns). No shuffle."""
+        w = self.weight
+        if hasattr(w, "make_sumpart"):
             # generalized (non-separable) weights: per-term expression
-            chain = None
+            whens = []
             for t, wqf, factor in terms:
                 tf, cf = stats.termfreqs.get(t, (0, 0))
                 if tf == 0:
                     continue
                 wdf_ub = min(cf, stats.wdf_ubound) if cf \
                     else stats.wdf_ubound
-                fn = self.weight.make_sumpart(
+                fn = w.make_sumpart(
                     tf, cf, stats.collection_size,
                     stats.average_length, wqf, factor,
                     wdf_upper=wdf_ub,
                     doclen_lower=max(stats.doclen_lbound, 1),
                     doclen_upper=max(stats.doclen_ubound, 1))
-                val = fn(F.col("wdf"), F.col("doclen"))
-                cond = F.col("term") == t
-                chain = F.when(cond, val) if chain is None \
-                    else chain.when(cond, val)
-            score = chain.otherwise(F.lit(0.0)) if chain is not None \
-                else F.lit(0.0)
+                whens.append(f"WHEN term = {sql_string(t)}"
+                             f" THEN {fn('wdf', 'doclen')}")
+            score = f"CASE {' '.join(whens)} ELSE 0.0D END" if whens \
+                else "0.0D"
         else:
-            lf = self.weight.len_factor(stats.average_length)
-            tws = {
-                t: self._termweight(t, wqf, stats, factor)
-                for t, wqf, factor in terms
-            }
-            mapping = F.create_map(
-                *[x for t, w in tws.items()
-                  for x in (F.lit(t), F.lit(w))])
-            tw_col = mapping[F.col("term")]
-            score = self.weight.sumpart_col(
-                tw_col, F.col("wdf"), F.col("doclen"), lf)
-        cols = [F.col("term"), F.col("doc_id"), score.alias("score")]
-        cols += [F.col(c) for c in keep]
-        return df.select(*cols)
-
-    @staticmethod
-    def _sum_scores() -> Column:
-        # deterministic float summation: sort the collected parts before
-        # folding (fixes the summation order across shuffles/runs)
-        return F.aggregate(
-            F.array_sort(F.collect_list("score")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
+            tws = {t: self._termweight(t, wqf, stats, factor)
+                   for t, wqf, factor in terms}
+            tw = "map({})[term]".format(", ".join(
+                f"{sql_string(t)}, {sql_double(v)}" for t, v in tws.items()))
+            score = w.sumpart_sql(tw, "wdf", "doclen",
+                                  w.len_factor(stats.average_length))
+        cols = ", ".join(("term", "doc_id", f"{score} AS score") + keep)
+        return (f"SELECT {cols} FROM {self._postings_view()}"
+                f" WHERE {term_in_sql(t for t, _w, _f in terms)}")
 
     # -- compile -----------------------------------------------------------
 
@@ -184,22 +207,13 @@ class Enquire:
         """node → DataFrame(doc_id LONG, score DOUBLE)."""
         if stats is None:
             stats = self._gather_stats(list(node.terms()))
-        spark = self.index.postings.sparkSession
-
-        if isinstance(node, ops.MatchNothing):
-            return spark.createDataFrame([], "doc_id long, score double")
+        sql = self._sql(node, stats, factor)
+        if sql is not None:
+            return self._run(sql)
 
         if isinstance(node, ops.MatchAll):
             return self.index.doclens.select(
                 "doc_id", F.lit(0.0).alias("score"))
-
-        if isinstance(node, ops.Term):
-            tf, _ = stats.termfreqs.get(node.term, (0, 0))
-            if tf == 0:
-                return spark.createDataFrame([], "doc_id long, score double")
-            sp = self._scored_postings(
-                [(node.term, node.wqf, factor)], stats)
-            return sp.select("doc_id", "score")
 
         if isinstance(node, ops.ScaleWeight):
             return self.compile(node.child, stats, factor * node.factor)
@@ -227,8 +241,7 @@ class Enquire:
                             f"than {cap} terms")
                     terms = terms[:cap]  # WILDCARD_LIMIT_FIRST
             if not terms:
-                return spark.createDataFrame(
-                    [], "doc_id long, score double")
+                return self._run(EMPTY_SQL)
             sub = ops.Synonym([ops.Term(t) for t in terms])
             return self.compile(sub, self._gather_stats(terms), factor)
 
@@ -242,14 +255,10 @@ class Enquire:
             kept = [c for _i, c in sorted(ranked[: node.set_size])]
             return self.compile(ops.Or(kept), stats, factor)
 
-        if isinstance(node, (ops.And, ops.Or, ops.Xor, ops.Max,
-                             ops.Synonym)) and not node.children:
+        if isinstance(node, ops.Xor) and not node.children:
             # emptyop semantics: an operator with no children matches
             # nothing (api_anydb.cc emptyop1)
-            return spark.createDataFrame([], "doc_id long, score double")
-
-        if self._is_flat(node):
-            return self._compile_flat(node, stats, factor)
+            return self._run(EMPTY_SQL)
 
         if isinstance(node, (ops.And, ops.Or, ops.Xor, ops.Max,
                              ops.Synonym)):
@@ -321,8 +330,30 @@ class Enquire:
             cond = cond & (F.col(node.column) <= F.lit(node.hi))
         return docs.filter(cond).select(F.col("doc_id").cast("long"))
 
+    def _sql(self, node: ops.Query, stats: _QueryStats,
+             factor: float) -> Optional[str]:
+        """SQL text of the (doc_id, score) relation of a node that plans
+        as ONE statement over the postings view — a Term, a flat node,
+        MatchNothing, or a ScaleWeight of one — else None."""
+        if isinstance(node, ops.ScaleWeight):
+            return self._sql(node.child, stats, factor * node.factor)
+        if isinstance(node, ops.MatchNothing):
+            return EMPTY_SQL
+        if isinstance(node, ops.Term):
+            if not stats.termfreqs.get(node.term, (0, 0))[0]:
+                return EMPTY_SQL
+            sp = self._scored_sql([(node.term, node.wqf, factor)], stats)
+            return f"SELECT doc_id, score FROM ({sp})"
+        if self._is_flat(node):
+            return self._flat_sql(node, stats, factor)
+        return None
+
     def _compile_flat(self, node, stats: _QueryStats,
                       factor: float, keep_n: bool = False) -> DataFrame:
+        return self._run(self._flat_sql(node, stats, factor, keep_n))
+
+    def _flat_sql(self, node, stats: _QueryStats, factor: float,
+                  keep_n: bool = False) -> str:
         """And/Or/Synonym/Max over plain Terms: ONE scan + ONE shuffle.
         `keep_n` carries the per-doc matched-term count out of the
         aggregation (the percent/cutoff paths need it — computing it
@@ -330,37 +361,28 @@ class Enquire:
         terms = [(c.term, c.wqf, factor) for c in node.children]
         # drop absent terms (matcher prunes empty postlists)
         present = [t for t in terms if stats.termfreqs.get(t[0], (0, 0))[0]]
-        spark = self.index.postings.sparkSession
-        out_schema = "doc_id long, score double" + (
-            ", _n long" if keep_n else "")
-        empty = spark.createDataFrame([], out_schema)
-        if isinstance(node, ops.And) and len(present) < len(terms):
-            return empty  # AND with an empty child matches nothing
-        if not present:
-            return empty
+        if ((isinstance(node, ops.And) and len(present) < len(terms))
+                or not present):
+            # an AND with an empty child matches nothing
+            return EMPTY_N_SQL if keep_n else EMPTY_SQL
 
         if isinstance(node, ops.Synonym):
-            return self._compile_synonym(node, stats, factor)
+            return self._synonym_sql(node, stats, factor)
 
-        sp = self._scored_postings(present, stats)
-        g = sp.groupBy("doc_id")
+        sp = self._scored_sql(present, stats)
         if isinstance(node, ops.Max):
-            if keep_n:
-                return g.agg(F.max("score").alias("score"),
-                             F.count_distinct("term").alias("_n"))
-            return g.agg(F.max("score").alias("score"))
-        n_distinct = len({t for t, _, _ in present})
-        agg = g.agg(
-            self._sum_scores().alias("score"),
-            F.count_distinct(F.col("term")).cast("long").alias("_n"),
-        )
+            n = ", count(DISTINCT term) AS _n" if keep_n else ""
+            return (f"SELECT doc_id, max(score) AS score{n}"
+                    f" FROM ({sp}) GROUP BY doc_id")
+        agg = (f"SELECT doc_id, {SUM_SCORES_SQL} AS score,"
+               f" CAST(count(DISTINCT term) AS BIGINT) AS _n"
+               f" FROM ({sp}) GROUP BY doc_id")
         if isinstance(node, ops.And):
-            agg = agg.filter(F.col("_n") == n_distinct)
-        return agg.select("doc_id", "score", "_n") if keep_n \
-            else agg.select("doc_id", "score")
+            agg = f"SELECT * FROM ({agg}) WHERE _n = {len(present)}"
+        return f"SELECT doc_id, score{', _n' if keep_n else ''} FROM ({agg})"
 
-    def _compile_synonym(self, node: ops.Synonym, stats: _QueryStats,
-                         factor: float) -> DataFrame:
+    def _synonym_sql(self, node: ops.Synonym, stats: _QueryStats,
+                     factor: float) -> str:
         """synonympostlist.cc:64-89 — wdf = Σ children wdf (clamped to
         doclen), one weight calc.  We use the exact unioned docfreq where
         the reference estimates it (exact counts are cheap in Spark).
@@ -372,43 +394,19 @@ class Enquire:
         whole query still runs as ONE Spark job at mset time."""
         terms = [c.term for c in node.children
                  if stats.termfreqs.get(c.term, (0, 0))[0] > 0]
-        spark = self.index.postings.sparkSession
-        if not terms:
-            return spark.createDataFrame([], "doc_id long, score double")
         base = (
-            self.index.postings
-            .filter(F.col("term").isin(terms))
-            .groupBy("doc_id")
-            .agg(
-                F.sum("wdf").cast("int").alias("wdf_sum"),
-                F.first("doclen").alias("doclen"),
-            )
-            .select(
-                "doc_id",
-                F.least(F.col("wdf_sum"), F.col("doclen").cast("int"))
-                .alias("wdf"),
-                "doclen",
-            )
-        )
-        lf = self.weight.len_factor(stats.average_length)
-        if hasattr(self.weight, "termweight_col"):
-            tf_df = base.agg(
-                F.count(F.lit(1)).cast("long").alias("_syn_tf"))
-            tw_col = self.weight.termweight_col(
-                F.col("_syn_tf"), stats.collection_size, 1, factor)
-            score = self.weight.sumpart_col(
-                tw_col, F.col("wdf"), F.col("doclen"), lf)
-            return (base.crossJoin(F.broadcast(tf_df))
-                    .select("doc_id", score.alias("score")))
-        # custom weight without a Column termweight: one eager count
-        # (not persisted — the recompute at action time costs the same
-        # scan the old persist-backed count did, without the leak)
-        tf = base.count()
-        tw = self.weight.termweight(tf, stats.collection_size, 1, factor) \
-            if tf else 0.0
-        score = self.weight.sumpart_col(
-            F.lit(tw), F.col("wdf"), F.col("doclen"), lf)
-        return base.select("doc_id", score.alias("score"))
+            "SELECT doc_id, least(wdf_sum, CAST(doclen AS INT)) AS wdf,"
+            " doclen FROM (SELECT doc_id,"
+            " CAST(sum(wdf) AS INT) AS wdf_sum, first(doclen) AS doclen"
+            f" FROM {self._postings_view()} WHERE {term_in_sql(terms)}"
+            " GROUP BY doc_id)")
+        w = self.weight
+        tw = w.termweight_sql("_syn_tf", stats.collection_size, 1, factor)
+        score = w.sumpart_sql(tw, "wdf", "doclen",
+                              w.len_factor(stats.average_length))
+        return (f"SELECT /*+ BROADCAST(t) */ doc_id, {score} AS score"
+                f" FROM ({base}) CROSS JOIN (SELECT"
+                f" CAST(count(1) AS BIGINT) AS _syn_tf FROM ({base})) t")
 
     def _compile_nary(self, node, stats: _QueryStats,
                       factor: float) -> DataFrame:
@@ -425,7 +423,7 @@ class Enquire:
         if isinstance(node, ops.Max):
             return g.agg(F.max("score").alias("score"))
         agg = g.agg(
-            self._sum_scores().alias("score"),
+            F.expr(SUM_SCORES_SQL).alias("score"),
             F.count_distinct("_child").alias("_n"),
         )
         if isinstance(node, ops.And):
@@ -452,30 +450,23 @@ class Enquire:
         window = node.window or (
             n if isinstance(node, ops.Phrase) else n + 9)
         ordered = isinstance(node, ops.Phrase)
-        spark = self.index.postings.sparkSession
         if any(all(stats.termfreqs.get(t, (0, 0))[0] == 0 for t in e)
                for e in elems):
-            return spark.createDataFrame([], "doc_id long, score double")
+            return self._run(EMPTY_SQL)
         if n == 1 and not has_alts:
             return self.compile(ops.Term(terms[0]), stats, factor)
 
-        present = [t for t in set(terms)
+        present = [t for t in sorted(set(terms))
                    if stats.termfreqs.get(t, (0, 0))[0] > 0]
-        sp = self._scored_postings(
+        sp = self._scored_sql(
             [(t, 1, factor) for t in present], stats,
             keep=("positions",))
-        cand = (
-            sp.groupBy("doc_id")
-            .agg(
-                self._sum_scores().alias("score"),
-                F.count_distinct("term").alias("_n"),
-                F.map_from_entries(
-                    F.collect_list(F.struct("term", "positions"))
-                ).alias("_pos"),
-            )
-        )
+        cand = (f"SELECT doc_id, {SUM_SCORES_SQL} AS score,"
+                " count(DISTINCT term) AS _n,"
+                " map_from_entries(collect_list(struct(term, positions)))"
+                f" AS _pos FROM ({sp}) GROUP BY doc_id")
         if not has_alts:
-            cand = cand.filter(F.col("_n") == len(set(terms)))
+            cand = f"SELECT * FROM ({cand}) WHERE _n = {len(set(terms))}"
 
         from pyspark.sql.functions import pandas_udf
 
@@ -503,7 +494,7 @@ class Enquire:
             return pd.Series(out)
 
         return (
-            cand.filter(check_udf(F.col("_pos")))
+            self._run(cand).filter(check_udf(F.col("_pos")))
             .select("doc_id", "score")
         )
 
@@ -524,18 +515,22 @@ class Enquire:
             return sum(Enquire._query_length(c) for c in children)
         return len(node.terms())
 
+    def _has_extra(self) -> bool:
+        w = self.weight
+        return bool(hasattr(w, "sumextra_sql")
+                    and getattr(w, "maxextra", lambda: 0)())
+
     def _with_extra(self, scored: DataFrame, query: ops.Query,
                     stats: _QueryStats) -> DataFrame:
         """Add the per-document extra weight (k2 ≠ 0) once per matched
         doc — ExtraWeightPostList (matcher/localsubmatch.cc:92-96)."""
         w = self.weight
-        if not (hasattr(w, "sumextra_col") and getattr(w, "maxextra",
-                                                       lambda: 0)()):
+        if not self._has_extra():
             return scored
         lf = w.len_factor(stats.average_length)
         qlen = self._query_length(query)
         dl = self.index.doclens.select("doc_id", "doclen")
-        extra = w.sumextra_col(F.col("doclen"), lf, qlen)
+        extra = F.expr(w.sumextra_sql("doclen", lf, qlen))
         keep = [c for c in scored.columns
                 if c not in ("doc_id", "score")]
         return (scored.join(dl, "doc_id")
@@ -560,6 +555,16 @@ class Enquire:
         to ascending — with one logical collection the reference's
         DONT_CARE ordering is ascending too."""
         stats = self._gather_stats(list(query.terms()))
+        desc = docid_order == "desc"
+        if decider is None and not self._has_extra():
+            sql = self._sql(query, stats, 1.0)
+            if sql is not None:
+                # the whole flat plan, top-k included, as ONE statement
+                offset = f" OFFSET {int(first)}" if first else ""
+                return self._run(
+                    f"SELECT doc_id, score FROM ({sql}) ORDER BY score DESC,"
+                    f" doc_id {'DESC' if desc else 'ASC'}"
+                    f" LIMIT {int(maxitems)}{offset}")
         scored = self._with_extra(self.compile(query, stats), query,
                                   stats)
         if decider is not None:
@@ -568,8 +573,7 @@ class Enquire:
             allowed = self.index.docs.filter(decider).select(
                 F.col("doc_id").cast("long").alias("doc_id"))
             scored = scored.join(allowed, "doc_id", "left_semi")
-        tiebreak = F.desc("doc_id") if docid_order == "desc" \
-            else F.asc("doc_id")
+        tiebreak = F.desc("doc_id") if desc else F.asc("doc_id")
         ordered = scored.orderBy(F.desc("score"), tiebreak)
         if first:
             # offset()+limit() stays a TakeOrderedAndProject of
@@ -577,7 +581,6 @@ class Enquire:
             # drag the ENTIRE scored set into one task.
             return ordered.offset(first).limit(maxitems)
         return ordered.limit(maxitems)
-
 
     def get_mset_collapse(self, query: ops.Query, key_col: str,
                           collapse_max: int = 1, first: int = 0,
@@ -676,7 +679,7 @@ class Enquire:
             if qterms:
                 matched = (
                     self.index.postings
-                    .filter(F.col("term").isin(qterms))
+                    .filter(term_in(qterms))
                     .groupBy("doc_id")
                     .agg(F.count_distinct("term").alias("_n")))
                 scored = scored.join(matched, "doc_id", "left")

@@ -24,10 +24,12 @@ Safety contract (never changes the top-k): bounds never underestimate,
 and all prune comparisons are STRICT (<) so score ties — which the
 final order breaks by docid ascending — are never pruned away.
 
-Score identity with the DataFrame executor: per-doc parts are summed in
-ascending part-value order (matching executor._sum_scores's
-array_sort + fold), and the sumpart arithmetic performs the identical
-IEEE float64 operations in the identical order as BM25Weight.sumpart_col.
+Score identity with the executor: per-doc parts are summed in ascending
+part-value order (matching executor.SUM_SCORES_SQL's array_sort + fold),
+and the sumpart arithmetic performs the identical IEEE float64
+operations in the identical order as BM25Weight.sumpart_sql, the SQL
+rendering the executor's plans use (its scalar twin is
+BM25Weight.sumpart; tests/test_weights.py checks the two bit for bit).
 """
 
 from __future__ import annotations
