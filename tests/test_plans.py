@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from xapian_spark.index.build import InvertedIndex, build_index
 from xapian_spark.query import ops
+from xapian_spark.query.bm25 import BM25Weight
 from xapian_spark.query.executor import Enquire
 
 
@@ -118,7 +119,7 @@ def test_percent_flat_path_has_no_join(spark):
     enq = Enquire(idx)
     q = ops.Or([ops.Term("the"), ops.Term("data")])
     stats = enq._gather_stats(list(q.terms()))
-    flat = enq._compile_flat(q, stats, 1.0, keep_n=True)
+    flat = enq._run(enq._flat_sql(q, stats, 1.0, keep_n=True))
     assert "Join" not in _plan(flat)
 
 
@@ -175,6 +176,26 @@ def test_get_mset_plans_with_constant_py4j_calls(spark, disk_index):
     # and the flat plan is still a bounded top-k over one aggregation
     assert "TakeOrderedAndProject" in _plan(plans[1])
     assert "Join" not in _plan(plans[1])
+
+
+def _postings_views(spark):
+    return {t.name for t in spark.catalog.listTables()
+            if t.name.startswith("xapian_postings_")}
+
+
+def test_enquires_over_one_index_share_one_view(spark, disk_index):
+    # the SQL plans read postings through a temp view keyed to the
+    # postings DataFrame, not to the Enquire: an Enquire per request
+    # (or per weighting scheme) must not grow the session catalog
+    idx = InvertedIndex(disk_index.postings.select("*"),
+                        disk_index.doclens, disk_index.term_stats,
+                        disk_index.stats)
+    before = _postings_views(spark)
+    q = ops.Or([ops.Term("batch"), ops.Term("scan")])
+    rows = Enquire(idx).get_mset(q, 0, 10).collect()
+    assert Enquire(idx, BM25Weight(k1=2.0)).get_mset(q, 0, 10).collect()
+    assert Enquire(idx).get_mset(q, 0, 10).collect() == rows
+    assert len(_postings_views(spark) - before) == 1
 
 
 def test_synonym_scalar_is_broadcast(spark):

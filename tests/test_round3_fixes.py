@@ -147,8 +147,9 @@ def _persistent_rdd_ids(spark):
 
 
 def test_synonym_query_leaves_no_cache(spark, corpus, tmp_path):
-    # _compile_synonym used to persist() per synonym/wildcard node and
-    # never unpersist — an executor-lifetime cache leak per query
+    # the synonym path (now _synonym_sql) used to persist() per
+    # synonym/wildcard node and never unpersist — an executor-lifetime
+    # cache leak per query
     from xapian_spark.index.build import build_index
     from xapian_spark.query import ops
     from xapian_spark.query.executor import Enquire

@@ -6,7 +6,7 @@ import math
 
 import pytest
 
-from xapian_spark.query import ops
+from xapian_spark.query import bm25, ops
 from xapian_spark.query.bm25 import (
     BM25Weight, InL2Weight, PL2Weight, TfIdfWeight, TradWeight,
 )
@@ -153,6 +153,24 @@ def _nonneg(hi):
                      allow_infinity=False)
 
 
+class _MathWithLog:
+    """The `math` module with `log` replaced."""
+
+    def __init__(self, log):
+        self.log = log
+
+    def __getattr__(self, name):
+        return getattr(math, name)
+
+
+def _termweight_with_log(w, log, *args):
+    """w.termweight(*args) with `log` in place of the math.log that
+    xapian_spark.query.bm25 calls."""
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(bm25, "math", _MathWithLog(log))
+        return w.termweight(*args)
+
+
 _param = st.one_of(_nonneg(10.0), _nonneg(1e300))
 _weights = st.builds(BM25Weight, k1=_param, k2=_param, k3=_param,
                      b=_nonneg(1.0), min_normlen=_param)
@@ -174,8 +192,8 @@ def test_bm25_sql_is_bit_identical_to_scalar(spark, w, lf, n_docs, wqf,
     # the argument termweight() takes the log of, per row
     args = []
     for _tw, _wdf, _dl, tf in rows:
-        w.termweight(tf, n_docs, wqf, factor,
-                     log=lambda x: args.append(x) or 0.0)
+        _termweight_with_log(w, lambda x: args.append(x) or 0.0,
+                             tf, n_docs, wqf, factor)
     df = spark.createDataFrame(
         [r + (x,) for r, x in zip(rows, args)],
         "tw double, wdf int, doclen long, tf long, x double")
@@ -190,5 +208,5 @@ def test_bm25_sql_is_bit_identical_to_scalar(spark, w, lf, n_docs, wqf,
         # Spark's ln and libm's log differ in the last bit for a few
         # percent of arguments; every other operation must match
         spark_ln = {x: r["ln_x"]}.__getitem__
-        want = w.termweight(tf, n_docs, wqf, factor, log=spark_ln)
+        want = _termweight_with_log(w, spark_ln, tf, n_docs, wqf, factor)
         assert r["termweight"].hex() == want.hex()

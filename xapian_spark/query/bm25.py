@@ -72,15 +72,13 @@ class BM25Weight:
 
     def termweight(
         self, termfreq: int, collection_size: int, wqf: int = 1,
-        factor: float = 1.0, log=math.log,
+        factor: float = 1.0,
     ) -> float:
-        """The per-term document-independent weight (bm25weight.cc init).
-        `log` lets a test substitute Spark's ln to check termweight_sql
-        bit for bit."""
+        """The per-term document-independent weight (bm25weight.cc init)."""
         tw = (collection_size - termfreq + 0.5) / (termfreq + 0.5)
         if tw < 2.0:
             tw = tw * 0.5 + 1.0
-        tw = log(tw) * factor
+        tw = math.log(tw) * factor
         if self.k3 != 0:
             tw *= (self.k3 + 1.0) * wqf / (self.k3 + wqf)
         return tw

@@ -24,14 +24,15 @@ Spark restatement of the reference match
 The flat single-scan path: a Term, or an And/Or/Synonym/Max over plain
 Terms, is evaluated with ONE postings scan (term IN (...)) + at most one
 shuffle (groupBy doc_id) — no joins. Its plan is built as ONE SQL
-statement over a temp view of the postings (registered once per Enquire,
-under a name unique to it): terms go in as UTF-8 hex literals, each
-term's tw as a map(...)[term] lookup, and the weight renders its formula
-as SQL text. Building a Column tree instead costs one py4j round trip
-per literal and operator (~300-600 per query, growing with the number
-of terms); the statement costs a constant handful, so `get_mset` plans a
-flat query with fewer than 60 py4j calls whatever its term count
-(tests/test_plans.py pins this). Phrase/Near build their candidate
+statement over a temp view of the postings (one view per postings
+DataFrame, shared by every Enquire over it): terms go in as UTF-8 hex
+literals, each term's tw as a map(...)[term] lookup, and the weight
+renders its formula as SQL text. Building a Column tree instead costs
+one py4j round trip per literal and operator (~300-600 per query,
+growing with the number of terms); the statement plus `get_mset`'s
+orderBy/limit cost a constant handful, so `get_mset` plans a flat query
+with at most 60 py4j calls whatever its term count (tests/test_plans.py
+pins this). Phrase/Near build their candidate
 aggregation the same way and add the positional check as one DataFrame
 filter. Deep trees (AndNot, Filter, AndMaybe, Xor, nested operators)
 compose DataFrames on top of these results with joins.
@@ -40,6 +41,7 @@ compose DataFrames on top of these results with joins.
 from __future__ import annotations
 
 import itertools
+import weakref
 from dataclasses import dataclass
 from functools import cached_property
 from typing import Dict, List, Optional, Tuple
@@ -67,6 +69,8 @@ EMPTY_N_SQL = ("SELECT CAST(NULL AS BIGINT) AS doc_id,"
                " CAST(NULL AS BIGINT) AS _n WHERE false")
 
 _view_ids = itertools.count()
+_postings_views: "weakref.WeakKeyDictionary[DataFrame, str]" = \
+    weakref.WeakKeyDictionary()
 
 
 @dataclass
@@ -87,17 +91,21 @@ class Enquire:
     def __init__(self, index: InvertedIndex, weight: Optional[BM25Weight] = None):
         self.index = index
         self.weight = weight or BM25Weight()
-        self._view = f"xapian_postings_{next(_view_ids)}"
-        self._view_of = None  # the postings DataFrame the view names
 
     def _postings_view(self) -> str:
-        """The temp view the SQL plans read postings from: registered
-        on first use, and again only if index.postings is replaced."""
+        """The temp view the SQL plans read index.postings through:
+        registered on first use under a name unique to that postings
+        DataFrame, and shared by every Enquire over it — the catalog
+        holds one such view per postings DataFrame, however many
+        Enquires query it. (Views are never dropped: dropping the view
+        of a cached plan uncaches it.)"""
         postings = self.index.postings
-        if self._view_of is not postings:
-            postings.createOrReplaceTempView(self._view)
-            self._view_of = postings
-        return f"`{self._view}`"
+        name = _postings_views.get(postings)
+        if name is None:
+            name = f"xapian_postings_{next(_view_ids)}"
+            postings.createOrReplaceTempView(name)
+            _postings_views[postings] = name
+        return f"`{name}`"
 
     def _run(self, sql: str) -> DataFrame:
         return self.index.postings.sparkSession.sql(sql)
@@ -348,10 +356,6 @@ class Enquire:
             return self._flat_sql(node, stats, factor)
         return None
 
-    def _compile_flat(self, node, stats: _QueryStats,
-                      factor: float, keep_n: bool = False) -> DataFrame:
-        return self._run(self._flat_sql(node, stats, factor, keep_n))
-
     def _flat_sql(self, node, stats: _QueryStats, factor: float,
                   keep_n: bool = False) -> str:
         """And/Or/Synonym/Max over plain Terms: ONE scan + ONE shuffle.
@@ -556,15 +560,6 @@ class Enquire:
         DONT_CARE ordering is ascending too."""
         stats = self._gather_stats(list(query.terms()))
         desc = docid_order == "desc"
-        if decider is None and not self._has_extra():
-            sql = self._sql(query, stats, 1.0)
-            if sql is not None:
-                # the whole flat plan, top-k included, as ONE statement
-                offset = f" OFFSET {int(first)}" if first else ""
-                return self._run(
-                    f"SELECT doc_id, score FROM ({sql}) ORDER BY score DESC,"
-                    f" doc_id {'DESC' if desc else 'ASC'}"
-                    f" LIMIT {int(maxitems)}{offset}")
         scored = self._with_extra(self.compile(query, stats), query,
                                   stats)
         if decider is not None:
@@ -671,7 +666,8 @@ class Enquire:
                 and not isinstance(query, ops.Synonym)):
             # flat queries (the common shape): the aggregation already
             # produces _n — reuse it, zero extra shuffle
-            scored = self._compile_flat(query, stats, 1.0, keep_n=True)
+            scored = self._run(
+                self._flat_sql(query, stats, 1.0, keep_n=True))
             scored = self._with_extra(scored, query, stats)
         else:
             scored = self._with_extra(self.compile(query, stats),
