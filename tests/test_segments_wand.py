@@ -21,6 +21,7 @@ from xapian_spark.index.segments import (
     DOCLEN_TERM, SegmentIndex, build_segments,
 )
 from xapian_spark.query import ops
+from xapian_spark.query.bm25 import BM25Weight, TradWeight
 from xapian_spark.query.executor import Enquire
 from xapian_spark.query.wand import WandEnquire
 
@@ -118,21 +119,36 @@ def _pairs(df):
     return [(r["doc_id"], round(r["score"], 12)) for r in df.collect()]
 
 
-@pytest.mark.parametrize("terms,op", [
+_WAND_QUERIES = [
     (["batch"], "or"),
     (["batch", "scan", "spark"], "or"),
     (["batch", "window"], "and"),
     (["the", "batch", "window", "data"], "or"),
+]
+# (id suffix, weight); the default weight keeps the plain ids
+_WAND_WEIGHTS = [
+    ("", BM25Weight()),
+    ("-bm25_k1.2_b.75", BM25Weight(k1=1.2, b=0.75)),
+    ("-trad1.2", TradWeight(1.2)),
+]
+
+
+@pytest.mark.parametrize("terms,op,weight", [
+    pytest.param(terms, op, weight, id=f"terms{i}-{op}{suffix}")
+    for suffix, weight in _WAND_WEIGHTS
+    for i, (terms, op) in enumerate(_WAND_QUERIES)
 ])
-def test_wand_matches_executor(seg_setup, terms, op):
+def test_wand_matches_executor(seg_setup, terms, op, weight):
     _docs, seg, flat = seg_setup
-    wq = WandEnquire(seg)
-    enq = Enquire(flat)
+    wq = WandEnquire(seg, weight)
+    enq = Enquire(flat, weight)
     q = ops.And([ops.Term(t) for t in terms]) if op == "and" \
         else ops.Or([ops.Term(t) for t in terms])
     expect = _pairs(enq.get_mset(q, 0, 10))
     got = _pairs(wq.get_mset(terms, 10, op=op))
     assert got == expect
+    batch = wq.get_mset_batch([("q", terms)], 10, op=op).orderBy("rank")
+    assert _pairs(batch) == expect
 
 
 def test_wand_pruned_equals_exhaustive(seg_setup):

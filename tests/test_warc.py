@@ -18,20 +18,20 @@ def _recs(n):
 def test_roundtrip_gzip_members_and_plain():
     recs = _recs(5)
     for gz in (True, False):
-        assert parse_warc(write_warc(recs, gzip_members=gz)) == recs
+        assert list(parse_warc(write_warc(recs, gzip_members=gz))) == recs
 
 
 def test_whole_file_gzip():
     recs = _recs(4)
     blob = gzip.compress(write_warc(recs, gzip_members=False))
-    assert parse_warc(blob) == recs
+    assert list(parse_warc(blob)) == recs
 
 
 def test_non_response_records_skipped():
     recs = _recs(1)
     info = (b"WARC/1.0\r\nWARC-Type: warcinfo\r\n"
             b"Content-Length: 4\r\n\r\nabcd\r\n\r\n")
-    assert parse_warc(info + write_warc(recs, gzip_members=False)) \
+    assert list(parse_warc(info + write_warc(recs, gzip_members=False))) \
         == recs
 
 
@@ -49,20 +49,33 @@ def test_http_content_length_honored():
            b"WARC-Target-URI: " + url.encode() + b"\r\n"
            b"Content-Length: " + str(len(http)).encode()
            + b"\r\n\r\n" + http + b"\r\n\r\n")
-    assert parse_warc(rec) == [(url,
-                                datetime.datetime(2024, 3, 1, 12, 0),
-                                html)]
+    assert list(parse_warc(rec)) == [(url,
+                                      datetime.datetime(2024, 3, 1, 12, 0),
+                                      html)]
 
 
 def test_truncation_and_garbage_raise():
     blob = write_warc(_recs(3))
     for cut in (5, len(blob) // 2, len(blob) - 3):
         with pytest.raises(ValueError):
-            parse_warc(blob[:cut])
+            list(parse_warc(blob[:cut]))
     with pytest.raises(ValueError):
-        parse_warc(b"\x1f\x8b\x00bogus")
+        list(parse_warc(b"\x1f\x8b\x00bogus"))
     with pytest.raises(ValueError):
-        parse_warc(b"NOT A WARC RECORD\r\n\r\n")
+        list(parse_warc(b"NOT A WARC RECORD\r\n\r\n"))
+
+
+def test_records_stream_before_a_corrupt_one():
+    # parse_warc yields each record as it is parsed: a valid record
+    # comes out before the parse reaches the corrupt one after it
+    recs = _recs(1)
+    for gz, corrupt in ((True, b"\x1f\x8b\x00bogus"),
+                        (False, b"WARC/1.0\r\nContent-Length: 99\r\n"
+                                b"\r\nshort")):
+        records = parse_warc(write_warc(recs, gzip_members=gz) + corrupt)
+        assert next(records) == recs[0]
+        with pytest.raises(ValueError):
+            next(records)
 
 
 def test_warc_pages_explodes_files(spark):

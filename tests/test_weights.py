@@ -3,12 +3,14 @@ api_anydb.cc: BM25 parameter behaviors incl. the k2 extra weight,
 InL2/PL2 (DFR), and TfIdf normalization strings."""
 
 import math
+import random
 
 import pytest
 
 from xapian_spark.query import bm25, ops
 from xapian_spark.query.bm25 import (
-    BM25Weight, InL2Weight, PL2Weight, TfIdfWeight, TradWeight,
+    BB2Weight, BM25Weight, DLHWeight, DPHWeight, IfB2Weight, IneB2Weight,
+    InL2Weight, PL2Weight, Sql, TfIdfWeight, TradWeight, sql, sql_col,
 )
 from xapian_spark.query.executor import Enquire
 
@@ -142,8 +144,9 @@ def test_bernoulli_family_run(simpledata_index):
         assert all(w == w for w in ws)  # no NaN
 
 
-# -- the SQL renderings the executor plans with == their scalar twins -----
+# -- one formula, three operand kinds: Spark SQL == floats == numpy ------
 
+import numpy as np  # noqa: E402
 from hypothesis import HealthCheck, given, settings  # noqa: E402
 from hypothesis import strategies as st  # noqa: E402
 
@@ -153,11 +156,11 @@ def _nonneg(hi):
                      allow_infinity=False)
 
 
-class _MathWithLog:
-    """The `math` module with `log` replaced."""
+class _MathWith:
+    """The `math` module with some functions replaced."""
 
-    def __init__(self, log):
-        self.log = log
+    def __init__(self, **fns):
+        self.__dict__.update(fns)
 
     def __getattr__(self, name):
         return getattr(math, name)
@@ -167,13 +170,15 @@ def _termweight_with_log(w, log, *args):
     """w.termweight(*args) with `log` in place of the math.log that
     xapian_spark.query.bm25 calls."""
     with pytest.MonkeyPatch.context() as mp:
-        mp.setattr(bm25, "math", _MathWithLog(log))
+        mp.setattr(bm25, "math", _MathWith(log=log))
         return w.termweight(*args)
 
 
 _param = st.one_of(_nonneg(10.0), _nonneg(1e300))
-_weights = st.builds(BM25Weight, k1=_param, k2=_param, k3=_param,
-                     b=_nonneg(1.0), min_normlen=_param)
+_weights = st.one_of(
+    st.builds(BM25Weight, k1=_param, k2=_param, k3=_param,
+              b=_nonneg(1.0), min_normlen=_param),
+    st.builds(TradWeight, k=_param))
 
 
 @given(w=_weights, lf=_param, n_docs=st.integers(1, 2 ** 53),
@@ -197,16 +202,113 @@ def test_bm25_sql_is_bit_identical_to_scalar(spark, w, lf, n_docs, wqf,
     df = spark.createDataFrame(
         [r + (x,) for r, x in zip(rows, args)],
         "tw double, wdf int, doclen long, tf long, x double")
+    wdf_c, doclen_c = sql_col("wdf"), sql_col("doclen")
     got = df.selectExpr(
-        f"{w.sumpart_sql('tw', 'wdf', 'doclen', lf)} AS sumpart",
-        f"{w.sumextra_sql('doclen', lf, qlen)} AS sumextra",
-        f"{w.termweight_sql('tf', n_docs, wqf, factor)} AS termweight",
+        f"{sql(w.sumpart(Sql('tw'), wdf_c, doclen_c, lf))} AS sumpart",
+        f"{sql(w.sumextra(doclen_c, lf, qlen))} AS sumextra",
+        f"{sql(w.termweight(sql_col('tf'), n_docs, wqf, factor))}"
+        " AS termweight",
         "ln(x) AS ln_x").collect()
-    for (tw, wdf, dl, tf), x, r in zip(rows, args, got):
-        assert r["sumpart"].hex() == w.sumpart(tw, wdf, dl, lf).hex()
+    # the WAND kernel's operands: int64 arrays of wdf and doclen
+    tws, wdfs, dls, _tfs = (np.array(c) for c in zip(*rows))
+    with np.errstate(all="ignore"):
+        vec = w.sumpart(tws, wdfs, dls, lf)
+    for (tw, wdf, dl, tf), x, r, v in zip(rows, args, got, vec):
+        assert r["sumpart"].hex() == w.sumpart(tw, wdf, dl, lf).hex() \
+            == float(v).hex()
         assert r["sumextra"].hex() == w.sumextra(dl, lf, qlen).hex()
         # Spark's ln and libm's log differ in the last bit for a few
         # percent of arguments; every other operation must match
         spark_ln = {x: r["ln_x"]}.__getitem__
         want = _termweight_with_log(w, spark_ln, tf, n_docs, wqf, factor)
         assert r["termweight"].hex() == want.hex()
+
+
+_GENERALIZED = ([TfIdfWeight(n + "tn") for n in "nbsl"]
+                + [W(1.5) for W in (InL2Weight, PL2Weight, IfB2Weight,
+                                    IneB2Weight, BB2Weight)]
+                + [DLHWeight(), DPHWeight()])
+# the functions whose Spark and libm results may differ in the last bit
+_TRANSCENDENTAL = (("ln", "log"), ("log2", "log2"), ("power", "pow"))
+
+
+def _render_recording(fn):
+    """fn rendered over the wdf/doclen columns, plus (SQL function,
+    math name, SQL text of the arguments) of every ln/log2/power call
+    it makes."""
+    calls = []
+    with pytest.MonkeyPatch.context() as mp:
+        for name, math_name in _TRANSCENDENTAL:
+            def rec(*args, f=getattr(bm25, name), name=name,
+                    math_name=math_name):
+                calls.append((name, math_name, [sql(a) for a in args]))
+                return f(*args)
+            mp.setattr(bm25, name, rec)
+        part = fn(sql_col("wdf"), sql_col("doclen"))
+    return sql(part), calls
+
+
+def _with_spark_math(fn, wdf, doclen, spark_results):
+    """fn over floats, with Spark's value in place of libm's for every
+    (math name, arguments) Spark evaluated in the same row."""
+    def sub(math_name):
+        def f(*a):
+            got = spark_results.get((math_name, a))
+            return getattr(math, math_name)(*a) if got is None else got
+        return f
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(bm25, "math", _MathWith(
+            **{m: sub(m) for _n, m in _TRANSCENDENTAL}))
+        return fn(float(wdf), float(doclen))
+
+
+@pytest.mark.parametrize("weight", _GENERALIZED, ids=repr)
+def test_generalized_sql_matches_floats(spark, weight):
+    """make_sumpart's one formula gives the same bits rendered as SQL
+    and run in Spark as evaluated on floats, once the float evaluation
+    uses Spark's results for ln/log2/power (Spark's may differ from
+    libm's in the last bit, and cancellation in the DFR formulas can
+    amplify that to hundreds of ulp). The part is exactly 0 at
+    wdf = 0. Where a log's argument reaches 0 (DLH and DPH at
+    wdf = doclen) or goes negative (BB2 when wdfn > cf), Spark gives
+    NULL and floats a non-finite value: the part is undefined on both
+    sides."""
+    rnd = random.Random(repr(weight))
+    rows = [(0, 1), (0, 70), (1, 1), (3, 3), (1, 2), (2, 9), (7, 1000),
+            (40, 41), (1000, 10 ** 5)]
+    rows += [(w, max(w, rnd.randint(1, 10 ** 5)))
+             for w in (rnd.randint(1, 1000) for _ in range(11))]
+    cases = []  # 20 parameter sets: (fn, SQL text, recorded calls)
+    for i in range(20):
+        n_docs = rnd.choice([2, 3, 1000, rnd.randint(2, 10 ** 6)])
+        tf = rnd.choice([1, n_docs, rnd.randint(1, n_docs)])
+        dl_lo = rnd.randint(1, 100)
+        fn = weight.make_sumpart(
+            tf, rnd.choice([tf, rnd.randint(tf, 100 * tf)]), n_docs,
+            rnd.uniform(1.0, 1000.0), rnd.randint(1, 5),
+            rnd.choice([1.0, 0.5, 2.5]),
+            wdf_upper=rnd.randint(1, 1000), doclen_lower=dl_lo,
+            doclen_upper=rnd.randint(dl_lo, 10 ** 5))
+        cases.append((fn,) + _render_recording(fn))
+    cols = []
+    for i, (_fn, text, calls) in enumerate(cases):
+        cols.append(f"{text} AS part{i}")
+        for j, (name, _m, args) in enumerate(calls):
+            cols += [f"{a} AS arg{i}_{j}_{k}" for k, a in enumerate(args)]
+            cols.append(f"{name}({', '.join(args)}) AS res{i}_{j}")
+    got = spark.createDataFrame(rows, "wdf int, doclen int") \
+        .selectExpr(*cols).collect()
+    for (wdf, dl), r in zip(rows, got):
+        for i, (fn, _text, calls) in enumerate(cases):
+            spark_results = {
+                (m, tuple(r[f"arg{i}_{j}_{k}"] for k in range(len(args)))):
+                r[f"res{i}_{j}"] for j, (_n, m, args) in enumerate(calls)}
+            want = _with_spark_math(fn, wdf, dl, spark_results)
+            got_i = r[f"part{i}"]
+            if wdf == 0:
+                assert got_i == 0.0 and want == 0.0
+            elif got_i is None:
+                assert not math.isfinite(want), (i, wdf, dl, want)
+            else:
+                assert got_i.hex() == want.hex(), (i, wdf, dl)

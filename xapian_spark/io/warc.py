@@ -14,16 +14,18 @@ reader/writer (struct-free text format + gzip members):
   compressed as its own gzip member, members concatenated.
 - `parse_warc(data)` — the inverse: splits members, parses WARC
   headers + HTTP payload, yields (url, warc_ts, html) for every
-  response record; skips request/metadata/warcinfo records the way
-  a crawl consumer must. Corrupt framing raises ValueError (the
-  media-codec contract).
+  response record, one at a time; skips request/metadata/warcinfo
+  records the way a crawl consumer must. Corrupt framing raises
+  ValueError (the media-codec contract) when the parse reaches it.
 - `warc_pages(files_df)` — the Spark operator: a binary `content`
   column of whole WARC files (e.g. from spark.read.format
   ("binaryFile")) → exploded pages rows via Arrow-batched
-  mapInPandas. One task per WARC file — exactly how Common Crawl
-  shards (~1 GB gzip members per file), so a 100 TB crawl is
-  ~100k independent tasks with no shuffle at all; downstream
-  html→text extraction chains narrowly.
+  mapInPandas, emitted in frames of at most PAGES_PER_FRAME records,
+  so a task never holds a whole file's parsed pages at once. One task
+  per WARC file — exactly how Common Crawl shards (~1 GB gzip
+  members per file), so a 100 TB crawl is ~100k independent tasks
+  with no shuffle at all; downstream html→text extraction chains
+  narrowly.
 
 Timestamps use the WARC-Date RFC-3339 UTC format and parse back to
 naive-UTC datetimes, matching io/pages.py's warc_ts column.
@@ -33,6 +35,7 @@ from __future__ import annotations
 
 import datetime
 import gzip
+import itertools
 from typing import Iterator, Sequence, Tuple
 
 from pyspark.sql import DataFrame
@@ -41,6 +44,9 @@ from pyspark.sql.types import (
 )
 
 _CRLF = b"\r\n"
+
+# records per pandas frame warc_pages emits
+PAGES_PER_FRAME = 1000
 
 
 def _warc_date(ts: datetime.datetime) -> str:
@@ -97,11 +103,12 @@ def _split_members(data: bytes) -> Iterator[bytes]:
         rest = d.unused_data
 
 
-def parse_warc(data: bytes):
-    """WARC bytes → [(url, warc_ts, html)] for every response record.
-    Handles per-record gzip members, whole-file gzip, and plain
-    streams; non-response records are skipped."""
-    out = []
+def parse_warc(data: bytes
+               ) -> Iterator[Tuple[str, datetime.datetime, bytes]]:
+    """WARC bytes → (url, warc_ts, html) for every response record, in
+    file order, as a generator. Handles per-record gzip members,
+    whole-file gzip, and plain streams; non-response records are
+    skipped."""
     for payload in _split_members(bytes(data)):
         pos = 0
         while pos < len(payload):
@@ -145,8 +152,7 @@ def parse_warc(data: bytes):
                 k, _, v = line.partition(b":")
                 if k.strip().lower() == b"content-length":
                     body = body[:int(v.strip())]
-            out.append((url, ts, body))
-    return out
+            yield url, ts, body
 
 
 WARC_PAGES_SCHEMA = StructType([
@@ -160,19 +166,21 @@ def warc_pages(files: DataFrame,
                content_col: str = "content") -> DataFrame:
     """Binary WARC-file column → exploded (url, warc_ts, html) rows.
     Narrow Arrow-batched mapInPandas: one task per WARC file, no
-    shuffle; html→text extraction (analysis/htmlparse) chains
-    directly on the output."""
+    shuffle, records streamed out PAGES_PER_FRAME at a time;
+    html→text extraction (analysis/htmlparse) chains directly on the
+    output."""
 
     def gen(batches: Iterator) -> Iterator:
         import pandas as pd
 
+        cols = ["url", "warc_ts", "html"]
         for pdf in batches:
-            rows = {"url": [], "warc_ts": [], "html": []}
             for blob in pdf[content_col]:
-                for url, ts, html in parse_warc(bytes(blob or b"")):
-                    rows["url"].append(url)
-                    rows["warc_ts"].append(ts)
-                    rows["html"].append(html)
-            yield pd.DataFrame(rows)
+                records = parse_warc(bytes(blob or b""))
+                while True:
+                    frame = list(itertools.islice(records, PAGES_PER_FRAME))
+                    if not frame:
+                        break
+                    yield pd.DataFrame(frame, columns=cols)
 
     return files.select(content_col).mapInPandas(gen, WARC_PAGES_SCHEMA)

@@ -12,32 +12,46 @@ Mirrors the reference implementation (xapian-core/weight/bm25weight.cc):
 - per-posting part (get_sumpart, :162-172):
       normlen = max(doclen * len_factor, min_normlen)
       part = termweight * (k1 + 1) * wdf / (k1*(normlen*b + (1-b)) + wdf)
-- upper bound (get_maxpart, :174-191) uses the doclen lower bound and the
-  per-term wdf upper bound — the WAND pruning contract.
+- upper bound (get_maxpart, :174-191) is that part evaluated at the
+  per-term wdf upper bound and the doclen lower bound — the WAND
+  pruning contract.
 
 Defaults k1=1, k2=0, k3=1, b=0.5, min_normlen=0.5
 (include/xapian/weight.h:525-528).
 
-Driver-side scalar math is float64. The distributed per-posting part is
-rendered as Spark SQL text (`*_sql`), so the executor plans a query as
-one SQL statement (pure JVM, whole-stage codegen — no Python UDF in the
-scoring hot path, and a constant number of py4j calls to build). Each
-double constant is written with sql_double, which round-trips exactly,
-and each rendering performs the same IEEE float64 operations in the same
-order as its scalar twin.
+Each formula is written once, as plain Python arithmetic over its
+operands, and runs on three kinds of operand:
+- floats, on the driver (termweights, bounds, tests);
+- numpy arrays, in the WAND kernel;
+- `Sql`, the text of a Spark SQL DOUBLE expression, which the executor
+  plans as one statement (pure JVM, whole-stage codegen, no Python UDF
+  in the scoring hot path).
+Python applies one binary operator at a time, left to right, and `Sql`
+renders each operator as one parenthesized operation on DOUBLEs, with
+every constant written by sql_double so it parses back to the same
+bits. So all three evaluators perform the same IEEE float64 operations
+in the same order, and the scores agree bit for bit by construction.
+The functions the formulas call (maximum, where, ln, log2, power)
+dispatch the same way; only ln/log2/power may differ from libm in the
+last bit inside Spark.
 
 Weight protocol (what query.executor.Enquire calls):
 - separable weights (BM25Weight, TradWeight, BoolWeight): len_factor,
-  termweight, maxpart and sumpart on the driver; termweight_sql and
-  sumpart_sql in the plan; BM25Weight adds maxextra/sumextra_sql (k2).
+  termweight and sumpart; BM25Weight adds maxextra/sumextra (k2). The
+  executor evaluates them over `Sql` operands, the WAND kernel sumpart
+  over arrays, and get_maxpart is sumpart at (wdf upper bound, doclen
+  lower bound).
 - generalized weights (TF-IDF, the DFR family): make_sumpart(tf, cf, N,
-  avlen, ...) returns fn(wdf_sql, doclen_sql) -> SQL text of the part.
+  avlen, ...) returns fn(wdf, doclen) -> the part, over the same
+  operands.
 """
 
 from __future__ import annotations
 
 import math
 from dataclasses import dataclass
+
+import numpy as np
 
 
 def sql_double(x: float) -> str:
@@ -52,9 +66,99 @@ def sql_double(x: float) -> str:
     return f"({x!r}D)" if math.copysign(1.0, x) < 0 else f"{x!r}D"
 
 
-def _normlen_sql(doclen: str, len_factor: float, min_normlen: float) -> str:
-    return (f"greatest((CAST({doclen} AS DOUBLE) * {sql_double(len_factor)}),"
-            f" {sql_double(min_normlen)})")
+class Sql:
+    """SQL text of a DOUBLE expression. Each arithmetic or comparison
+    operator renders ONE parenthesized operation, so a formula written
+    over Sql operands evaluates, in Spark, in the order Python applies
+    its operators."""
+
+    def __init__(self, text: str):
+        self.text = text
+
+    def __add__(self, o):
+        return _op(self, "+", o)
+
+    def __radd__(self, o):
+        return _op(o, "+", self)
+
+    def __sub__(self, o):
+        return _op(self, "-", o)
+
+    def __rsub__(self, o):
+        return _op(o, "-", self)
+
+    def __mul__(self, o):
+        return _op(self, "*", o)
+
+    def __rmul__(self, o):
+        return _op(o, "*", self)
+
+    def __truediv__(self, o):
+        return _op(self, "/", o)
+
+    def __rtruediv__(self, o):
+        return _op(o, "/", self)
+
+    def __lt__(self, o):
+        return _op(self, "<", o)
+
+    def __eq__(self, o):
+        return _op(self, "=", o)
+
+
+def sql(x) -> str:
+    """SQL text of an operand: a Sql's text, or a number as a DOUBLE."""
+    return x.text if isinstance(x, Sql) else sql_double(x)
+
+
+def sql_col(name: str) -> Sql:
+    """A column as a DOUBLE operand."""
+    return Sql(f"CAST({name} AS DOUBLE)")
+
+
+def _op(a, op: str, b) -> Sql:
+    return Sql(f"({sql(a)} {op} {sql(b)})")
+
+
+def _apply(args, sql_form: str, np_fn, py_fn):
+    """One function over whichever operand kind is present: SQL text
+    when any argument is Sql, np_fn when any is an array, else py_fn."""
+    if any(isinstance(a, Sql) for a in args):
+        return Sql(sql_form.format(*map(sql, args)))
+    if any(isinstance(a, np.ndarray) for a in args):
+        return np_fn(*args)
+    return py_fn(*args)
+
+
+def _py_log(name: str, x: float) -> float:
+    """math.<name>(x), looked up per call (tests substitute Spark's ln
+    for math.log). libm raises at x <= 0; give -inf and NaN there as
+    numpy does, so a float formula can compute a branch where()
+    discards."""
+    if x > 0:
+        return getattr(math, name)(x)
+    return -math.inf if x == 0 else math.nan
+
+
+def maximum(a, b):
+    return _apply((a, b), "greatest({}, {})", np.maximum, max)
+
+
+def where(cond, a, b):
+    return _apply((cond, a, b), "CASE WHEN {} THEN {} ELSE {} END",
+                  np.where, lambda c, x, y: x if c else y)
+
+
+def ln(x):
+    return _apply((x,), "ln({})", np.log, lambda v: _py_log("log", v))
+
+
+def log2(x):
+    return _apply((x,), "log2({})", np.log2, lambda v: _py_log("log2", v))
+
+
+def power(x, y):
+    return _apply((x, y), "power({}, {})", np.power, math.pow)
 
 
 @dataclass(frozen=True)
@@ -70,90 +174,40 @@ class BM25Weight:
             return 0.0
         return 1.0 / average_length if average_length != 0 else 0.0
 
-    def termweight(
-        self, termfreq: int, collection_size: int, wqf: int = 1,
-        factor: float = 1.0,
-    ) -> float:
-        """The per-term document-independent weight (bm25weight.cc init)."""
+    def termweight(self, termfreq, collection_size: int, wqf: int = 1,
+                   factor: float = 1.0):
+        """The per-term document-independent weight (bm25weight.cc
+        init). termfreq is a Sql operand for the one case where it is
+        computed inside the plan (the synonym node's exact unioned
+        docfreq), which keeps query compilation free of driver-side
+        count() jobs."""
         tw = (collection_size - termfreq + 0.5) / (termfreq + 0.5)
-        if tw < 2.0:
-            tw = tw * 0.5 + 1.0
-        tw = math.log(tw) * factor
+        tw = where(tw < 2.0, tw * 0.5 + 1.0, tw)
+        tw = ln(tw) * factor
         if self.k3 != 0:
-            tw *= (self.k3 + 1.0) * wqf / (self.k3 + wqf)
+            tw = tw * ((self.k3 + 1.0) * wqf / (self.k3 + wqf))
         return tw
 
-    def termweight_sql(
-        self, termfreq: str, collection_size: int, wqf: int = 1,
-        factor: float = 1.0,
-    ) -> str:
-        """SQL twin of termweight(), for the one case where the
-        termfreq is itself computed inside the plan (the synonym
-        node's exact unioned docfreq) — keeps query compilation free
-        of driver-side count() jobs. Spark's ln may differ from libm's
-        log in the last bit; every other operation is identical."""
-        tf = f"CAST({termfreq} AS DOUBLE)"
-        tw = (f"((({sql_double(collection_size)} - {tf}) + 0.5D)"
-              f" / ({tf} + 0.5D))")
-        tw = f"CASE WHEN {tw} < 2.0D THEN (({tw} * 0.5D) + 1.0D) ELSE {tw} END"
-        tw = f"(ln({tw}) * {sql_double(factor)})"
-        if self.k3 != 0:
-            k3_part = (self.k3 + 1.0) * wqf / (self.k3 + wqf)
-            tw = f"({tw} * {sql_double(k3_part)})"
-        return tw
+    def _normlen(self, doclen, len_factor: float):
+        return maximum(doclen * len_factor, self.min_normlen)
 
-    def sumpart_sql(
-        self, termweight: str, wdf: str, doclen: str, len_factor: float,
-    ) -> str:
-        """get_sumpart as SQL text over the given SQL expressions:
-        ((tw * (k1+1)) * wdf) / (k1 * (normlen*b + (1-b)) + wdf)."""
-        wdf_d = f"CAST({wdf} AS DOUBLE)"
-        normlen = _normlen_sql(doclen, len_factor, self.min_normlen)
-        denom = (f"(({sql_double(self.k1)} * (({normlen} * "
-                 f"{sql_double(self.b)}) + {sql_double(1.0 - self.b)}))"
-                 f" + {wdf_d})")
-        return (f"((({termweight} * {sql_double(self.k1 + 1.0)})"
-                f" * {wdf_d}) / {denom})")
-
-    def sumpart(
-        self, termweight: float, wdf: int, doclen: float, len_factor: float
-    ) -> float:
-        """Scalar twin of sumpart_sql (tests / WAND kernel)."""
-        normlen = max(doclen * len_factor, self.min_normlen)
-        denom = self.k1 * (normlen * self.b + (1.0 - self.b)) + wdf
+    def sumpart(self, termweight, wdf, doclen, len_factor: float):
+        """get_sumpart: ((tw * (k1+1)) * wdf) / (k1 * (normlen*b +
+        (1-b)) + wdf). At (wdf upper bound, doclen lower bound) it is
+        get_maxpart, for every k1/b case."""
+        denom = (self.k1 * (self._normlen(doclen, len_factor) * self.b
+                            + (1.0 - self.b)) + wdf)
         return termweight * (self.k1 + 1.0) * wdf / denom
-
-    def maxpart(
-        self, termweight: float, wdf_upper: int, doclen_lower: float,
-        len_factor: float,
-    ) -> float:
-        """get_maxpart — never underestimates any sumpart of the term."""
-        denom = float(wdf_upper)
-        if self.k1 != 0.0:
-            if self.b != 0.0:
-                normlen_lb = max(doclen_lower * len_factor, self.min_normlen)
-                denom += self.k1 * (normlen_lb * self.b + (1.0 - self.b))
-            else:
-                denom += self.k1
-        return termweight * (self.k1 + 1.0) * wdf_upper / denom
 
     def maxextra(self) -> float:
         return self.k2
 
-    def sumextra_sql(self, doclen: str, len_factor: float,
-                     query_length: int) -> str:
+    def sumextra(self, doclen, len_factor: float, query_length: int):
         """get_sumextra (bm25weight.cc:203-208): the k2 per-document
         extra weight, added once per matching doc
         (ExtraWeightPostList, matcher/localsubmatch.cc:92-96)."""
-        num = 2.0 * self.k2 * query_length
-        normlen = _normlen_sql(doclen, len_factor, self.min_normlen)
-        return f"({sql_double(num)} / (1.0D + {normlen}))"
-
-    def sumextra(self, doclen: float, len_factor: float,
-                 query_length: int) -> float:
-        """Scalar twin of sumextra_sql."""
-        num = 2.0 * self.k2 * query_length
-        return num / (1.0 + max(doclen * len_factor, self.min_normlen))
+        return (2.0 * self.k2 * query_length
+                / (1.0 + self._normlen(doclen, len_factor)))
 
 
 @dataclass(frozen=True)
@@ -185,33 +239,23 @@ class TfIdfWeight:
         idf = self._idfn(tf, N)
         w = self.normalizations[0]
 
-        def fn(wdf: str, doclen: str) -> str:
-            d = f"CAST({wdf} AS DOUBLE)"
+        def fn(wdf, doclen):
             if w == "b":
-                wdfn = f"CASE WHEN {wdf} = 0 THEN 0.0D ELSE 1.0D END"
+                wdfn = where(wdf == 0, 0.0, 1.0)
             elif w == "s":
-                wdfn = f"({d} * {d})"
+                wdfn = wdf * wdf
             elif w == "l":
-                wdfn = (f"CASE WHEN {wdf} = 0 THEN 0.0D"
-                        f" ELSE (1.0D + ln({d})) END")
+                wdfn = where(wdf == 0, 0.0, 1.0 + ln(wdf))
             else:
-                wdfn = d
-            return f"(({wdfn} * {sql_double(idf)}) * {sql_double(factor)})"
+                wdfn = wdf
+            return wdfn * idf * factor
 
         return fn
 
-    def maxextra(self) -> float:
-        return 0.0
 
-
-def _unless_zero_wdf(wdf: str, part: str) -> str:
-    return f"CASE WHEN {wdf} = 0 THEN 0.0D ELSE {part} END"
-
-
-def _wdfn_sql(wdf: str, doclen: str, cl: float) -> str:
+def _wdfn(wdf, doclen, cl: float):
     """DFR normalization 2: wdf · log2(1 + c·avlen/len)."""
-    return (f"(CAST({wdf} AS DOUBLE) * log2((1.0D + ({sql_double(cl)}"
-            f" / CAST({doclen} AS DOUBLE)))))")
+    return wdf * log2(1.0 + cl / doclen)
 
 
 @dataclass(frozen=True)
@@ -230,17 +274,12 @@ class InL2Weight:
         idf = math.log2((N + 1) / (tf + 0.5))
         cl = self.c * avlen
 
-        def fn(wdf: str, doclen: str) -> str:
-            wdfn = _wdfn_sql(wdf, doclen, cl)
-            big_l = f"(1.0D / ({wdfn} + 1.0D))"
-            return _unless_zero_wdf(
-                wdf, f"(((({sql_double(wqf)} * {wdfn}) * {big_l})"
-                     f" * {sql_double(idf)}) * {sql_double(factor)})")
+        def fn(wdf, doclen):
+            wdfn = _wdfn(wdf, doclen, cl)
+            part = wqf * wdfn * (1.0 / (wdfn + 1.0)) * idf * factor
+            return where(wdf == 0, 0.0, part)
 
         return fn
-
-    def maxextra(self) -> float:
-        return 0.0
 
 
 @dataclass(frozen=True)
@@ -270,24 +309,18 @@ class PL2Weight:
                      - p2 * wdfn_lower)
             lower_bound = wqf * p_min / (wdfn_upper + 1.0)
 
-        def fn(wdf: str, doclen: str) -> str:
-            wdfn = _wdfn_sql(wdf, doclen, cl)
-            p = (f"(({sql_double(p1)} + (({wdfn} + 0.5D) * log2({wdfn})))"
-                 f" - ({sql_double(p2)} * {wdfn}))")
-            return _unless_zero_wdf(
-                wdf, f"(((({sql_double(wqf)} * {p}) / ({wdfn} + 1.0D))"
-                     f" - {sql_double(lower_bound)}) * {sql_double(factor)})")
+        def fn(wdf, doclen):
+            wdfn = _wdfn(wdf, doclen, cl)
+            p = p1 + (wdfn + 0.5) * log2(wdfn) - p2 * wdfn
+            part = (wqf * p / (wdfn + 1.0) - lower_bound) * factor
+            return where(wdf == 0, 0.0, part)
 
         return fn
 
-    def maxextra(self) -> float:
-        return 0.0
 
-
-def _bernoulli_sql(wdfn: str, tf: int, cf: int) -> str:
+def _bernoulli(wdfn, tf: int, cf: int):
     """The Bernoulli after-effect (cf + 1) / (tf · (wdfn + 1))."""
-    return (f"({sql_double(cf + 1.0)} / ({sql_double(tf)}"
-            f" * ({wdfn} + 1.0D)))")
+    return (cf + 1.0) / (tf * (wdfn + 1.0))
 
 
 @dataclass(frozen=True)
@@ -306,17 +339,12 @@ class IfB2Weight:
         idf = math.log2((N + 1.0) / (cf + 0.5))
         cl = self.c * avlen
 
-        def fn(wdf: str, doclen: str) -> str:
-            wdfn = _wdfn_sql(wdf, doclen, cl)
-            b = _bernoulli_sql(wdfn, tf, cf)
-            return _unless_zero_wdf(
-                wdf, f"(((({wdfn} * {sql_double(wqf)}) * {b})"
-                     f" * {sql_double(idf)}) * {sql_double(factor)})")
+        def fn(wdf, doclen):
+            wdfn = _wdfn(wdf, doclen, cl)
+            part = wdfn * wqf * _bernoulli(wdfn, tf, cf) * idf * factor
+            return where(wdf == 0, 0.0, part)
 
         return fn
-
-    def maxextra(self) -> float:
-        return 0.0
 
 
 @dataclass(frozen=True)
@@ -337,17 +365,12 @@ class IneB2Weight:
         idf = math.log2((N + 1.0) / (expected + 0.5))
         cl = self.c * avlen
 
-        def fn(wdf: str, doclen: str) -> str:
-            wdfn = _wdfn_sql(wdf, doclen, cl)
-            b = _bernoulli_sql(wdfn, tf, cf)
-            return _unless_zero_wdf(
-                wdf, f"(((({wdfn} * {sql_double(idf)}) * {sql_double(wqf)})"
-                     f" * {b}) * {sql_double(factor)})")
+        def fn(wdf, doclen):
+            wdfn = _wdfn(wdf, doclen, cl)
+            part = wdfn * idf * wqf * _bernoulli(wdfn, tf, cf) * factor
+            return where(wdf == 0, 0.0, part)
 
         return fn
-
-    def maxextra(self) -> float:
-        return 0.0
 
 
 @dataclass(frozen=True)
@@ -368,38 +391,27 @@ class BB2Weight:
         base_change = math.log(2.0)
         wt = -math.log2(N - 1.0) - (1.0 / base_change)
 
-        def stirling(x, y: str) -> str:
-            return (f"((({y} + 0.5D) * log2(({sql_double(x)} / {y})))"
-                    f" + (({sql_double(x)} - {y})"
-                    f" * {sql_double(math.log2(x))}))")
+        def stirling(x: float, y):
+            return (y + 0.5) * log2(x / y) + (x - y) * math.log2(x)
 
-        def fn(wdf: str, doclen: str) -> str:
-            wdfn = _wdfn_sql(wdf, doclen, cl)
-            b = _bernoulli_sql(wdfn, tf, cf)
-            y_all = f"({sql_double(N + cf - 2.0)} - {wdfn})"
-            y_cf = f"({sql_double(cf)} - {wdfn})"
-            st = (f"({stirling(N + cf - 1.0, y_all)}"
-                  f" - {stirling(cf, y_cf)})")
-            return _unless_zero_wdf(
-                wdf, f"(({sql_double(wqf)} * ({b} * ({sql_double(wt)}"
-                     f" + {st}))) * {sql_double(factor)})")
+        def fn(wdf, doclen):
+            wdfn = _wdfn(wdf, doclen, cl)
+            st = (stirling(N + cf - 1.0, (N + cf - 2.0) - wdfn)
+                  - stirling(cf, cf - wdfn))
+            part = wqf * (_bernoulli(wdfn, tf, cf) * (wt + st)) * factor
+            return where(wdf == 0, 0.0, part)
 
         return fn
 
-    def maxextra(self) -> float:
-        return 0.0
 
-
-def _dfr_info_sql(d: str, ln: str, avlen: float, nf: float) -> str:
+def _dfr_info(wdf, doclen, avlen: float, nf: float):
     """d·log2((d·avlen/len)·N/cf), shared by DLH and DPH."""
-    return (f"({d} * log2(((({d} * {sql_double(avlen)}) / {ln})"
-            f" * {sql_double(nf)})))")
+    return wdf * log2(wdf * avlen / doclen * nf)
 
 
-def _dfr_tail_sql(d: str, r: str) -> str:
+def _dfr_tail(wdf, r):
     """0.5·log2(2π·d·(1 - r)), shared by DLH and DPH."""
-    return (f"(0.5D * log2((({sql_double(2.0 * math.pi)} * {d})"
-            f" * (1.0D - {r}))))")
+    return 0.5 * log2(2.0 * math.pi * wdf * (1.0 - r))
 
 
 @dataclass(frozen=True)
@@ -419,21 +431,14 @@ class DLHWeight:
         ) / (wdf_upper + 0.5) if wdf_upper else 0.0
         lower_bound = wqf * min_weight
 
-        def fn(wdf: str, doclen: str) -> str:
-            d = f"CAST({wdf} AS DOUBLE)"
-            ln = f"CAST({doclen} AS DOUBLE)"
-            r = f"({d} / {ln})"
-            wt = (f"((({_dfr_info_sql(d, ln, avlen, nf)}"
-                  f" + (({ln} - {d}) * log2((1.0D - {r}))))"
-                  f" + {_dfr_tail_sql(d, r)}) / ({d} + 0.5D))")
-            return _unless_zero_wdf(
-                wdf, f"((({sql_double(wqf)} * {wt})"
-                     f" - {sql_double(lower_bound)}) * {sql_double(factor)})")
+        def fn(wdf, doclen):
+            r = wdf / doclen
+            wt = ((_dfr_info(wdf, doclen, avlen, nf)
+                   + (doclen - wdf) * log2(1.0 - r) + _dfr_tail(wdf, r))
+                  / (wdf + 0.5))
+            return where(wdf == 0, 0.0, (wqf * wt - lower_bound) * factor)
 
         return fn
-
-    def maxextra(self) -> float:
-        return 0.0
 
 
 @dataclass(frozen=True)
@@ -454,21 +459,14 @@ class DPHWeight:
             + 0.5 * math.log2(2.0 * math.pi * wdf_lower / doclen_upper))
         lower_bound = wqf * min_weight
 
-        def fn(wdf: str, doclen: str) -> str:
-            d = f"CAST({wdf} AS DOUBLE)"
-            ln = f"CAST({doclen} AS DOUBLE)"
-            r = f"({d} / {ln})"
-            norm = f"(power((1.0D - {r}), 2.0D) / ({d} + 1.0D))"
-            wt = (f"({norm} * ({_dfr_info_sql(d, ln, avlen, nf)}"
-                  f" + {_dfr_tail_sql(d, r)}))")
-            return _unless_zero_wdf(
-                wdf, f"((({sql_double(wqf)} * {wt})"
-                     f" - {sql_double(lower_bound)}) * {sql_double(factor)})")
+        def fn(wdf, doclen):
+            r = wdf / doclen
+            norm = power(1.0 - r, 2.0) / (wdf + 1.0)
+            wt = norm * (_dfr_info(wdf, doclen, avlen, nf)
+                         + _dfr_tail(wdf, r))
+            return where(wdf == 0, 0.0, (wqf * wt - lower_bound) * factor)
 
         return fn
-
-    def maxextra(self) -> float:
-        return 0.0
 
 
 @dataclass(frozen=True)
@@ -482,51 +480,15 @@ class BoolWeight:
     def termweight(self, termfreq, collection_size, wqf=1, factor=1.0):
         return 0.0
 
-    def termweight_sql(self, termfreq, collection_size, wqf=1,
-                       factor=1.0) -> str:
-        return "0.0D"
-
-    def sumpart_sql(self, termweight, wdf, doclen, len_factor) -> str:
-        return "0.0D"
-
     def sumpart(self, termweight, wdf, doclen, len_factor) -> float:
         return 0.0
 
-    def maxpart(self, termweight, wdf_upper, doclen_lower,
-                len_factor) -> float:
-        return 0.0
 
-
-@dataclass(frozen=True)
-class TradWeight:
+class TradWeight(BM25Weight):
     """Traditional probabilistic weighting (weight/tradweight.cc):
     BM25(k1=k, k2=0, k3=0, b=1, min_normlen=0) is the exact equivalence
     the reference documents (weight.h: 'TradWeight(k) is equivalent to
     BM25Weight(k, 0, 0, 1, 0)')."""
 
-    k: float = 1.0
-
-    def _bm25(self) -> BM25Weight:
-        return BM25Weight(self.k, 0.0, 0.0, 1.0, 0.0)
-
-    def len_factor(self, average_length: float) -> float:
-        return self._bm25().len_factor(average_length)
-
-    def termweight(self, termfreq, collection_size, wqf=1, factor=1.0):
-        return self._bm25().termweight(termfreq, collection_size, wqf,
-                                       factor)
-
-    def termweight_sql(self, termfreq, collection_size, wqf=1,
-                       factor=1.0) -> str:
-        return self._bm25().termweight_sql(termfreq, collection_size,
-                                           wqf, factor)
-
-    def sumpart_sql(self, termweight, wdf, doclen, len_factor) -> str:
-        return self._bm25().sumpart_sql(termweight, wdf, doclen, len_factor)
-
-    def sumpart(self, termweight, wdf, doclen, len_factor) -> float:
-        return self._bm25().sumpart(termweight, wdf, doclen, len_factor)
-
-    def maxpart(self, termweight, wdf_upper, doclen_lower, len_factor):
-        return self._bm25().maxpart(termweight, wdf_upper, doclen_lower,
-                                    len_factor)
+    def __init__(self, k: float = 1.0):
+        super().__init__(k, 0.0, 0.0, 1.0, 0.0)

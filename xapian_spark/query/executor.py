@@ -26,8 +26,9 @@ Terms, is evaluated with ONE postings scan (term IN (...)) + at most one
 shuffle (groupBy doc_id) — no joins. Its plan is built as ONE SQL
 statement over a temp view of the postings (one view per postings
 DataFrame, shared by every Enquire over it): terms go in as UTF-8 hex
-literals, each term's tw as a map(...)[term] lookup, and the weight
-renders its formula as SQL text. Building a Column tree instead costs
+literals, each term's tw as a map(...)[term] lookup, and the score is
+the weight's one formula (bm25.py) evaluated over `Sql` operands, which
+renders it as SQL text. Building a Column tree instead costs
 one py4j round trip per literal and operator (~300-600 per query,
 growing with the number of terms); the statement plus `get_mset`'s
 orderBy/limit cost a constant handful, so `get_mset` plans a flat query
@@ -55,7 +56,7 @@ from xapian_spark.index.termdict import (
     term_in_sql,
 )
 from xapian_spark.query import ops
-from xapian_spark.query.bm25 import BM25Weight, sql_double
+from xapian_spark.query.bm25 import BM25Weight, Sql, sql, sql_col, sql_double
 
 # deterministic float summation: sort the collected parts before folding
 # (fixes the summation order across shuffles/runs)
@@ -144,16 +145,16 @@ class Enquire:
 
     def _maxpart(self, term: str, stats: _QueryStats, wqf: int = 1,
                  factor: float = 1.0) -> float:
-        """Per-term upper bound (bm25weight.cc get_maxpart); the per-term
-        wdf bound is min(cf, global wdf ubound) as in
-        brass_database.cc:796-798."""
+        """Per-term upper bound (bm25weight.cc get_maxpart): the sumpart
+        at the doclen lower bound and the per-term wdf bound, which is
+        min(cf, global wdf ubound) as in brass_database.cc:796-798."""
         tf, cf = stats.termfreqs.get(term, (0, 0))
         if tf == 0:
             return 0.0
         tw = self.weight.termweight(tf, stats.collection_size, wqf, factor)
         wdf_ub = min(cf, stats.wdf_ubound) if cf else stats.wdf_ubound
         lf = self.weight.len_factor(stats.average_length)
-        return self.weight.maxpart(tw, wdf_ub, stats.doclen_lbound, lf)
+        return self.weight.sumpart(tw, wdf_ub, stats.doclen_lbound, lf)
 
     # ------------------------------------------------------------------
 
@@ -180,8 +181,8 @@ class Enquire:
                     wdf_upper=wdf_ub,
                     doclen_lower=max(stats.doclen_lbound, 1),
                     doclen_upper=max(stats.doclen_ubound, 1))
-                whens.append(f"WHEN term = {sql_string(t)}"
-                             f" THEN {fn('wdf', 'doclen')}")
+                part = fn(sql_col("wdf"), sql_col("doclen"))
+                whens.append(f"WHEN term = {sql_string(t)} THEN {sql(part)}")
             score = f"CASE {' '.join(whens)} ELSE 0.0D END" if whens \
                 else "0.0D"
         else:
@@ -189,8 +190,8 @@ class Enquire:
                    for t, wqf, factor in terms}
             tw = "map({})[term]".format(", ".join(
                 f"{sql_string(t)}, {sql_double(v)}" for t, v in tws.items()))
-            score = w.sumpart_sql(tw, "wdf", "doclen",
-                                  w.len_factor(stats.average_length))
+            score = sql(w.sumpart(Sql(tw), sql_col("wdf"), sql_col("doclen"),
+                                  w.len_factor(stats.average_length)))
         cols = ", ".join(("term", "doc_id", f"{score} AS score") + keep)
         return (f"SELECT {cols} FROM {self._postings_view()}"
                 f" WHERE {term_in_sql(t for t, _w, _f in terms)}")
@@ -405,9 +406,10 @@ class Enquire:
             f" FROM {self._postings_view()} WHERE {term_in_sql(terms)}"
             " GROUP BY doc_id)")
         w = self.weight
-        tw = w.termweight_sql("_syn_tf", stats.collection_size, 1, factor)
-        score = w.sumpart_sql(tw, "wdf", "doclen",
-                              w.len_factor(stats.average_length))
+        tw = w.termweight(sql_col("_syn_tf"), stats.collection_size, 1,
+                          factor)
+        score = sql(w.sumpart(tw, sql_col("wdf"), sql_col("doclen"),
+                              w.len_factor(stats.average_length)))
         return (f"SELECT /*+ BROADCAST(t) */ doc_id, {score} AS score"
                 f" FROM ({base}) CROSS JOIN (SELECT"
                 f" CAST(count(1) AS BIGINT) AS _syn_tf FROM ({base})) t")
@@ -520,9 +522,7 @@ class Enquire:
         return len(node.terms())
 
     def _has_extra(self) -> bool:
-        w = self.weight
-        return bool(hasattr(w, "sumextra_sql")
-                    and getattr(w, "maxextra", lambda: 0)())
+        return bool(getattr(self.weight, "maxextra", lambda: 0.0)())
 
     def _with_extra(self, scored: DataFrame, query: ops.Query,
                     stats: _QueryStats) -> DataFrame:
@@ -534,7 +534,7 @@ class Enquire:
         lf = w.len_factor(stats.average_length)
         qlen = self._query_length(query)
         dl = self.index.doclens.select("doc_id", "doclen")
-        extra = F.expr(w.sumextra_sql("doclen", lf, qlen))
+        extra = F.expr(sql(w.sumextra(sql_col("doclen"), lf, qlen)))
         keep = [c for c in scored.columns
                 if c not in ("doc_id", "score")]
         return (scored.join(dl, "doc_id")

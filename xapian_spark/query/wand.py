@@ -26,10 +26,10 @@ final order breaks by docid ascending — are never pruned away.
 
 Score identity with the executor: per-doc parts are summed in ascending
 part-value order (matching executor.SUM_SCORES_SQL's array_sort + fold),
-and the sumpart arithmetic performs the identical IEEE float64
-operations in the identical order as BM25Weight.sumpart_sql, the SQL
-rendering the executor's plans use (its scalar twin is
-BM25Weight.sumpart; tests/test_weights.py checks the two bit for bit).
+and each part is the weight's one sumpart formula evaluated over numpy
+arrays — the same code the executor evaluates over SQL operands, so the
+two perform the same IEEE float64 operations in the same order by
+construction (bm25.py).
 """
 
 from __future__ import annotations
@@ -45,16 +45,6 @@ from xapian_spark.index.codec import decode_chunk
 from xapian_spark.index.segments import SegmentIndex
 from xapian_spark.index.termdict import term_in
 from xapian_spark.query.bm25 import BM25Weight
-
-
-def _sumpart_np(w: BM25Weight, tw: float, wdf: np.ndarray,
-                doclen: np.ndarray, len_factor: float) -> np.ndarray:
-    """Vectorized twin of BM25Weight.sumpart — same op order."""
-    wdf_d = wdf.astype(np.float64)
-    normlen = np.maximum(doclen.astype(np.float64) * len_factor,
-                         w.min_normlen)
-    denom = w.k1 * (normlen * w.b + (1.0 - w.b)) + wdf_d
-    return tw * (w.k1 + 1.0) * wdf_d / denom
 
 
 def _sum_parts_sorted(docs: np.ndarray, parts: np.ndarray
@@ -88,15 +78,16 @@ class _TermCursor:
         self.len_factor = len_factor
         self.dead = dead  # sorted tombstoned docids for this segment
 
-    def maxpart(self) -> float:
-        """Segment-level bound: max over chunks of the chunk bound.
+    def upper_bound(self) -> float:
+        """Segment-level maxpart: max over chunks of the chunk bound.
         get_maxpart(wdf_ub, doclen_lb) is sumpart evaluated AT
         (wdf_ub, doclen_lb) for every k1/b case (bm25weight.cc:174-191),
-        so the vectorized sumpart kernel computes all chunk bounds."""
+        so sumpart over the chunk metadata arrays gives every chunk
+        bound."""
         if not self.datas:
             return 0.0
-        return float(_sumpart_np(
-            self.weight, self.tw, self.max_wdfs, self.min_doclens,
+        return float(self.weight.sumpart(
+            self.tw, self.max_wdfs, self.min_doclens,
             self.len_factor).max())
 
     def decode(self, keep_docs: Optional[np.ndarray] = None
@@ -127,8 +118,8 @@ class _TermCursor:
             e = np.empty(0, dtype=np.int64)
             return e, e.astype(np.float64)
         ids = np.concatenate(ids_l)
-        parts = _sumpart_np(self.weight, self.tw, np.concatenate(w_l),
-                            np.concatenate(dl_l), self.len_factor)
+        parts = self.weight.sumpart(self.tw, np.concatenate(w_l),
+                                    np.concatenate(dl_l), self.len_factor)
         return ids, parts
 
 
@@ -207,9 +198,9 @@ def _segment_topk(
 
     # OR / MaxScore
     order = sorted(range(len(cursors)),
-                   key=lambda i: -cursors[i].maxpart())
+                   key=lambda i: -cursors[i].upper_bound())
     cursors = [cursors[i] for i in order]
-    maxparts = [c.maxpart() for c in cursors]
+    maxparts = [c.upper_bound() for c in cursors]
     tail_max = np.concatenate(
         (np.cumsum(maxparts[::-1])[::-1][1:], [0.0]))
 
@@ -459,7 +450,7 @@ class WandEnquire:
                         continue
                     ids, wdf, dl = hit
                     ids_l.append(ids)
-                    parts_l.append(_sumpart_np(weight, tw, wdf, dl, lf))
+                    parts_l.append(weight.sumpart(tw, wdf, dl, lf))
                 if not ids_l or (is_and and len(ids_l) < n_terms):
                     continue
                 docs = np.concatenate(ids_l)
