@@ -35,8 +35,13 @@ def disk_index(spark, tmp_path_factory):
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     idx = build_index(docs, analyzer="simple")
     path = str(tmp_path_factory.mktemp("diskidx"))
-    idx.save(path)
-    return InvertedIndex.load(spark, path)
+    idx.postings.sort("term", "doc_id").write.parquet(f"{path}/postings")
+    idx.doclens.write.parquet(f"{path}/doclens")
+    idx.term_stats.write.parquet(f"{path}/term_stats")
+    return InvertedIndex(spark.read.parquet(f"{path}/postings"),
+                         spark.read.parquet(f"{path}/doclens"),
+                         spark.read.parquet(f"{path}/term_stats"),
+                         idx.stats)
 
 
 def test_term_filter_pushed_to_parquet(disk_index):
@@ -57,14 +62,16 @@ def test_scoring_prunes_positions_column(disk_index):
 
 
 def test_flat_scoring_has_no_python_udf(disk_index):
-    enq = Enquire(disk_index)
-    df = enq.compile(ops.Or([ops.Term("batch"), ops.Term("scan"),
-                             ops.Term("spark")]))
-    plan = _plan(df)
-    assert "BatchEvalPython" not in plan
-    assert "ArrowEvalPython" not in plan
-    # and the multi-term filter reaches the scan as one In() pushdown
-    assert "In(term, [batch,scan,spark])" in plan
+    # positional checks included: phrase and NEAR plan in the JVM
+    terms = ["batch", "scan", "spark"]
+    for query in (ops.Or([ops.Term(t) for t in terms]),
+                  ops.Phrase(terms), ops.Near(terms),
+                  ops.Phrase(terms, window=4)):
+        plan = _plan(Enquire(disk_index).compile(query))
+        assert "BatchEvalPython" not in plan, query
+        assert "ArrowEvalPython" not in plan, query
+        # and the multi-term filter reaches the scan as one In() pushdown
+        assert "In(term, [batch,scan,spark])" in plan, query
 
 
 def test_single_term_topk_no_shuffle(disk_index):
@@ -160,6 +167,8 @@ def test_get_mset_plans_with_constant_py4j_calls(spark, disk_index):
         "or": ops.Or([ops.Term(t) for t in top[:3]]),
         "and": ops.And([ops.Term(a), ops.Term(b)]),
         "phrase": ops.Phrase([a, b]),
+        "near": ops.Near([a, b]),
+        "phrase_window": ops.Phrase([a, b], window=4),
         "or2": ops.Or([ops.Term(t) for t in top[:2]]),
         "or12": ops.Or([ops.Term(t) for t in top]),
     }
@@ -171,7 +180,9 @@ def test_get_mset_plans_with_constant_py4j_calls(spark, disk_index):
     assert calls["term"] <= 60, calls
     assert calls["or"] <= 60, calls
     assert calls["and"] <= 60, calls
-    assert calls["phrase"] <= 100, calls
+    # phrase and NEAR are one statement too: they plan like AND
+    assert calls["phrase"] == calls["near"] == calls["phrase_window"] \
+        == calls["and"], calls
     assert calls["or2"] == calls["or"] == calls["or12"], calls
     # and the flat plan is still a bounded top-k over one aggregation
     assert "TakeOrderedAndProject" in _plan(plans[1])

@@ -2,10 +2,13 @@
 
 import datetime
 import gzip
+import random
 
 import pytest
 
-from xapian_spark.io.warc import parse_warc, warc_pages, write_warc
+from xapian_spark.io.warc import (
+    GZIP_SLICE, parse_warc, warc_pages, write_warc,
+)
 
 
 def _recs(n):
@@ -19,6 +22,17 @@ def test_roundtrip_gzip_members_and_plain():
     recs = _recs(5)
     for gz in (True, False):
         assert list(parse_warc(write_warc(recs, gzip_members=gz))) == recs
+
+
+def test_member_larger_than_a_slice_beside_small_ones():
+    # incompressible html: its gzip member spans several decompressor
+    # slices, and the members after it start mid-slice
+    big = random.Random(0).randbytes(3 * GZIP_SLICE)
+    recs = _recs(3)
+    recs.insert(1, ("http://big.org/", datetime.datetime(2024, 3, 1), big))
+    blob = write_warc(recs)
+    assert len(blob) > 3 * GZIP_SLICE
+    assert list(parse_warc(blob)) == recs
 
 
 def test_whole_file_gzip():

@@ -17,8 +17,8 @@ Scale notes (100 TB / 10^12 docs):
 - the tokenize → explode stage is embarrassingly parallel (no shuffle);
 - the single shuffle is groupBy(term, doc_id) — AQE handles skew, and the
   segment/merge path (segments.py) salts head terms explicitly;
-- postings are written range-partitioned + sorted by (term, doc_id) so a
-  query's `term IN (...)` filter prunes row groups via parquet min/max.
+- the flat index is not persisted: SegmentIndex (segments.py) is the one
+  on-disk format, and its to_inverted_index() serves the same executor.
 """
 
 from __future__ import annotations
@@ -27,7 +27,7 @@ import re
 from dataclasses import dataclass
 from typing import Callable, Iterator, List, Optional, Tuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType, IntegerType, LongType, StringType, StructField, StructType,
@@ -234,36 +234,6 @@ class InvertedIndex:
         self.term_stats = term_stats      # term, tf, cf
         self.stats = stats
         self.docs = docs                  # optional forward/data table
-
-    # -- persistence -------------------------------------------------------
-
-    def save(self, path: str, num_buckets: int = 0) -> None:
-        (self.postings
-         .repartitionByRange(F.col("term"))
-         .sortWithinPartitions("term", "doc_id")
-         .write.mode("overwrite").parquet(f"{path}/postings"))
-        self.doclens.write.mode("overwrite").parquet(f"{path}/doclens")
-        self.term_stats.sort("term").write.mode("overwrite").parquet(
-            f"{path}/term_stats")
-        spark = self.postings.sparkSession
-        spark.createDataFrame(
-            [(self.stats.doccount, self.stats.total_doclen,
-              self.stats.doclen_lbound, self.stats.doclen_ubound,
-              self.stats.wdf_ubound)],
-            "doccount long, total_doclen long, doclen_lbound long,"
-            " doclen_ubound long, wdf_ubound long",
-        ).write.mode("overwrite").parquet(f"{path}/stats")
-
-    @classmethod
-    def load(cls, spark: SparkSession, path: str) -> "InvertedIndex":
-        postings = spark.read.parquet(f"{path}/postings")
-        doclens = spark.read.parquet(f"{path}/doclens")
-        term_stats = spark.read.parquet(f"{path}/term_stats")
-        row = spark.read.parquet(f"{path}/stats").head()
-        stats = IndexStats(row.doccount, row.total_doclen,
-                           row.doclen_lbound, row.doclen_ubound,
-                           row.wdf_ubound)
-        return cls(postings, doclens, term_stats, stats)
 
 
 def spread_input(docs: DataFrame) -> DataFrame:

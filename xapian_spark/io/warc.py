@@ -48,6 +48,9 @@ _CRLF = b"\r\n"
 # records per pandas frame warc_pages emits
 PAGES_PER_FRAME = 1000
 
+# compressed bytes fed to the gzip decompressor per call
+GZIP_SLICE = 64 * 1024
+
 
 def _warc_date(ts: datetime.datetime) -> str:
     return ts.strftime("%Y-%m-%dT%H:%M:%SZ")
@@ -81,26 +84,33 @@ def write_warc(records: Sequence[Tuple[str, datetime.datetime, bytes]],
 
 def _split_members(data: bytes) -> Iterator[bytes]:
     """Concatenated gzip members → decompressed payloads (or the raw
-    stream when not gzip). zlib.decompressobj(wbits=31) stops at each
-    member boundary and hands back the remainder via unused_data."""
+    stream when not gzip). A zlib.decompressobj(wbits=31) per member is
+    fed GZIP_SLICE-byte views of the input until it reaches the member's
+    end; the bytes it did not use (unused_data) are stepped back over,
+    so each input byte is fed about once however many members follow."""
     import zlib
 
     if data[:2] != b"\x1f\x8b":
         yield data
         return
-    rest = data
-    while rest:
-        if rest[:2] != b"\x1f\x8b":
+    view = memoryview(data)
+    pos = 0
+    while pos < len(data):
+        if data[pos:pos + 2] != b"\x1f\x8b":
             raise ValueError("WARC: garbage between gzip members")
         d = zlib.decompressobj(wbits=31)
+        parts = []
         try:
-            payload = d.decompress(rest)
+            while not d.eof and pos < len(data):
+                piece = view[pos:pos + GZIP_SLICE]
+                parts.append(d.decompress(piece))
+                pos += len(piece)
         except zlib.error as exc:
             raise ValueError(f"WARC: corrupt gzip member ({exc})")
         if not d.eof:
             raise ValueError("WARC: truncated gzip member")
-        yield payload
-        rest = d.unused_data
+        pos -= len(d.unused_data)
+        yield b"".join(parts)
 
 
 def parse_warc(data: bytes

@@ -12,8 +12,9 @@ Spark restatement of the reference match
   (or inner joins for heterogeneous children), OR → groupBy-sum,
   AND_NOT → left_anti, AND_MAYBE → left join + coalesce, XOR → odd count,
   FILTER → semi join, SYNONYM → wdf-sum scored as one term,
-  MAX → groupBy-max, PHRASE/NEAR → AND + positions post-filter (the same
-  "positional filters deferred" shape as api/queryinternal.cc:293-355).
+  MAX → groupBy-max, PHRASE/NEAR → AND + a positions filter in SQL (the
+  same "positional filters deferred" shape as
+  api/queryinternal.cc:293-355).
 - the bounded-heap top-k (:782-843) = ORDER BY score DESC, doc_id
   LIMIT k, which Spark executes as TakeOrderedAndProject — a
   per-partition bounded heap + driver merge, i.e. the same algorithm
@@ -33,9 +34,10 @@ one py4j round trip per literal and operator (~300-600 per query,
 growing with the number of terms); the statement plus `get_mset`'s
 orderBy/limit cost a constant handful, so `get_mset` plans a flat query
 with at most 60 py4j calls whatever its term count (tests/test_plans.py
-pins this). Phrase/Near build their candidate
-aggregation the same way and add the positional check as one DataFrame
-filter. Deep trees (AndNot, Filter, AndMaybe, Xor, nested operators)
+pins this). Phrase/Near are one statement too: the candidate
+aggregation gathers one position list per element and a WHERE over SQL
+higher-order functions checks the window, so no query runs a Python
+UDF. Deep trees (AndNot, Filter, AndMaybe, Xor, nested operators)
 compose DataFrames on top of these results with joins.
 """
 
@@ -273,15 +275,14 @@ class Enquire:
                              ops.Synonym)):
             return self._compile_nary(node, stats, factor)
 
-        if isinstance(node, ops.AndNot):
-            left = self.compile(node.left, stats, factor)
-            right = self._doc_set(node.right, stats)
-            return left.join(right, "doc_id", "left_anti")
-
-        if isinstance(node, ops.Filter):
-            left = self.compile(node.left, stats, factor)
-            right = self._doc_set(node.right, stats)
-            return left.join(right, "doc_id", "left_semi")
+        if isinstance(node, (ops.AndNot, ops.Filter)):
+            # the right side only selects docs: evaluate it weightless,
+            # with its own term stats (its terms are not in node.terms())
+            right = self.compile(node.right, factor=0.0).select("doc_id")
+            how = "left_anti" if isinstance(node, ops.AndNot) \
+                else "left_semi"
+            return self.compile(node.left, stats, factor).join(
+                right, "doc_id", how)
 
         if isinstance(node, ops.AndMaybe):
             left = self.compile(node.left, stats, factor)
@@ -297,12 +298,17 @@ class Enquire:
                 )
             )
 
-        if isinstance(node, (ops.Phrase, ops.Near)):
-            return self._compile_positional(node, stats, factor)
-
         if isinstance(node, ops.ValueRange):
-            return self._value_range_docs(node).select(
-                "doc_id", F.lit(0.0).alias("score"))
+            docs = self.index.docs
+            if docs is None:
+                raise ValueError("ValueRange requires index.docs")
+            cond = F.lit(True)
+            if node.lo is not None:
+                cond = cond & (F.col(node.column) >= F.lit(node.lo))
+            if node.hi is not None:
+                cond = cond & (F.col(node.column) <= F.lit(node.hi))
+            return docs.filter(cond).select(
+                F.col("doc_id").cast("long"), F.lit(0.0).alias("score"))
 
         if isinstance(node, ops.PostingSourceQuery):
             return node.source.select(
@@ -318,32 +324,12 @@ class Enquire:
             return self._maxpart(node.term, stats, node.wqf)
         return sum(self._maxpart(t, stats) for t in node.terms())
 
-    def _doc_set(self, node: ops.Query, stats: _QueryStats) -> DataFrame:
-        """Boolean (weightless) evaluation → distinct doc_id frame."""
-        if isinstance(node, ops.Term):
-            return (self.index.postings
-                    .filter(F.col("term") == node.term)
-                    .select("doc_id"))
-        if isinstance(node, ops.ValueRange):
-            return self._value_range_docs(node)
-        return self.compile(node, stats, factor=0.0).select("doc_id")
-
-    def _value_range_docs(self, node: ops.ValueRange) -> DataFrame:
-        docs = self.index.docs
-        if docs is None:
-            raise ValueError("ValueRange requires index.docs")
-        cond = F.lit(True)
-        if node.lo is not None:
-            cond = cond & (F.col(node.column) >= F.lit(node.lo))
-        if node.hi is not None:
-            cond = cond & (F.col(node.column) <= F.lit(node.hi))
-        return docs.filter(cond).select(F.col("doc_id").cast("long"))
-
     def _sql(self, node: ops.Query, stats: _QueryStats,
              factor: float) -> Optional[str]:
         """SQL text of the (doc_id, score) relation of a node that plans
         as ONE statement over the postings view — a Term, a flat node,
-        MatchNothing, or a ScaleWeight of one — else None."""
+        a Phrase/Near, MatchNothing, or a ScaleWeight of one — else
+        None."""
         if isinstance(node, ops.ScaleWeight):
             return self._sql(node.child, stats, factor * node.factor)
         if isinstance(node, ops.MatchNothing):
@@ -355,6 +341,8 @@ class Enquire:
             return f"SELECT doc_id, score FROM ({sp})"
         if self._is_flat(node):
             return self._flat_sql(node, stats, factor)
+        if isinstance(node, (ops.Phrase, ops.Near)):
+            return self._positional_sql(node, stats, factor)
         return None
 
     def _flat_sql(self, node, stats: _QueryStats, factor: float,
@@ -438,71 +426,43 @@ class Enquire:
             agg = agg.filter(F.col("_n") % 2 == 1)
         return agg.select("doc_id", "score")
 
-    def _compile_positional(self, node, stats: _QueryStats,
-                            factor: float) -> DataFrame:
-        """PHRASE/NEAR: AND over the terms first, positional check as a
-        post-filter (the reference defers positional filters the same way,
+    def _positional_sql(self, node, stats: _QueryStats,
+                        factor: float) -> str:
+        """PHRASE/NEAR: the AND over the terms, then the positional check
+        as a WHERE over one position list per element (the reference
+        defers positional filters the same way,
         api/queryinternal.cc:293-355)."""
         # each element is a term, or a TUPLE of alternative terms (a
         # multi-prefix field in a positional context — the reference's
         # as_opwindow_query OR-per-prefix, queryparser.lemony:1605-1618)
         elems = [t if isinstance(t, tuple) else (t,)
                  for t in node.terms_]
-        terms = [t for e in elems for t in e]
         n = len(elems)
-        has_alts = any(len(e) > 1 for e in elems)
+        if not elems or any(
+                all(stats.termfreqs.get(t, (0, 0))[0] == 0 for t in e)
+                for e in elems):
+            return EMPTY_SQL
+        if n == 1 and len(elems[0]) == 1:
+            return self._sql(ops.Term(elems[0][0]), stats, factor)
         # default windows use the reference convention (stored window =
         # n_terms + w - 1, w defaulting to 10 — queryparser.lemony:1656)
-        window = node.window or (
-            n if isinstance(node, ops.Phrase) else n + 9)
-        ordered = isinstance(node, ops.Phrase)
-        if any(all(stats.termfreqs.get(t, (0, 0))[0] == 0 for t in e)
-               for e in elems):
-            return self._run(EMPTY_SQL)
-        if n == 1 and not has_alts:
-            return self.compile(ops.Term(terms[0]), stats, factor)
+        w = node.window or (n if isinstance(node, ops.Phrase) else n + 9)
 
-        present = [t for t in sorted(set(terms))
-                   if stats.termfreqs.get(t, (0, 0))[0] > 0]
+        present = sorted({t for e in elems for t in e
+                          if stats.termfreqs.get(t, (0, 0))[0] > 0})
         sp = self._scored_sql(
             [(t, 1, factor) for t in present], stats,
             keep=("positions",))
-        cand = (f"SELECT doc_id, {SUM_SCORES_SQL} AS score,"
-                " count(DISTINCT term) AS _n,"
-                " map_from_entries(collect_list(struct(term, positions)))"
-                f" AS _pos FROM ({sp}) GROUP BY doc_id")
-        if not has_alts:
-            cand = f"SELECT * FROM ({cand}) WHERE _n = {len(set(terms))}"
-
-        from pyspark.sql.functions import pandas_udf
-
-        @pandas_udf("boolean")
-        def check_udf(pos_maps):
-            import pandas as pd
-
-            out = []
-            for pos_map in pos_maps:
-                plists = []
-                ok = True
-                for e in elems:
-                    union = []
-                    for t in e:
-                        pl = pos_map.get(t)
-                        if pl is not None:
-                            union.extend(pl)
-                    ps = sorted(union)
-                    if not ps:
-                        ok = False
-                        break
-                    plists.append(ps)
-                out.append(ok and _positions_match(plists, window,
-                                                   ordered))
-            return pd.Series(out)
-
-        return (
-            self._run(cand).filter(check_udf(F.col("_pos")))
-            .select("doc_id", "score")
-        )
+        # _p[i] = the positions of any of element i's terms; empty when
+        # the doc has none of them or the index has no positions, and
+        # the window check then fails
+        lists = ", ".join(
+            f"flatten(collect_list(CASE WHEN {term_in_sql(e)}"
+            " THEN positions END))" for e in elems)
+        return (f"SELECT doc_id, score FROM (SELECT doc_id,"
+                f" {SUM_SCORES_SQL} AS score, array({lists}) AS _p"
+                f" FROM ({sp}) GROUP BY doc_id) WHERE"
+                f" {window_check_sql(n, w, isinstance(node, ops.Phrase))}")
 
     # -- the match ----------------------------------------------------------
 
@@ -769,22 +729,18 @@ class Enquire:
         return self._local_mset(out, schema)
 
 
-def _positions_match(plists: List[List[int]], window: int,
-                     ordered: bool) -> bool:
-    """True iff there's one position per list, all within `window`
-    (max-min < window), and strictly increasing when `ordered`."""
-    n = len(plists)
-
-    def rec(i: int, chosen: List[int]) -> bool:
-        if i == n:
-            return max(chosen) - min(chosen) < window
-        for p in plists[i]:
-            if ordered and chosen and p <= chosen[-1]:
-                continue
-            if chosen and max(chosen + [p]) - min(chosen + [p]) >= window:
-                continue
-            if rec(i + 1, chosen + [p]):
-                return True
-        return False
-
-    return rec(0, [])
+def window_check_sql(n: int, window, ordered: bool) -> str:
+    """SQL predicate over `_p`, an array of n position lists: one
+    position can be chosen from each list with max - min < window, in
+    strictly increasing list order when `ordered`. Never true when a
+    list is empty. `window` is rendered as given (an int literal in
+    plans)."""
+    if ordered:
+        # from each start, the least later position in each next list
+        # gives the shortest strictly increasing chain
+        return (f"exists(_p[0], p0 -> aggregate(slice(_p, 2, {n - 1}), p0,"
+                " (acc, l) -> array_min(filter(l, x -> x > acc)))"
+                f" - p0 < {window})")
+    # any choice within the window lies in [min, min + window)
+    return ("exists(flatten(_p), m -> forall(_p, l -> exists(l,"
+            f" x -> x >= m AND x < m + {window})))")
