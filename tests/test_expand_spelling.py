@@ -197,6 +197,29 @@ def test_mset_collapse_and_sort(spark):
     assert vals == sorted(vals, reverse=True)
 
 
+def test_every_mset_adds_the_extra_weight(spark):
+    # k2 != 0: collapse, value sort and cutoff rank the same scored
+    # relation as get_mset, extra weight included
+    from xapian_spark.index.build import build_index
+    from xapian_spark.query.bm25 import BM25Weight
+
+    docs = (spark.read.parquet(
+        "/root/testdata/sf0.001/documents.parquet").limit(200))
+    enq = Enquire(build_index(docs, analyzer="simple"), BM25Weight(k2=1.0))
+    q = ops.Term("batch")
+    want = {r["doc_id"]: r["score"]
+            for r in enq.get_mset(q, 0, 1000).collect()}
+    top = sorted(want.values(), reverse=True)[:10]
+    col = enq.get_mset_collapse(q, "lang", maxitems=50).collect()
+    srt = enq.get_mset_sorted(q, "n_chars", order="rel_val",
+                              maxitems=10).collect()
+    cut = enq.get_mset_cutoff(q, maxitems=10).collect()
+    assert col and len(srt) == len(cut) == 10
+    for r in col + srt + cut:
+        assert r["score"] == want[r["doc_id"]], r
+    assert [r["score"] for r in srt] == [r["score"] for r in cut] == top
+
+
 def test_parser_synonym_expansion(simpledata_index):
     from xapian_spark.query.parser import QueryParser
 

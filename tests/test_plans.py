@@ -154,14 +154,24 @@ def _py4j_calls(spark, plan):
 
 
 def test_get_mset_plans_with_constant_py4j_calls(spark, disk_index):
-    # a flat query is planned as ONE SQL statement: the py4j round
-    # trips per get_mset do not grow with the number of terms (a Column
-    # tree costs one per literal and operator: 300-600 per query)
-    enq = Enquire(disk_index)
+    # every query is planned as ONE SQL statement: the py4j round
+    # trips per get_mset do not grow with the number of terms or the
+    # size of the tree (a Column tree costs one per literal and
+    # operator: 300-600 per query)
+    from xapian_spark.query.posting_sources import (
+        value_weight_posting_source,
+    )
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    enq = Enquire(InvertedIndex(disk_index.postings, disk_index.doclens,
+                                disk_index.term_stats, disk_index.stats,
+                                docs=docs))
     top = [r["term"] for r in disk_index.term_stats.orderBy(
         F.desc("tf"), "term").limit(12).collect()]
     a, b = top[0], top[1]
-    enq.get_mset(ops.Term(a), 0, 10)  # term dict + postings view
+    ps = value_weight_posting_source(docs, "n_chars")
+    pairs = [ops.And([ops.Term(top[i]), ops.Term(top[i + 1])])
+             for i in range(0, 6, 2)]
     shapes = {
         "term": ops.Term(a),
         "or": ops.Or([ops.Term(t) for t in top[:3]]),
@@ -171,15 +181,25 @@ def test_get_mset_plans_with_constant_py4j_calls(spark, disk_index):
         "phrase_window": ops.Phrase([a, b], window=4),
         "or2": ops.Or([ops.Term(t) for t in top[:2]]),
         "or12": ops.Or([ops.Term(t) for t in top]),
+        "and_not": ops.AndNot(ops.Term(a), ops.Term(b)),
+        "filter": ops.Filter(ops.Term(a), ops.Term(b)),
+        "and_maybe": ops.AndMaybe(ops.Term(a), ops.Term(b)),
+        "xor": ops.Xor([ops.Term(t) for t in top[:3]]),
+        "match_all": ops.MatchAll(),
+        "value_range": ops.ValueRange("n_chars", 100, 300),
+        "nested2": ops.Or(pairs[:2]),
+        "nested3": ops.Or(pairs),
+        "and_maybe_source": ops.AndMaybe(ops.Term(a), ps),
     }
+    for q in shapes.values():
+        enq.get_mset(q, 0, 10)  # term dict + views
     plans, calls = [], {}
     for name, q in shapes.items():
         df, calls[name] = _py4j_calls(
             spark, lambda: enq.get_mset(q, 0, 10))
         plans.append(df)  # kept alive: no release inside a later count
-    assert calls["term"] <= 60, calls
-    assert calls["or"] <= 60, calls
-    assert calls["and"] <= 60, calls
+    assert all(n <= 60 for n in calls.values()), calls
+    assert calls["nested2"] == calls["nested3"], calls
     # phrase and NEAR are one statement too: they plan like AND
     assert calls["phrase"] == calls["near"] == calls["phrase_window"] \
         == calls["and"], calls
@@ -189,24 +209,39 @@ def test_get_mset_plans_with_constant_py4j_calls(spark, disk_index):
     assert "Join" not in _plan(plans[1])
 
 
-def _postings_views(spark):
+def _views(spark, prefix="xapian_"):
     return {t.name for t in spark.catalog.listTables()
-            if t.name.startswith("xapian_postings_")}
+            if t.name.startswith(prefix)}
 
 
 def test_enquires_over_one_index_share_one_view(spark, disk_index):
     # the SQL plans read postings through a temp view keyed to the
     # postings DataFrame, not to the Enquire: an Enquire per request
     # (or per weighting scheme) must not grow the session catalog
+    from xapian_spark.query.posting_sources import (
+        value_weight_posting_source,
+    )
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     idx = InvertedIndex(disk_index.postings.select("*"),
                         disk_index.doclens, disk_index.term_stats,
-                        disk_index.stats)
-    before = _postings_views(spark)
+                        disk_index.stats, docs=docs)
+    before = _views(spark, "xapian_postings_")
     q = ops.Or([ops.Term("batch"), ops.Term("scan")])
     rows = Enquire(idx).get_mset(q, 0, 10).collect()
     assert Enquire(idx, BM25Weight(k1=2.0)).get_mset(q, 0, 10).collect()
     assert Enquire(idx).get_mset(q, 0, 10).collect() == rows
-    assert len(_postings_views(spark) - before) == 1
+    assert len(_views(spark, "xapian_postings_") - before) == 1
+    # so do the views of the doclens, docs, term_stats and a posting
+    # source: a second query over them registers nothing
+    deep = ops.AndMaybe(
+        ops.Filter(ops.Or([q, ops.Wildcard("sca"), ops.MatchAll()]),
+                   ops.ValueRange("n_chars", 100, None)),
+        value_weight_posting_source(docs, "n_chars"))
+    assert Enquire(idx).get_mset(deep, 0, 10).collect()
+    views = _views(spark)
+    assert Enquire(idx).get_mset(deep, 0, 10).collect()
+    assert _views(spark) == views
 
 
 def test_synonym_scalar_is_broadcast(spark):

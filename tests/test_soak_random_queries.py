@@ -1,8 +1,9 @@
 """Soaktest-style randomized query trees (modeled on
 xapian-core/tests/soaktest/soaktest_queries.cc:181-215): seeded random
-trees over the apitest corpus, executed by the DataFrame executor and
-cross-checked against an independent pure-Python reference scorer that
-re-implements the operator semantics from first principles.
+trees over the apitest corpus and over the first 200 sf0.001 documents,
+executed by the SQL executor and cross-checked against an independent
+pure-Python reference scorer that re-implements the operator semantics
+from first principles.
 
 Also asserts the MSet-prefix property the reference soaktest checks:
 get_mset(0, k) is a prefix of get_mset(0, k+m).
@@ -11,22 +12,43 @@ get_mset(0, k) is a prefix of get_mset(0, k+m).
 import random
 
 import pytest
+from pyspark.sql import functions as F
 
 from xapian_spark.query import ops
 from xapian_spark.query.bm25 import BM25Weight
 from xapian_spark.query.executor import Enquire
 
 
-@pytest.fixture(scope="module")
-def pydata(simpledata_index):
+def _pydata(index):
     """In-memory copy: term → {doc: wdf}, doclens, stats."""
     postings = {}
     doclens = {}
-    for r in simpledata_index.postings.collect():
+    for r in index.postings.collect():
         postings.setdefault(r["term"], {})[r["doc_id"]] = r["wdf"]
         doclens[r["doc_id"]] = r["doclen"]
-    st = simpledata_index.stats
-    return postings, doclens, st
+    return postings, doclens, index.stats
+
+
+@pytest.fixture(scope="module")
+def pydata(simpledata_index):
+    return _pydata(simpledata_index)
+
+
+@pytest.fixture(scope="module")
+def sf_index(spark):
+    from xapian_spark.index.build import build_index
+
+    docs = (spark.read.parquet(
+        "/root/testdata/sf0.001/documents.parquet")
+        .select("doc_id", "text").limit(200))
+    idx = build_index(docs, text_col="text", analyzer="simple")
+    idx.postings = idx.postings.persist()
+    return idx
+
+
+@pytest.fixture(scope="module")
+def sf_pydata(sf_index):
+    return _pydata(sf_index)
 
 
 def py_eval(node, pydata, w: BM25Weight, factor=1.0):
@@ -104,7 +126,7 @@ def py_mset(node, pydata, k=30):
 def _random_tree(rng, vocab, depth=0):
     if depth >= 2 or rng.random() < 0.35:
         return ops.Term(rng.choice(vocab))
-    kind = rng.randrange(8)
+    kind = rng.randrange(10)
     kids = [_random_tree(rng, vocab, depth + 1)
             for _ in range(rng.randint(2, 3))]
     if kind == 0:
@@ -122,7 +144,23 @@ def _random_tree(rng, vocab, depth=0):
     if kind == 6:
         return ops.Synonym([ops.Term(rng.choice(vocab))
                             for _ in range(2)])
+    if kind == 7:
+        return ops.Max(kids)
+    if kind == 8:
+        return ops.Or([kids[0], ops.MatchNothing()])
     return ops.ScaleWeight(kids[0], rng.choice([0.5, 2.0]))
+
+
+def _check_random_trees(index, pydata, vocab, seed):
+    vocab = vocab + ["absentterm1", "absentterm2"]
+    rng = random.Random(seed)
+    enq = Enquire(index)
+    for _ in range(6):
+        tree = _random_tree(rng, vocab)
+        want = py_mset(tree, pydata)
+        got = [(r["doc_id"], round(r["score"], 9))
+               for r in enq.get_mset(tree, 0, 30).collect()]
+        assert got == want, tree
 
 
 @pytest.mark.parametrize("seed", [11, 23, 37, 51])
@@ -130,15 +168,17 @@ def test_random_trees_match_python_reference(simpledata_index, pydata,
                                              seed):
     vocab = sorted({r["term"] for r in
                     simpledata_index.term_stats.collect()})
-    vocab += ["absentterm1", "absentterm2"]
-    rng = random.Random(seed)
-    enq = Enquire(simpledata_index)
-    for _ in range(6):
-        tree = _random_tree(rng, vocab)
-        want = py_mset(tree, pydata)
-        got = [(r["doc_id"], round(r["score"], 9))
-               for r in enq.get_mset(tree, 0, 30).collect()]
-        assert got == want, tree
+    _check_random_trees(simpledata_index, pydata, vocab, seed)
+
+
+@pytest.mark.parametrize("seed", [11, 23, 37, 51])
+def test_random_trees_match_python_reference_sf0001(sf_index, sf_pydata,
+                                                    seed):
+    # the 40 most frequent terms, so nested And/Xor/Filter trees match
+    # documents instead of being empty
+    vocab = [r["term"] for r in sf_index.term_stats.orderBy(
+        F.desc("tf"), "term").limit(40).collect()]
+    _check_random_trees(sf_index, sf_pydata, vocab, seed)
 
 
 def test_mset_prefix_property(simpledata_index):

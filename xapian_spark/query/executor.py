@@ -9,11 +9,11 @@ Spark restatement of the reference match
   BM25Weight::init.
 - the PostList tree = a composition of relational operators (§2.2 SURVEY):
   AND → count-of-matching-children == n over one shared postings scan
-  (or inner joins for heterogeneous children), OR → groupBy-sum,
-  AND_NOT → left_anti, AND_MAYBE → left join + coalesce, XOR → odd count,
-  FILTER → semi join, SYNONYM → wdf-sum scored as one term,
-  MAX → groupBy-max, PHRASE/NEAR → AND + a positions filter in SQL (the
-  same "positional filters deferred" shape as
+  (or over a UNION ALL of heterogeneous children), OR → GROUP BY-sum,
+  AND_NOT → LEFT ANTI JOIN, AND_MAYBE → LEFT JOIN + coalesce,
+  XOR → odd count, FILTER → LEFT SEMI JOIN, SYNONYM → wdf-sum scored as
+  one term, MAX → GROUP BY-max, PHRASE/NEAR → AND + a positions filter
+  (the same "positional filters deferred" shape as
   api/queryinternal.cc:293-355).
 - the bounded-heap top-k (:782-843) = ORDER BY score DESC, doc_id
   LIMIT k, which Spark executes as TakeOrderedAndProject — a
@@ -22,28 +22,32 @@ Spark restatement of the reference match
 - tiebreak: weight desc then docid ASC (msetcmp.cc:46-55, default
   docid_order ASCENDING) — required for rank-identity.
 
-The flat single-scan path: a Term, or an And/Or/Synonym/Max over plain
-Terms, is evaluated with ONE postings scan (term IN (...)) + at most one
-shuffle (groupBy doc_id) — no joins. Its plan is built as ONE SQL
-statement over a temp view of the postings (one view per postings
-DataFrame, shared by every Enquire over it): terms go in as UTF-8 hex
-literals, each term's tw as a map(...)[term] lookup, and the score is
-the weight's one formula (bm25.py) evaluated over `Sql` operands, which
-renders it as SQL text. Building a Column tree instead costs
-one py4j round trip per literal and operator (~300-600 per query,
-growing with the number of terms); the statement plus `get_mset`'s
-orderBy/limit cost a constant handful, so `get_mset` plans a flat query
-with at most 60 py4j calls whatever its term count (tests/test_plans.py
-pins this). Phrase/Near are one statement too: the candidate
-aggregation gathers one position list per element and a WHERE over SQL
-higher-order functions checks the window, so no query runs a Python
-UDF. Deep trees (AndNot, Filter, AndMaybe, Xor, nested operators)
-compose DataFrames on top of these results with joins.
+Every Query node renders as SQL text (`Enquire._sql`), over temp views
+of the index tables and of posting sources (one view per DataFrame,
+shared by every Enquire over it), so a query of any shape plans as ONE
+statement: terms go in as UTF-8 hex literals, each term's tw as a
+map(...)[term] lookup, and the score is the weight's one formula
+(bm25.py) evaluated over `Sql` operands, which renders it as SQL text.
+Building a Column tree instead costs one py4j round trip per literal
+and operator (~300-600 per query, growing with the tree); the statement
+plus `get_mset`'s orderBy/limit cost a constant handful, so `get_mset`
+plans any query with at most 60 py4j calls whatever its size
+(tests/test_plans.py pins this).
+
+- a Term, or an And/Or/Synonym/Max over distinct plain Terms, is ONE
+  postings scan (term IN (...)) + at most one shuffle (GROUP BY doc_id);
+- Phrase/Near add one position list per element to that aggregation
+  and a WHERE over SQL higher-order functions checks the window, so no
+  query runs a Python UDF;
+- any other n-ary node UNION ALLs its children's statements tagged with
+  the child index and groups them by doc_id; AndNot/Filter are LEFT
+  ANTI/SEMI joins and AndMaybe a LEFT JOIN + coalesce.
 """
 
 from __future__ import annotations
 
 import itertools
+import math
 import weakref
 from dataclasses import dataclass
 from functools import cached_property
@@ -54,8 +58,7 @@ from pyspark.sql import functions as F
 
 from xapian_spark.index.build import InvertedIndex
 from xapian_spark.index.termdict import (
-    TermFreqs, collect_term_dict, sql_string, term_freqs, term_in,
-    term_in_sql,
+    TermFreqs, collect_term_dict, sql_string, term_freqs, term_in_sql,
 )
 from xapian_spark.query import ops
 from xapian_spark.query.bm25 import BM25Weight, Sql, sql, sql_col, sql_double
@@ -72,8 +75,38 @@ EMPTY_N_SQL = ("SELECT CAST(NULL AS BIGINT) AS doc_id,"
                " CAST(NULL AS BIGINT) AS _n WHERE false")
 
 _view_ids = itertools.count()
-_postings_views: "weakref.WeakKeyDictionary[DataFrame, str]" = \
+_views: "weakref.WeakKeyDictionary[DataFrame, str]" = \
     weakref.WeakKeyDictionary()
+
+# percent_scale's rounding slack (multimatch.cc:908-930, omenquire.cc)
+DBL_EPSILON = 2.220446049250313e-16
+
+
+def _view(df: DataFrame, kind: str) -> str:
+    """The temp view SQL plans read `df` through: registered on first
+    use as `xapian_<kind>_<n>`, a name unique to that DataFrame, and
+    shared by every Enquire and query over it — the catalog holds one
+    view per DataFrame, however many Enquires read it. (Views are never
+    dropped: dropping the view of a cached plan uncaches it.)"""
+    name = _views.get(df)
+    if name is None:
+        name = f"xapian_{kind}_{next(_view_ids)}"
+        df.createOrReplaceTempView(name)
+        _views[df] = name
+    return f"`{name}`"
+
+
+def _literal(v) -> str:
+    """A ValueRange end as a SQL literal: the parser's value-range
+    processors pass str, NumberValueRangeProcessor(column=...) float,
+    and callers int."""
+    if isinstance(v, str):
+        return sql_string(v)
+    if isinstance(v, int):
+        return str(v)
+    if isinstance(v, float):
+        return sql_double(v)
+    raise TypeError(f"cannot render a {type(v).__name__} range end")
 
 
 @dataclass
@@ -94,21 +127,6 @@ class Enquire:
     def __init__(self, index: InvertedIndex, weight: Optional[BM25Weight] = None):
         self.index = index
         self.weight = weight or BM25Weight()
-
-    def _postings_view(self) -> str:
-        """The temp view the SQL plans read index.postings through:
-        registered on first use under a name unique to that postings
-        DataFrame, and shared by every Enquire over it — the catalog
-        holds one such view per postings DataFrame, however many
-        Enquires query it. (Views are never dropped: dropping the view
-        of a cached plan uncaches it.)"""
-        postings = self.index.postings
-        name = _postings_views.get(postings)
-        if name is None:
-            name = f"xapian_postings_{next(_view_ids)}"
-            postings.createOrReplaceTempView(name)
-            _postings_views[postings] = name
-        return f"`{name}`"
 
     def _run(self, sql: str) -> DataFrame:
         return self.index.postings.sparkSession.sql(sql)
@@ -195,7 +213,8 @@ class Enquire:
             score = sql(w.sumpart(Sql(tw), sql_col("wdf"), sql_col("doclen"),
                                   w.len_factor(stats.average_length)))
         cols = ", ".join(("term", "doc_id", f"{score} AS score") + keep)
-        return (f"SELECT {cols} FROM {self._postings_view()}"
+        postings = _view(self.index.postings, "postings")
+        return (f"SELECT {cols} FROM {postings}"
                 f" WHERE {term_in_sql(t for t, _w, _f in terms)}")
 
     # -- compile -----------------------------------------------------------
@@ -209,7 +228,7 @@ class Enquire:
             return True  # synonym merges duplicates by definition
         # duplicate term leaves each contribute their own weight in the
         # reference ("beer beer" scores the term twice) — the one-scan
-        # flat path would merge them, so route through _compile_nary
+        # flat path would merge them, so route through _nary_sql
         return len({c.term for c in node.children}) == \
             len(node.children)
 
@@ -218,104 +237,7 @@ class Enquire:
         """node → DataFrame(doc_id LONG, score DOUBLE)."""
         if stats is None:
             stats = self._gather_stats(list(node.terms()))
-        sql = self._sql(node, stats, factor)
-        if sql is not None:
-            return self._run(sql)
-
-        if isinstance(node, ops.MatchAll):
-            return self.index.doclens.select(
-                "doc_id", F.lit(0.0).alias("score"))
-
-        if isinstance(node, ops.ScaleWeight):
-            return self.compile(node.child, stats, factor * node.factor)
-
-        if isinstance(node, ops.Wildcard):
-            # expand against the term dictionary, then score as one
-            # synonym group (1.3 FLAG_WILDCARD → OP_SYNONYM). The
-            # collect is always capped: a short prefix on a web-scale
-            # dictionary must not pull unbounded terms to the driver.
-            cap = node.max_expansion or ops.DEFAULT_MAX_WILDCARD_EXPANSION
-            base = self.index.term_stats.filter(
-                F.col("term").startswith(node.prefix))
-            if node.limit == "most_frequent":
-                # WILDCARD_LIMIT_MOST_FREQUENT (FLAG_PARTIAL default)
-                ts = base.orderBy(F.desc("tf"), F.asc("term")).limit(cap)
-                terms = sorted(
-                    r["term"] for r in ts.select("term").collect())
-            else:
-                ts = base.orderBy("term").limit(cap + 1)
-                terms = [r["term"] for r in ts.select("term").collect()]
-                if len(terms) > cap:
-                    if node.limit == "error":
-                        raise ops.WildcardError(
-                            f"Wildcard {node.prefix!r}* expands to more "
-                            f"than {cap} terms")
-                    terms = terms[:cap]  # WILDCARD_LIMIT_FIRST
-            if not terms:
-                return self._run(EMPTY_SQL)
-            sub = ops.Synonym([ops.Term(t) for t in terms])
-            return self.compile(sub, self._gather_stats(terms), factor)
-
-        if isinstance(node, ops.EliteSet):
-            # keep the set_size children with the highest maxweight
-            # (api/queryinternal.cc:164-174)
-            ranked = sorted(
-                enumerate(node.children),
-                key=lambda ic: -self._max_weight(ic[1], stats),
-            )
-            kept = [c for _i, c in sorted(ranked[: node.set_size])]
-            return self.compile(ops.Or(kept), stats, factor)
-
-        if isinstance(node, ops.Xor) and not node.children:
-            # emptyop semantics: an operator with no children matches
-            # nothing (api_anydb.cc emptyop1)
-            return self._run(EMPTY_SQL)
-
-        if isinstance(node, (ops.And, ops.Or, ops.Xor, ops.Max,
-                             ops.Synonym)):
-            return self._compile_nary(node, stats, factor)
-
-        if isinstance(node, (ops.AndNot, ops.Filter)):
-            # the right side only selects docs: evaluate it weightless,
-            # with its own term stats (its terms are not in node.terms())
-            right = self.compile(node.right, factor=0.0).select("doc_id")
-            how = "left_anti" if isinstance(node, ops.AndNot) \
-                else "left_semi"
-            return self.compile(node.left, stats, factor).join(
-                right, "doc_id", how)
-
-        if isinstance(node, ops.AndMaybe):
-            left = self.compile(node.left, stats, factor)
-            right = self.compile(node.right, stats, factor)
-            r = right.withColumnRenamed("score", "rscore")
-            return (
-                left.join(r, "doc_id", "left")
-                .select(
-                    "doc_id",
-                    (F.col("score")
-                     + F.coalesce(F.col("rscore"), F.lit(0.0))
-                     ).alias("score"),
-                )
-            )
-
-        if isinstance(node, ops.ValueRange):
-            docs = self.index.docs
-            if docs is None:
-                raise ValueError("ValueRange requires index.docs")
-            cond = F.lit(True)
-            if node.lo is not None:
-                cond = cond & (F.col(node.column) >= F.lit(node.lo))
-            if node.hi is not None:
-                cond = cond & (F.col(node.column) <= F.lit(node.hi))
-            return docs.filter(cond).select(
-                F.col("doc_id").cast("long"), F.lit(0.0).alias("score"))
-
-        if isinstance(node, ops.PostingSourceQuery):
-            return node.source.select(
-                F.col("doc_id").cast("long"),
-                (F.col("score") * F.lit(factor)).alias("score"))
-
-        raise TypeError(f"cannot compile {type(node).__name__}")
+        return self._run(self._sql(node, stats, factor))
 
     # -- helpers -----------------------------------------------------------
 
@@ -325,11 +247,9 @@ class Enquire:
         return sum(self._maxpart(t, stats) for t in node.terms())
 
     def _sql(self, node: ops.Query, stats: _QueryStats,
-             factor: float) -> Optional[str]:
-        """SQL text of the (doc_id, score) relation of a node that plans
-        as ONE statement over the postings view — a Term, a flat node,
-        a Phrase/Near, MatchNothing, or a ScaleWeight of one — else
-        None."""
+             factor: float) -> str:
+        """SQL text of the (doc_id, score) relation of any Query node,
+        one statement over the index views."""
         if isinstance(node, ops.ScaleWeight):
             return self._sql(node.child, stats, factor * node.factor)
         if isinstance(node, ops.MatchNothing):
@@ -343,7 +263,86 @@ class Enquire:
             return self._flat_sql(node, stats, factor)
         if isinstance(node, (ops.Phrase, ops.Near)):
             return self._positional_sql(node, stats, factor)
-        return None
+        if isinstance(node, (ops.And, ops.Or, ops.Xor, ops.Max,
+                             ops.Synonym)):
+            return self._nary_sql(node, stats, factor)
+
+        if isinstance(node, ops.EliteSet):
+            # keep the set_size children with the highest maxweight
+            # (api/queryinternal.cc:164-174)
+            ranked = sorted(
+                enumerate(node.children),
+                key=lambda ic: -self._max_weight(ic[1], stats),
+            )
+            kept = [c for _i, c in sorted(ranked[: node.set_size])]
+            return self._sql(ops.Or(kept), stats, factor)
+
+        if isinstance(node, (ops.AndNot, ops.Filter)):
+            # the right side only selects docs: evaluate it weightless,
+            # with its own term stats (its terms are not in node.terms())
+            right = self._sql(
+                node.right, self._gather_stats(list(node.right.terms())),
+                0.0)
+            how = "ANTI" if isinstance(node, ops.AndNot) else "SEMI"
+            return (f"SELECT l.doc_id, l.score"
+                    f" FROM ({self._sql(node.left, stats, factor)}) l"
+                    f" LEFT {how} JOIN ({right}) r ON l.doc_id = r.doc_id")
+
+        if isinstance(node, ops.AndMaybe):
+            return (f"SELECT l.doc_id, l.score + coalesce(r.score, 0.0D)"
+                    f" AS score FROM ({self._sql(node.left, stats, factor)})"
+                    f" l LEFT JOIN ({self._sql(node.right, stats, factor)})"
+                    " r ON l.doc_id = r.doc_id")
+
+        if isinstance(node, ops.Wildcard):
+            # expand against the term dictionary, then score as one
+            # synonym group (1.3 FLAG_WILDCARD → OP_SYNONYM)
+            terms = self._expand(node)
+            return self._sql(ops.Synonym([ops.Term(t) for t in terms]),
+                             self._gather_stats(terms), factor)
+
+        if isinstance(node, ops.MatchAll):
+            doclens = _view(self.index.doclens, "doclens")
+            return f"SELECT doc_id, 0.0D AS score FROM {doclens}"
+
+        if isinstance(node, ops.ValueRange):
+            if self.index.docs is None:
+                raise ValueError("ValueRange requires index.docs")
+            col = "`{}`".format(node.column.replace("`", "``"))
+            conds = [f"{col} {op} {_literal(v)}"
+                     for op, v in ((">=", node.lo), ("<=", node.hi))
+                     if v is not None]
+            return (f"SELECT CAST(doc_id AS BIGINT) AS doc_id,"
+                    f" 0.0D AS score FROM {_view(self.index.docs, 'docs')}"
+                    f" WHERE {' AND '.join(conds) or 'true'}")
+
+        if isinstance(node, ops.PostingSourceQuery):
+            return (f"SELECT CAST(doc_id AS BIGINT) AS doc_id,"
+                    f" score * {sql_double(factor)} AS score"
+                    f" FROM {_view(node.source, 'source')}")
+
+        raise TypeError(f"cannot compile {type(node).__name__}")
+
+    def _expand(self, node: ops.Wildcard) -> List[str]:
+        """The terms a wildcard expands to, sorted. The collect is
+        always capped: a short prefix on a web-scale dictionary must
+        not pull unbounded terms to the driver."""
+        cap = node.max_expansion or ops.DEFAULT_MAX_WILDCARD_EXPANSION
+        term_stats = _view(self.index.term_stats, "term_stats")
+        base = (f"SELECT term FROM {term_stats}"
+                f" WHERE startswith(term, {sql_string(node.prefix)})")
+        if node.limit == "most_frequent":
+            # WILDCARD_LIMIT_MOST_FREQUENT (FLAG_PARTIAL default)
+            rows = self._run(
+                f"{base} ORDER BY tf DESC, term LIMIT {cap}").collect()
+            return sorted(r["term"] for r in rows)
+        terms = [r["term"] for r in self._run(
+            f"{base} ORDER BY term LIMIT {cap + 1}").collect()]
+        if len(terms) > cap and node.limit == "error":
+            raise ops.WildcardError(
+                f"Wildcard {node.prefix!r}* expands to more than {cap}"
+                " terms")
+        return terms[:cap]  # WILDCARD_LIMIT_FIRST
 
     def _flat_sql(self, node, stats: _QueryStats, factor: float,
                   keep_n: bool = False) -> str:
@@ -387,11 +386,12 @@ class Enquire:
         whole query still runs as ONE Spark job at mset time."""
         terms = [c.term for c in node.children
                  if stats.termfreqs.get(c.term, (0, 0))[0] > 0]
+        postings = _view(self.index.postings, "postings")
         base = (
             "SELECT doc_id, least(wdf_sum, CAST(doclen AS INT)) AS wdf,"
             " doclen FROM (SELECT doc_id,"
             " CAST(sum(wdf) AS INT) AS wdf_sum, first(doclen) AS doclen"
-            f" FROM {self._postings_view()} WHERE {term_in_sql(terms)}"
+            f" FROM {postings} WHERE {term_in_sql(terms)}"
             " GROUP BY doc_id)")
         w = self.weight
         tw = w.termweight(sql_col("_syn_tf"), stats.collection_size, 1,
@@ -402,29 +402,29 @@ class Enquire:
                 f" FROM ({base}) CROSS JOIN (SELECT"
                 f" CAST(count(1) AS BIGINT) AS _syn_tf FROM ({base})) t")
 
-    def _compile_nary(self, node, stats: _QueryStats,
-                      factor: float) -> DataFrame:
-        """General n-ary composition over arbitrary child plans."""
-        children = [self.compile(c, stats, factor) for c in node.children]
-        tagged = [
-            c.select("doc_id", "score", F.lit(i).alias("_child"))
-            for i, c in enumerate(children)
-        ]
-        u = tagged[0]
-        for t in tagged[1:]:
-            u = u.unionByName(t)
-        g = u.groupBy("doc_id")
+    def _nary_sql(self, node, stats: _QueryStats, factor: float) -> str:
+        """n-ary And/Or/Xor/Max/Synonym over arbitrary children: their
+        statements tagged with the child index, UNION ALL, then one
+        GROUP BY doc_id that sums (or maxes) and counts the children
+        each doc matched."""
+        if not node.children:
+            # emptyop semantics: an operator with no children matches
+            # nothing (api_anydb.cc emptyop1)
+            return EMPTY_SQL
+        union = " UNION ALL ".join(
+            f"SELECT doc_id, score, {i} AS _child"
+            f" FROM ({self._sql(c, stats, factor)})"
+            for i, c in enumerate(node.children))
         if isinstance(node, ops.Max):
-            return g.agg(F.max("score").alias("score"))
-        agg = g.agg(
-            F.expr(SUM_SCORES_SQL).alias("score"),
-            F.count_distinct("_child").alias("_n"),
-        )
+            return (f"SELECT doc_id, max(score) AS score FROM ({union})"
+                    " GROUP BY doc_id")
+        having = ""
         if isinstance(node, ops.And):
-            agg = agg.filter(F.col("_n") == len(children))
+            having = f" HAVING count(DISTINCT _child) = {len(node.children)}"
         elif isinstance(node, ops.Xor):
-            agg = agg.filter(F.col("_n") % 2 == 1)
-        return agg.select("doc_id", "score")
+            having = " HAVING count(DISTINCT _child) % 2 = 1"
+        return (f"SELECT doc_id, {SUM_SCORES_SQL} AS score FROM ({union})"
+                f" GROUP BY doc_id{having}")
 
     def _positional_sql(self, node, stats: _QueryStats,
                         factor: float) -> str:
@@ -484,23 +484,42 @@ class Enquire:
     def _has_extra(self) -> bool:
         return bool(getattr(self.weight, "maxextra", lambda: 0.0)())
 
-    def _with_extra(self, scored: DataFrame, query: ops.Query,
-                    stats: _QueryStats) -> DataFrame:
-        """Add the per-document extra weight (k2 ≠ 0) once per matched
-        doc — ExtraWeightPostList (matcher/localsubmatch.cc:92-96)."""
-        w = self.weight
+    def _scored(self, query: ops.Query, keep_n: bool = False) -> str:
+        """SQL text of the scored relation (doc_id, score) every
+        get_mset* entry point ranks: the query's statement plus the
+        per-document extra weight (k2 ≠ 0), added once per matched doc
+        as ExtraWeightPostList does (matcher/localsubmatch.cc:92-96).
+
+        `keep_n` adds `_n`, the number of distinct query terms each doc
+        matches (the percent scale needs it): flat queries carry it out
+        of their one aggregation, other shapes LEFT JOIN a count over
+        the postings (NULL for a doc that matches no query term)."""
+        stats = self._gather_stats(list(query.terms()))
+        qterms = set(query.terms())
+        if not keep_n:
+            scored = self._sql(query, stats, 1.0)
+        elif (qterms and self._is_flat(query)
+                and not isinstance(query, ops.Synonym)):
+            scored = self._flat_sql(query, stats, 1.0, keep_n=True)
+        else:
+            postings = _view(self.index.postings, "postings")
+            scored = (
+                f"SELECT s.doc_id, s.score, m._n"
+                f" FROM ({self._sql(query, stats, 1.0)}) s LEFT JOIN"
+                f" (SELECT doc_id, count(DISTINCT term) AS _n"
+                f" FROM {postings} WHERE {term_in_sql(qterms)}"
+                " GROUP BY doc_id) m ON s.doc_id = m.doc_id")
         if not self._has_extra():
             return scored
-        lf = w.len_factor(stats.average_length)
-        qlen = self._query_length(query)
-        dl = self.index.doclens.select("doc_id", "doclen")
-        extra = F.expr(sql(w.sumextra(sql_col("doclen"), lf, qlen)))
-        keep = [c for c in scored.columns
-                if c not in ("doc_id", "score")]
-        return (scored.join(dl, "doc_id")
-                .select("doc_id",
-                        (F.col("score") + extra).alias("score"),
-                        *keep))
+        w = self.weight
+        extra = sql(w.sumextra(sql_col("doclen"),
+                               w.len_factor(stats.average_length),
+                               self._query_length(query)))
+        doclens = _view(self.index.doclens, "doclens")
+        n = ", _n" if keep_n else ""
+        return (f"SELECT doc_id, score + ({extra}) AS score{n}"
+                f" FROM ({scored}) JOIN (SELECT doc_id, doclen"
+                f" FROM {doclens}) USING (doc_id)")
 
     def get_mset(self, query: ops.Query, first: int = 0,
                  maxitems: int = 10, decider=None,
@@ -518,10 +537,8 @@ class Enquire:
         "asc" (default ASCENDING), "desc" (DESCENDING); DONT_CARE maps
         to ascending — with one logical collection the reference's
         DONT_CARE ordering is ascending too."""
-        stats = self._gather_stats(list(query.terms()))
         desc = docid_order == "desc"
-        scored = self._with_extra(self.compile(query, stats), query,
-                                  stats)
+        scored = self._run(self._scored(query))
         if decider is not None:
             if self.index.docs is None:
                 raise ValueError("a decider requires index.docs")
@@ -549,9 +566,7 @@ class Enquire:
         docs = self.index.docs
         if docs is None:
             raise ValueError("collapse requires index.docs")
-        stats = self._gather_stats(list(query.terms()))
-        scored = self.compile(query, stats)
-        keyed = scored.join(
+        keyed = self._run(self._scored(query)).join(
             docs.select(F.col("doc_id").cast("long").alias("doc_id"),
                         key_col), "doc_id")
         w = Window.partitionBy(key_col).orderBy(
@@ -594,9 +609,7 @@ class Enquire:
             keys = [(sort_col, reverse)]
         else:
             keys = [(c, r) for c, r in sort_col]
-        stats = self._gather_stats(list(query.terms()))
-        scored = self.compile(query, stats)
-        keyed = scored.join(
+        keyed = self._run(self._scored(query)).join(
             docs.select(F.col("doc_id").cast("long").alias("doc_id"),
                         *[c for c, _r in keys]), "doc_id")
         vals = [F.desc(c) if r else F.asc(c) for c, r in keys]
@@ -614,38 +627,14 @@ class Enquire:
                            maxitems: int, weight_cutoff: float = 0.0):
         """ONE Spark job for everything the percent/cutoff paths need:
         the top first+maxitems (score, doc_id) rows WITH `_n` = the
-        number of query terms each doc matches, collected. The old
-        shape was three jobs (internal top-1 collect, a postings scan
-        for the top doc's matched-term count, and the caller's final
-        top-k) — `_n` now rides the same top-k aggregation as a
-        doc_id join, so the whole percent computation falls out of the
-        single collected result."""
-        stats = self._gather_stats(list(query.terms()))
-        qterms = list(dict.fromkeys(query.terms()))
-        if (qterms and self._is_flat(query)
-                and not isinstance(query, ops.Synonym)):
-            # flat queries (the common shape): the aggregation already
-            # produces _n — reuse it, zero extra shuffle
-            scored = self._run(
-                self._flat_sql(query, stats, 1.0, keep_n=True))
-            scored = self._with_extra(scored, query, stats)
-        else:
-            scored = self._with_extra(self.compile(query, stats),
-                                      query, stats)
-            if qterms:
-                matched = (
-                    self.index.postings
-                    .filter(term_in(qterms))
-                    .groupBy("doc_id")
-                    .agg(F.count_distinct("term").alias("_n")))
-                scored = scored.join(matched, "doc_id", "left")
-            else:
-                scored = scored.withColumn("_n", F.lit(0))
+        number of query terms each doc matches, collected, and the
+        query's percent scale derived from them."""
+        scored = self._run(self._scored(query, keep_n=True))
         if weight_cutoff > 0:
             scored = scored.filter(F.col("score") >= weight_cutoff)
         rows = (scored.orderBy(F.desc("score"), F.asc("doc_id"))
                 .limit(first + maxitems).collect())
-        return rows, qterms
+        return rows, _percent_scale(rows, set(query.terms()))
 
     def _local_mset(self, rows, schema: str) -> DataFrame:
         """Collected top-k rows → a LOCAL DataFrame. Built via pandas/
@@ -679,19 +668,13 @@ class Enquire:
         Because results are score-descending, the percent cutoff only
         truncates the tail — applied driver-side to the one collected
         top-k, not as a second Spark job."""
-        rows, qterms = self._topk_with_matched(
+        rows, scale = self._topk_with_matched(
             query, first, maxitems, weight_cutoff)
-        if percent_cutoff and rows and rows[0]["score"] > 0 and qterms:
-            greatest_wt = rows[0]["score"]
-            matched = rows[0]["_n"] or 0
-            # a top doc carried purely by extra weight (k2) or a
-            # term-less branch gives scale 0 — the reference's
-            # percent_scale is then 0 too and no prune applies
-            if matched:
-                scale = matched / len(qterms) / greatest_wt
-                eps = 2.220446049250313e-16
-                min_wt = (percent_cutoff / 100.0 - eps) / scale
-                rows = [r for r in rows if r["score"] >= min_wt]
+        # scale 0 (see _percent_scale) means no prune, as in the
+        # reference
+        if percent_cutoff and scale:
+            min_wt = (percent_cutoff / 100.0 - DBL_EPSILON) / scale
+            rows = [r for r in rows if r["score"] >= min_wt]
         return self._local_mset(
             [(r["doc_id"], r["score"]) for r in rows[first:]],
             "doc_id long, score double")
@@ -705,28 +688,28 @@ class Enquire:
         for wt>0 (omenquire.cc convert_to_percent_internal). One Spark
         job: the percent scale derives from the collected top-k
         itself (see _topk_with_matched)."""
-        rows, qterms = self._topk_with_matched(query, first, maxitems)
-        schema = "doc_id long, score double, percent int"
-        if not rows or rows[0]["score"] <= 0:
-            return self._local_mset(
-                [(r["doc_id"], r["score"],
-                  100 if r["score"] > 0 else 0)
-                 for r in rows[first:]], schema)
-        greatest_wt = rows[0]["score"]
-        matched = rows[0]["_n"] or 0
-        percent_factor = (matched / len(qterms) / greatest_wt * 100.0
-                          if qterms else 0.0)
-        eps = 100.0 * 2.220446049250313e-16
-        import math as _math
-
+        rows, scale = self._topk_with_matched(query, first, maxitems)
+        percent_factor = scale * 100.0
         out = []
         for r in rows[first:]:
-            pct = int(_math.floor(r["score"] * percent_factor + eps))
+            pct = int(math.floor(r["score"] * percent_factor
+                                 + 100.0 * DBL_EPSILON))
             pct = min(max(pct, 0), 100)
             if pct == 0 and r["score"] > 0:
                 pct = 1
             out.append((r["doc_id"], r["score"], pct))
-        return self._local_mset(out, schema)
+        return self._local_mset(out, "doc_id long, score double, percent int")
+
+
+def _percent_scale(rows, qterms) -> float:
+    """percent_scale (multimatch.cc:893-906) of a collected top-k:
+    (distinct query terms the greatest-weight doc matches / distinct
+    query terms) / greatest_wt. 0 when nothing has positive weight, the
+    query has no terms, or the top doc matches none of them (it is
+    carried by extra weight or a term-less branch)."""
+    if not rows or not rows[0]["score"] > 0 or not qterms:
+        return 0.0
+    return (rows[0]["_n"] or 0) / len(qterms) / rows[0]["score"]
 
 
 def window_check_sql(n: int, window, ordered: bool) -> str:

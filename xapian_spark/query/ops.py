@@ -8,8 +8,8 @@ Term, And, Or, AndNot, AndMaybe, Xor, Filter, Synonym, Max, ScaleWeight,
 EliteSet, Phrase, Near, ValueRange/ValueGE/ValueLE, MatchAll, MatchNothing,
 PostingSourceQuery (external (doc_id, score) DataFrame).
 
-The tree is pure data; compilation to a DataFrame plan lives in
-executor.py.
+The tree is pure data; executor.py renders each node as SQL text and
+plans the query as one statement.
 """
 
 from __future__ import annotations
