@@ -52,3 +52,27 @@ def test_connected_components_rejects_nonpositive_max_iter(spark):
     pairs = spark.createDataFrame([(1, 2)], "doc_id_a long, doc_id_b long")
     with pytest.raises(ValueError, match="max_iter"):
         connected_components(pairs, max_iter=0)
+
+
+def test_dedup_apply(spark):
+    from xapian_spark.pipeline.dedup import (
+        deduplicate_exact, deduplicate_minhash, exact_duplicates,
+    )
+
+    docs = spark.createDataFrame(
+        [(1, "hello world"), (2, "Hello  World"), (3, "other text"),
+         (4, "hello world"), (5, "unrelated entirely")],
+        "doc_id long, text string")
+    kept = deduplicate_exact(docs)
+    assert sorted(r["doc_id"] for r in kept.collect()) == [1, 3, 5]
+    # minhash apply keeps the lowest member of each near-dup pair
+    big = spark.createDataFrame(
+        [(i, "alpha beta gamma delta epsilon zeta eta theta " +
+          ("iota" if i % 2 else "kappa")) for i in range(6)]
+        + [(10, "completely different text about something else "
+                "entirely unrelated")],
+        "doc_id long, text string")
+    kept2 = deduplicate_minhash(big, n=3, num_hashes=16, bands=8,
+                                threshold=0.5)
+    ids = sorted(r["doc_id"] for r in kept2.collect())
+    assert 10 in ids and 0 in ids and len(ids) < 7

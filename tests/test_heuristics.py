@@ -256,3 +256,13 @@ def test_mixture_null_domains_dropped_not_counted(spark):
     assert rates == {"en": 1.0}     # NULL never wins the min
     kept = mixture_sample(df, "lang").collect()
     assert {r.doc_id for r in kept} == set(range(40))
+
+
+def test_budget_alloc_null_domain_excluded(spark):
+    from xapian_spark.pipeline.heuristics import budget_mixture_alloc
+
+    docs = spark.createDataFrame(
+        [(1, "en", 10), (2, None, 10), (3, "de", 10)],
+        "doc_id long, lang string, n_chars long")
+    alloc = budget_mixture_alloc(docs, budget=40, max_epochs=2)
+    assert [d for d, _t, _a in alloc] == ["de", "en"]

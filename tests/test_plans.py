@@ -3,8 +3,7 @@
 
 - term filters reach the parquet scan (PushedFilters / partition-range
   pruning on the saved postings table)
-- column pruning: scoring never reads the positions column; metadata
-  aggregations over media tables never read the blob
+- column pruning: scoring never reads the positions column
 - the flat scoring path contains no Python UDF (BatchEvalPython) —
   BM25 is pure JVM expression work inside WholeStageCodegen
 - single-term scoring is shuffle-free (no Exchange before the top-k)
@@ -83,23 +82,6 @@ def test_single_term_topk_no_shuffle(disk_index):
     assert "TakeOrderedAndProject" in plan
     before_top = plan.split("TakeOrderedAndProject")[1]
     assert "Exchange" not in before_top, plan
-
-
-def test_media_metadata_scan_prunes_blob(spark):
-    from xapian_spark.pipeline.multimodal import (
-        media_metadata_stats, synthetic_media,
-    )
-
-    media = synthetic_media(spark, 10, kind="image")
-    path = None
-    df = media_metadata_stats(media)
-    plan = _formatted(df)
-    scans = [b for b in plan.split("\n\n") if "ReadSchema" in b
-             or "mapInPandas" in b]
-    # generator output feeds the agg; assert the projected columns
-    # exclude `data` right above the aggregation
-    assert "data" not in "".join(
-        ln for ln in plan.splitlines() if "Project" in ln), plan
 
 
 def test_value_range_pushdown(spark, tmp_path):
@@ -242,6 +224,97 @@ def test_enquires_over_one_index_share_one_view(spark, disk_index):
     views = _views(spark)
     assert Enquire(idx).get_mset(deep, 0, 10).collect()
     assert _views(spark) == views
+
+
+def test_posting_source_views_dropped_once_collected(spark, disk_index):
+    # a posting source built per request registers a view for its
+    # DataFrame; once that DataFrame is garbage-collected, the next
+    # registration drops the view, so the catalog does not grow with
+    # the number of requests
+    import gc
+
+    from xapian_spark.query.posting_sources import (
+        value_weight_posting_source,
+    )
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    enq = Enquire(disk_index)
+    for _ in range(20):
+        ps = value_weight_posting_source(docs, "n_chars")
+        enq.get_mset(ops.AndMaybe(ops.Term("batch"), ps), 0, 10).collect()
+    del ps
+    gc.collect()
+    assert len(_views(spark, "xapian_source_")) <= 2
+
+
+def test_concurrent_queries_keep_their_posting_source_views(
+        spark, disk_index):
+    # threads planning at once register and drop views concurrently:
+    # none may drop a view that another is still planning over
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    from xapian_spark.query.posting_sources import (
+        value_weight_posting_source,
+    )
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    enq = Enquire(disk_index)
+
+    def query(_):
+        ps = value_weight_posting_source(docs, "n_chars")
+        return enq.get_mset(
+            ops.AndMaybe(ops.Term("batch"), ps), 0, 10).collect()
+
+    want = query(0)
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(8) as pool:
+            got = list(pool.map(query, range(24), timeout=600))
+    finally:
+        sys.setswitchinterval(interval)
+    assert got == [want] * 24
+
+
+def test_warm_wildcard_expands_without_jobs(spark, monkeypatch):
+    # with the term dictionary held by the Enquire, wildcard expansion
+    # bisects it on the driver: no Spark job, and exactly the terms the
+    # SQL path (dictionary over TERM_DICT_CACHE_MAX) returns
+    from xapian_spark.index import termdict
+
+    words = ["café", "cafés", "cafe", "cafeteria", "cafétéria", "caf",
+             "naïve", "naïveté", "日本", "日本語", "日本人", "zebra"]
+    docs = spark.createDataFrame(
+        [(i, " ".join(words[:i % len(words) + 1]))
+         for i in range(1, 25)], "doc_id long, text string")
+    idx = build_index(docs, analyzer="xapian")
+    enq = Enquire(idx)
+    enq._expand(ops.Wildcard("caf"))  # collects the term dictionary
+    cases = [ops.Wildcard(p, max_expansion=m, limit=lim)
+             for p in ("caf", "café", "日本", "naï", "Z", "Zcaf", "", "x")
+             for m in (1, 2, 100)
+             for lim in ("first", "most_frequent", "error")]
+
+    def expand_all(e):
+        out = []
+        for w in cases:
+            try:
+                out.append(e._expand(w))
+            except ops.WildcardError:
+                out.append("error")
+        return out
+
+    tracker = spark.sparkContext.statusTracker()
+    before = len(tracker.getJobIdsForGroup(None) or [])
+    held = expand_all(enq)
+    assert len(tracker.getJobIdsForGroup(None) or []) == before
+    monkeypatch.setattr(termdict, "TERM_DICT_CACHE_MAX", 1)
+    capped = Enquire(idx)
+    assert capped._term_dict is None
+    assert expand_all(capped) == held
+    assert held[cases.index(ops.Wildcard("日本", 100, "first"))] \
+        == ["日本", "日本人", "日本語"]
 
 
 def test_synonym_scalar_is_broadcast(spark):

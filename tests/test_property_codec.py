@@ -122,54 +122,3 @@ def test_positions_stream_roundtrip(lists):
     dec = decode_positions(enc, len(norm))
     for a, b in zip(norm, dec):
         assert list(b) == (a or [])
-
-
-@given(st.binary(min_size=2, max_size=4000).map(
-    lambda b: b[:len(b) - (len(b) % 2)]),
-    st.sampled_from([1, 2]))
-@settings(max_examples=40, deadline=None)
-def test_flac_roundtrip_property(raw, channels):
-    from xapian_spark.pipeline.flac import decode_flac, encode_flac
-
-    raw = raw[:len(raw) - (len(raw) % (2 * channels))]
-    if not raw:
-        return
-    blob = encode_flac(8000, channels, raw)
-    rate, ch, pcm = decode_flac(blob)
-    assert (rate, ch, pcm) == (8000, channels, raw)
-
-
-@given(st.integers(min_value=1, max_value=40),
-       st.integers(min_value=1, max_value=40),
-       st.integers(min_value=1, max_value=8),
-       st.booleans(), st.integers(min_value=0, max_value=2**32 - 1))
-@settings(max_examples=40, deadline=None)
-def test_gif_roundtrip_property(w, h, ncolors, interlace, seed):
-    from xapian_spark.pipeline.gif import decode_gif_rgb, encode_gif
-
-    rng = np.random.default_rng(seed)
-    pal = rng.integers(0, 256, (ncolors, 3), dtype=np.uint8)
-    idx = rng.integers(0, ncolors, (h, w))
-    rgb = pal[idx].tobytes()
-    assert decode_gif_rgb(encode_gif(w, h, rgb, interlace=interlace)) \
-        == (w, h, rgb)
-
-
-@given(st.integers(min_value=1, max_value=2),
-       st.integers(min_value=1, max_value=6),
-       st.integers(min_value=0, max_value=2**32 - 1))
-@settings(max_examples=30, deadline=None)
-def test_adpcm_decode_deterministic_property(channels, blocks, seed):
-    # lossy but deterministic: decode(encode(x)) must be stable and
-    # whole-block inputs decode to exactly n_frames frames
-    from xapian_spark.pipeline.wav import decode_wav, encode_adpcm_wav
-
-    rng = np.random.default_rng(seed)
-    nf = 65 * blocks
-    s = rng.integers(-32768, 32768, nf * channels).astype("<i2")
-    blob = encode_adpcm_wav(8000, channels, s.tobytes(),
-                            samples_per_block=65)
-    r1 = decode_wav(blob)
-    r2 = decode_wav(blob)
-    assert r1 == r2
-    assert len(r1[2]) == nf * channels * 2

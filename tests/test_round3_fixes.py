@@ -252,30 +252,6 @@ def test_pack_positions_rejects_invalid_input():
         pack_positions([2, 2])
 
 
-def test_png_ihdr_probe_and_bomb_guard():
-    import struct
-    import zlib
-
-    from xapian_spark.pipeline.png import (
-        decode_png, encode_png, read_ihdr,
-    )
-
-    blob = encode_png(6, 4, bytes(6 * 4 * 3), 3)
-    assert read_ihdr(blob) == (6, 4, 3)
-    # a blob whose IDAT inflates far past what IHDR promises must
-    # raise, not balloon (decompression-bomb guard)
-    def chunk(t, b):
-        return (struct.pack(">I", len(b)) + t + b
-                + struct.pack(">I", zlib.crc32(t + b) & 0xFFFFFFFF))
-
-    ihdr = struct.pack(">IIBBBBB", 2, 2, 8, 2, 0, 0, 0)
-    bomb = (b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-            + chunk(b"IDAT", zlib.compress(bytes(10_000_000)))
-            + chunk(b"IEND", b""))
-    with pytest.raises(ValueError, match="mismatch"):
-        decode_png(bomb)
-
-
 def test_connected_components_releases_round_checkpoints(spark):
     def pids():
         return {int(k) for k in spark.sparkContext._jsc

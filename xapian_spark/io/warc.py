@@ -16,7 +16,7 @@ reader/writer (struct-free text format + gzip members):
   headers + HTTP payload, yields (url, warc_ts, html) for every
   response record, one at a time; skips request/metadata/warcinfo
   records the way a crawl consumer must. Corrupt framing raises
-  ValueError (the media-codec contract) when the parse reaches it.
+  ValueError when the parse reaches it.
 - `warc_pages(files_df)` — the Spark operator: a binary `content`
   column of whole WARC files (e.g. from spark.read.format
   ("binaryFile")) → exploded pages rows via Arrow-batched

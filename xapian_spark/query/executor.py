@@ -46,14 +46,16 @@ plans any query with at most 60 py4j calls whatever its size
 
 from __future__ import annotations
 
+import bisect
 import itertools
 import math
+import threading
 import weakref
 from dataclasses import dataclass
 from functools import cached_property
 from typing import Dict, List, Optional, Tuple
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from xapian_spark.index.build import InvertedIndex
@@ -77,6 +79,8 @@ EMPTY_N_SQL = ("SELECT CAST(NULL AS BIGINT) AS doc_id,"
 _view_ids = itertools.count()
 _views: "weakref.WeakKeyDictionary[DataFrame, str]" = \
     weakref.WeakKeyDictionary()
+_registered: Dict[str, SparkSession] = {}  # views not yet dropped
+_views_lock = threading.Lock()
 
 # percent_scale's rounding slack (multimatch.cc:908-930, omenquire.cc)
 DBL_EPSILON = 2.220446049250313e-16
@@ -86,13 +90,20 @@ def _view(df: DataFrame, kind: str) -> str:
     """The temp view SQL plans read `df` through: registered on first
     use as `xapian_<kind>_<n>`, a name unique to that DataFrame, and
     shared by every Enquire and query over it — the catalog holds one
-    view per DataFrame, however many Enquires read it. (Views are never
-    dropped: dropping the view of a cached plan uncaches it.)"""
-    name = _views.get(df)
-    if name is None:
-        name = f"xapian_{kind}_{next(_view_ids)}"
-        df.createOrReplaceTempView(name)
-        _views[df] = name
+    view per DataFrame, however many Enquires read it. Registering a
+    view first drops those whose DataFrame was garbage-collected,
+    through the session catalog: the public dropTempView would also
+    uncache a plan that a live DataFrame may share."""
+    with _views_lock:
+        name = _views.get(df)
+        if name is None:
+            for dead in _registered.keys() - set(_views.values()):
+                _registered.pop(dead)._jsparkSession.sessionState() \
+                    .catalog().dropTempView(dead)
+            name = f"xapian_{kind}_{next(_view_ids)}"
+            df.createOrReplaceTempView(name)
+            _views[df] = name
+            _registered[name] = df.sparkSession
     return f"`{name}`"
 
 
@@ -323,26 +334,46 @@ class Enquire:
 
         raise TypeError(f"cannot compile {type(node).__name__}")
 
+    @cached_property
+    def _sorted_terms(self) -> List[str]:
+        """The held term dictionary's terms in Spark's string order
+        (UTF-8 bytes, which is Python's code-point order)."""
+        return sorted(self._term_dict)
+
     def _expand(self, node: ops.Wildcard) -> List[str]:
-        """The terms a wildcard expands to, sorted. The collect is
-        always capped: a short prefix on a web-scale dictionary must
-        not pull unbounded terms to the driver."""
+        """The terms a wildcard expands to, sorted."""
         cap = node.max_expansion or ops.DEFAULT_MAX_WILDCARD_EXPANSION
-        term_stats = _view(self.index.term_stats, "term_stats")
-        base = (f"SELECT term FROM {term_stats}"
-                f" WHERE startswith(term, {sql_string(node.prefix)})")
         if node.limit == "most_frequent":
             # WILDCARD_LIMIT_MOST_FREQUENT (FLAG_PARTIAL default)
-            rows = self._run(
-                f"{base} ORDER BY tf DESC, term LIMIT {cap}").collect()
-            return sorted(r["term"] for r in rows)
-        terms = [r["term"] for r in self._run(
-            f"{base} ORDER BY term LIMIT {cap + 1}").collect()]
+            return sorted(self._prefix_terms(node.prefix, cap, by_tf=True))
+        terms = self._prefix_terms(node.prefix, cap + 1, by_tf=False)
         if len(terms) > cap and node.limit == "error":
             raise ops.WildcardError(
                 f"Wildcard {node.prefix!r}* expands to more than {cap}"
                 " terms")
         return terms[:cap]  # WILDCARD_LIMIT_FIRST
+
+    def _prefix_terms(self, prefix: str, n: int, by_tf: bool) -> List[str]:
+        """The first `n` terms starting with `prefix`, in term order or
+        (`by_tf`) by tf descending, then term: a bisect of the held term
+        dictionary (no job), or past TERM_DICT_CACHE_MAX one capped
+        collect, so a short prefix never pulls unbounded terms."""
+        tfs = self._term_dict
+        if tfs is None:
+            term_stats = _view(self.index.term_stats, "term_stats")
+            order = "tf DESC, term" if by_tf else "term"
+            return [r["term"] for r in self._run(
+                f"SELECT term FROM {term_stats}"
+                f" WHERE startswith(term, {sql_string(prefix)})"
+                f" ORDER BY {order} LIMIT {n}").collect()]
+        terms = self._sorted_terms
+        lo = bisect.bisect_left(terms, prefix)
+        if not by_tf:
+            return list(itertools.takewhile(
+                lambda t: t.startswith(prefix), terms[lo:lo + n]))
+        hi = bisect.bisect_right(terms, prefix, lo,
+                                 key=lambda t: t[:len(prefix)])
+        return sorted(terms[lo:hi], key=lambda t: (-tfs[t][0], t))[:n]
 
     def _flat_sql(self, node, stats: _QueryStats, factor: float,
                   keep_n: bool = False) -> str:
