@@ -1,35 +1,55 @@
-"""Perceptual-hash image dedup: cross-format (PNG vs JPEG re-encode)
-near-dup detection that byte hashes cannot see."""
+"""Hamming near-dup pairs over 64-bit fingerprints (SimHash): a copy of
+a text re-formatted with other case, punctuation and spacing pairs with
+its original although the exact (normalized-bytes) hash cannot see it.
+Covers the pigeonhole block join in pipeline/dedup.py."""
+
+import random
 
 import pytest
 from pyspark.sql import functions as F
 
-from xapian_spark.pipeline.multimodal import (
-    compute_phash, decode_images, image_neardup_pairs,
-    synthetic_dup_media,
+from xapian_spark.pipeline.dedup import (
+    exact_duplicates, simhash, simhash_neardup_pairs, simhash_pairs,
 )
 
 N_PAIRS = 12
+_VOCAB = [f"w{i}" for i in range(300)]
+
+
+def _texts():
+    # N_PAIRS originals, then the same texts re-formatted: ids i and
+    # i + N_PAIRS hold the same token stream
+    rng = random.Random(7)
+    originals = [" ".join(rng.choice(_VOCAB) for _ in range(60))
+                 for _ in range(N_PAIRS)]
+    copies = [",  ".join(t.upper().split(" ")) + "!" for t in originals]
+    return list(enumerate(originals + copies))
 
 
 @pytest.fixture(scope="module")
-def phashes(spark):
-    media = synthetic_dup_media(spark, n_pairs=N_PAIRS)
-    ph = compute_phash(decode_images(media, fake=False)).persist()
-    ph.count()
-    return ph
+def docs(spark):
+    return spark.createDataFrame(_texts(), "doc_id long, text string")
 
 
-def test_cross_format_pairs_exact(phashes):
+@pytest.fixture(scope="module")
+def hashes(docs):
+    sh = simhash(docs).persist()
+    sh.count()
+    return sh
+
+
+def test_cross_format_pairs_exact(docs):
     got = sorted(
-        (r["media_id_a"], r["media_id_b"])
-        for r in image_neardup_pairs(phashes, max_hamming=7).collect())
+        (r["doc_id_a"], r["doc_id_b"])
+        for r in simhash_neardup_pairs(docs, max_hamming=3).collect())
     assert got == [(i, i + N_PAIRS) for i in range(N_PAIRS)]
+    # the normalized-bytes hash sees no duplicate at all
+    assert exact_duplicates(docs).count() == 0
 
 
-def test_dup_hamming_small_nondup_large(phashes):
-    rows = {r["media_id"]: (r["phash_hi"], r["phash_lo"])
-            for r in phashes.collect()}
+def test_dup_hamming_small_nondup_large(hashes):
+    rows = {r["doc_id"]: (r["simhash_hi"], r["simhash_lo"])
+            for r in hashes.collect()}
 
     def ham(a, b):
         x = (a[0] ^ b[0]) & 0xFFFFFFFF
@@ -37,72 +57,32 @@ def test_dup_hamming_small_nondup_large(phashes):
         return bin(x).count("1") + bin(y).count("1")
 
     for i in range(N_PAIRS):
-        assert ham(rows[i], rows[i + N_PAIRS]) <= 7, i
+        assert ham(rows[i], rows[i + N_PAIRS]) <= 3, i
     for i in range(N_PAIRS):
         for j in range(i + 1, N_PAIRS):
-            assert ham(rows[i], rows[j]) > 7, (i, j)
+            assert ham(rows[i], rows[j]) > 3, (i, j)
 
 
-def test_phash_deterministic(spark, phashes):
-    media = synthetic_dup_media(spark, n_pairs=N_PAIRS)
-    again = {r["media_id"]: (r["phash_hi"], r["phash_lo"])
-             for r in compute_phash(
-                 decode_images(media, fake=False)).collect()}
-    first = {r["media_id"]: (r["phash_hi"], r["phash_lo"])
-             for r in phashes.collect()}
+def test_phash_deterministic(docs, hashes):
+    again = {r["doc_id"]: r["simhash_hex"]
+             for r in simhash(docs).collect()}
+    first = {r["doc_id"]: r["simhash_hex"] for r in hashes.collect()}
     assert again == first
 
 
-def test_identical_pixels_hash_equal(spark):
-    # same decoded pixels → identical hash (hamming 0), whatever id
-    from xapian_spark.pipeline.multimodal import synthetic_png_media
-
-    media = synthetic_png_media(spark, 1)
-    dec = decode_images(media, fake=False)
-    two = dec.union(dec.withColumn("media_id", F.lit(99).cast("long")))
-    rows = {r["media_id"]: (r["phash_hi"], r["phash_lo"])
-            for r in compute_phash(two).collect()}
+def test_identical_pixels_hash_equal(docs):
+    # same text → identical hash (hamming 0), whatever id
+    one = docs.filter("doc_id = 0")
+    two = one.union(one.withColumn("doc_id", F.lit(99).cast("long")))
+    rows = {r["doc_id"]: r["simhash_hex"] for r in simhash(two).collect()}
     assert rows[0] == rows[99]
 
 
-def test_parameter_validation(phashes):
+def test_parameter_validation(docs, hashes):
     with pytest.raises(ValueError):
-        image_neardup_pairs(phashes, max_hamming=8)
+        simhash_pairs(hashes, max_hamming=4)
     with pytest.raises(ValueError):
-        compute_phash(phashes, hash_size=4)
-
-
-def test_dct_features_separate_and_semdedup(spark):
-    # fully real pipeline: decode -> DCT descriptor -> SemDeDup keeps
-    # originals, drops re-encodes
-    import numpy as np
-
-    from xapian_spark.pipeline.multimodal import image_dct_features
-    from xapian_spark.pipeline.similarity import semdedup
-
-    media = synthetic_dup_media(spark, n_pairs=N_PAIRS)
-    feats = image_dct_features(
-        decode_images(media, fake=False)).persist()
-    V = {r["media_id"]: np.array(r["feature"], dtype=np.float64)
-         for r in feats.collect()}
-    for i in range(N_PAIRS):
-        assert float(V[i] @ V[i + N_PAIRS]) > 0.99, i
-        for j in range(i + 1, N_PAIRS):
-            assert float(V[i] @ V[j]) < 0.9, (i, j)
-    cells = feats.selectExpr("media_id AS vec_id", "0 AS cell")
-    keeps = {r["vec_id"]: r["keep"]
-             for r in semdedup(feats, threshold=0.9, cells=cells,
-                               vec_col="feature",
-                               id_col="media_id").collect()}
-    assert all(keeps[i] == (i < N_PAIRS) for i in range(2 * N_PAIRS))
-
-
-def test_dct_features_dim_validation(spark):
-    from xapian_spark.pipeline.multimodal import image_dct_features
-
-    media = synthetic_dup_media(spark, n_pairs=2)
-    with pytest.raises(ValueError):
-        image_dct_features(decode_images(media, fake=False), dim=15)
+        simhash_neardup_pairs(docs, max_hamming=-1)
 
 
 def test_high_bit_hamming_regression(spark):
@@ -116,19 +96,8 @@ def test_high_bit_hamming_regression(spark):
         (3, 0x80000000, 0x00000000),  # differs in bit 63 only
         (4, 0xFFFFFFFF, 0xFFFFFFFF),  # all bits set: far from 1/2/3
     ]
-    ph = spark.createDataFrame(
-        rows, "media_id long, phash_hi long, phash_lo long")
-    got = sorted((r["media_id_a"], r["media_id_b"], r["hamming"])
-                 for r in image_neardup_pairs(ph, max_hamming=2)
-                 .collect())
+    sh = spark.createDataFrame(
+        rows, "doc_id long, simhash_hi long, simhash_lo long")
+    got = sorted((r["doc_id_a"], r["doc_id_b"], r["hamming"])
+                 for r in simhash_pairs(sh, max_hamming=2).collect())
     assert got == [(1, 2, 1), (1, 3, 1), (2, 3, 2)]
-
-
-def test_budget_alloc_null_domain_excluded(spark):
-    from xapian_spark.pipeline.heuristics import budget_mixture_alloc
-
-    docs = spark.createDataFrame(
-        [(1, "en", 10), (2, None, 10), (3, "de", 10)],
-        "doc_id long, lang string, n_chars long")
-    alloc = budget_mixture_alloc(docs, budget=40, max_epochs=2)
-    assert [d for d, _t, _a in alloc] == ["de", "en"]

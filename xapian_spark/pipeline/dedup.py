@@ -340,11 +340,20 @@ def simhash(docs: DataFrame, text_col: str = "text",
 def simhash_neardup_pairs(docs: DataFrame, text_col: str = "text",
                           id_col: str = "doc_id",
                           max_hamming: int = 3) -> DataFrame:
-    """Near-dup pairs by SimHash hamming distance ≤ max_hamming.
+    """Near-dup pairs by SimHash hamming distance ≤ max_hamming:
+    simhash_pairs over the fingerprints of `docs`."""
+    return simhash_pairs(simhash(docs, text_col, id_col), max_hamming)
+
+
+def simhash_pairs(sh: DataFrame, max_hamming: int = 3) -> DataFrame:
+    """(doc_id_a < doc_id_b, hamming) for fingerprints
+    (doc_id, simhash_hi, simhash_lo) within max_hamming bits.
     Candidate generation: docs sharing any of the 4 16-bit blocks of the
     64-bit simhash collide (pigeonhole: ≤3 differing bits ⇒ at least one
     of 4 blocks identical) — a block-join, not a cross product."""
-    sh = simhash(docs, text_col, id_col)
+    if not 0 <= max_hamming <= 3:
+        raise ValueError(
+            "pigeonhole over 4 blocks needs max_hamming in [0, 3]")
     blocks = sh.select(
         "doc_id", "simhash_hi", "simhash_lo",
         F.explode(
