@@ -6,9 +6,12 @@
 - column pruning: scoring never reads the positions column
 - the flat scoring path contains no Python UDF (BatchEvalPython) —
   BM25 is pure JVM expression work inside WholeStageCodegen
-- single-term scoring is shuffle-free (no Exchange before the top-k)
+- single-term scoring is shuffle-free (no Exchange before the top-k),
+  and over build_index's doc-partitioned postings every flat query is
+  one shuffle-free job
 """
 
+import re
 import threading
 
 import pytest
@@ -24,15 +27,38 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _query_plan(df) -> str:
+    """The current physical plan of `df` (AQE's final plan once it has
+    run), without the plans that build the cached relations it reads."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    lines, cut = [], None
+    for line in plan.toString().splitlines():
+        depth = len(line) - len(line.lstrip(" +-:"))
+        if cut is not None and depth > cut:
+            continue
+        cut = depth if "InMemoryRelation" in line else None
+        lines.append(line)
+    return "\n".join(lines)
+
+
 def _formatted(df) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted")
 
 
 @pytest.fixture(scope="module")
-def disk_index(spark, tmp_path_factory):
+def flat_index(spark):
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    idx = build_index(docs, analyzer="simple")
+    return build_index(docs, analyzer="simple")
+
+
+@pytest.fixture(scope="module")
+def disk_index(spark, flat_index, tmp_path_factory):
+    # flat_index's postings, written sorted by term and read back: the
+    # same rows with no known partitioning
+    idx = flat_index
     path = str(tmp_path_factory.mktemp("diskidx"))
     idx.postings.sort("term", "doc_id").write.parquet(f"{path}/postings")
     idx.doclens.write.parquet(f"{path}/doclens")
@@ -82,6 +108,123 @@ def test_single_term_topk_no_shuffle(disk_index):
     assert "TakeOrderedAndProject" in plan
     before_top = plan.split("TakeOrderedAndProject")[1]
     assert "Exchange" not in before_top, plan
+
+
+def _jobs(spark, group, action):
+    """(action(), the ids of the Spark jobs it ran)."""
+    sc = spark.sparkContext
+    try:
+        sc.setJobGroup(group, group)
+        out = action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _flat_shapes(a, b, c):
+    return {
+        "term": ops.Term(a),
+        "or": ops.Or([ops.Term(a), ops.Term(b), ops.Term(c)]),
+        "and": ops.And([ops.Term(a), ops.Term(b)]),
+        "phrase": ops.Phrase([a, b]),
+        "near": ops.Near([a, b, c]),
+    }
+
+
+def test_doc_partitioned_queries_run_one_job_without_exchange(
+        spark, flat_index):
+    # build_index hash-partitions the persisted postings by doc_id, so
+    # every GROUP BY doc_id of a flat query is partition-local: each
+    # get_mset is one job (scan + score + per-partition top-k) and the
+    # driver merge, with no Exchange
+    idx = flat_index
+    enq = Enquire(idx)
+    assert enq._full_term_dict()  # the stats below gather without a job
+    shapes = _flat_shapes("table", "scan", "merge")
+    warm = {}
+    for name, q in shapes.items():
+        df = enq.get_mset(q, 0, 10)
+        warm[name], jobs = _jobs(spark, f"warm-{name}", df.collect)
+        assert warm[name], name
+        assert len(jobs) == 1, (name, jobs)
+        assert "Exchange" not in _query_plan(df), (name, _query_plan(df))
+    # a first query, before any action has materialized the cache, runs
+    # the jobs that build it and then one of its own: a grouped query
+    # runs as many jobs as a one-term scan, with no Exchange once AQE
+    # sees the cached partitioning
+    cold = {}
+    for name, q in shapes.items():
+        idx.postings.unpersist(blocking=True)
+        idx.postings.persist()
+        df = enq.get_mset(q, 0, 10)
+        rows, jobs = _jobs(spark, f"cold-{name}", df.collect)
+        assert rows == warm[name], name
+        assert "Exchange" not in _query_plan(df), (name, _query_plan(df))
+        cold[name] = len(jobs)
+    assert set(cold.values()) == {cold["term"]}, cold
+
+
+def test_and_over_unpartitioned_postings_shuffles_once(disk_index):
+    # one row per (term, doc_id), so AND counts matched terms with
+    # count(1): over postings with no known partitioning (read back
+    # from parquet) its plan shuffles once, by doc_id, not twice as
+    # a count(DISTINCT term) aggregation would
+    q = ops.And([ops.Term("table"), ops.Term("scan")])
+    for df in (Enquire(disk_index).get_mset(q, 0, 10),
+               Enquire(disk_index)._run(Enquire(disk_index)._scored(
+                   q, keep_n=True))):
+        assert len(re.findall(r"\bExchange\b", _plan(df))) == 1, _plan(df)
+
+
+def test_results_do_not_depend_on_postings_partitioning(
+        flat_index, disk_index):
+    # the same queries over the doc-partitioned postings and over the
+    # same rows read back from parquet: equal ids, order and bits
+    shapes = dict(_flat_shapes("table", "scan", "merge"))
+    shapes.update({
+        "and_not": ops.AndNot(ops.Term("table"), ops.Term("scan")),
+        "xor": ops.Xor([ops.Term(t) for t in ("table", "scan", "merge")]),
+        "synonym": ops.Synonym([ops.Term("table"), ops.Term("scan")]),
+    })
+
+    def run(idx):
+        out = {}
+        for k2 in (0.0, 1.0):
+            enq = Enquire(idx, BM25Weight(k2=k2))
+            for name, q in shapes.items():
+                out[name, k2] = [(r["doc_id"], r["score"].hex()) for r in
+                                 enq.get_mset(q, 0, 20).collect()]
+            for name in ("or", "and", "phrase"):
+                out[name, k2, "%"] = [
+                    (r["doc_id"], r["score"].hex(), r["percent"])
+                    for r in enq.get_mset_percent(
+                        shapes[name], 0, 20).collect()]
+        return out
+
+    got = run(flat_index)
+    assert all(got.values()), [k for k, v in got.items() if not v]
+    assert got == run(disk_index)
+
+
+def test_fresh_enquire_over_warm_index_runs_no_extra_jobs(
+        spark, disk_index):
+    # the term dictionary is cached on the index, not the Enquire: an
+    # Enquire built per request gathers stats and expands wildcards
+    # without collecting it again
+    q = ops.Or([ops.Term("table"), ops.Term("scan")])
+    warm = Enquire(disk_index)
+    warm.get_mset(q, 0, 10).collect()
+    want, warm_jobs = _jobs(spark, "warm-enquire",
+                            lambda: warm.get_mset(q, 0, 10).collect())
+    got, fresh_jobs = _jobs(
+        spark, "fresh-enquire",
+        lambda: Enquire(disk_index).get_mset(q, 0, 10).collect())
+    assert got == want
+    assert len(fresh_jobs) == len(warm_jobs), (fresh_jobs, warm_jobs)
+    terms, jobs = _jobs(spark, "fresh-wildcard",
+                        lambda: Enquire(disk_index)._expand(
+                            ops.Wildcard("s")))
+    assert "scan" in terms and jobs == []
 
 
 def test_value_range_pushdown(spark, tmp_path):
@@ -278,7 +421,7 @@ def test_concurrent_queries_keep_their_posting_source_views(
 
 
 def test_warm_wildcard_expands_without_jobs(spark, monkeypatch):
-    # with the term dictionary held by the Enquire, wildcard expansion
+    # with the term dictionary held by the index, wildcard expansion
     # bisects it on the driver: no Spark job, and exactly the terms the
     # SQL path (dictionary over TERM_DICT_CACHE_MAX) returns
     from xapian_spark.index import termdict
@@ -310,8 +453,9 @@ def test_warm_wildcard_expands_without_jobs(spark, monkeypatch):
     held = expand_all(enq)
     assert len(tracker.getJobIdsForGroup(None) or []) == before
     monkeypatch.setattr(termdict, "TERM_DICT_CACHE_MAX", 1)
-    capped = Enquire(idx)
-    assert capped._term_dict is None
+    capped = Enquire(InvertedIndex(idx.postings, idx.doclens,
+                                   idx.term_stats, idx.stats))
+    assert capped._full_term_dict() is None
     assert expand_all(capped) == held
     assert held[cases.index(ops.Wildcard("日本", 100, "first"))] \
         == ["日本", "日本人", "日本語"]
@@ -326,7 +470,7 @@ def test_synonym_scalar_is_broadcast(spark):
         .select("doc_id", "text").limit(200))
     idx = build_index(docs, text_col="text", analyzer="simple")
     enq = Enquire(idx)
-    enq._gather_stats(["the", "data"])  # warm the once-per-Enquire
+    enq._gather_stats(["the", "data"])  # warm the once-per-index
     # term-dict cache so only the synonym compile itself is measured
     tracker = spark.sparkContext.statusTracker()
     before = len(tracker.getJobIdsForGroup(None) or [])

@@ -2,8 +2,9 @@
 
 Spark restatement of the reference's add_document + commit path
 (xapian-core/backends/brass/brass_database.cc:1046-1099 and the Inverter,
-brass_inverter.h:45-249): tokenize → explode → groupBy(term, doc) → per-term
-posting rows; doclen = Σ wdf over ALL of a doc's terms (including Z-stems,
+brass_inverter.h:45-249): tokenize → each doc's termlist, one
+(term, wdf, positions) entry per distinct term → exploded posting rows;
+doclen = Σ wdf over ALL of a doc's terms (including Z-stems,
 brass_database.cc:1058-1071); global stats mirror brass_dbstats.h:41-61.
 
 One tokenize path, shared with the segment build (segments.py): every
@@ -15,8 +16,13 @@ per document through analyze_document inside an Arrow-batched mapInPandas
 
 Scale notes (100 TB / 10^12 docs):
 - the tokenize → explode stage is embarrassingly parallel (no shuffle);
-- the single shuffle is groupBy(term, doc_id) — AQE handles skew, and the
-  segment/merge path (segments.py) salts head terms explicitly;
+- the postings are hash-partitioned by doc_id once, at build, into as
+  many partitions as the tokenize input has. Every GROUP BY doc_id the
+  executor plans (flat OR/AND/Max, phrase and NEAR position lists,
+  synonym) and the doclens aggregation then run inside a partition, so
+  a query over the persisted postings shuffles nothing;
+- term_stats' groupBy(term) is the one aggregation that shuffles the
+  postings;
 - the flat index is not persisted: SegmentIndex (segments.py) is the one
   on-disk format, and its to_inverted_index() serves the same executor.
 """
@@ -25,6 +31,7 @@ from __future__ import annotations
 
 import re
 from dataclasses import dataclass
+from functools import cached_property
 from typing import Callable, Iterator, List, Optional, Tuple
 
 from pyspark.sql import DataFrame
@@ -32,6 +39,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType, IntegerType, LongType, StringType, StructField, StructType,
 )
+
+from xapian_spark.index.termdict import TermFreqs, collect_term_dict
 
 POSTINGS_SCHEMA = StructType([
     StructField("term", StringType(), False),
@@ -219,7 +228,12 @@ class IndexStats:
 
 
 class InvertedIndex:
-    """A built index: four DataFrames + cached scalar stats."""
+    """A built index: four DataFrames + cached scalar stats.
+
+    `postings` holds one row per (term, doc_id) for unique doc ids:
+    both builders (build_index and SegmentIndex.to_inverted_index)
+    aggregate a document's occurrences of a term into one row, so the
+    executor counts a document's matched distinct terms with count(1)."""
 
     def __init__(
         self,
@@ -235,6 +249,19 @@ class InvertedIndex:
         self.stats = stats
         self.docs = docs                  # optional forward/data table
 
+    @cached_property
+    def _term_dict(self) -> Optional[TermFreqs]:
+        """term → (tf, cf), collected once per index (one job), so every
+        Enquire over it gathers stats without a job; None past
+        termdict.TERM_DICT_CACHE_MAX."""
+        return collect_term_dict(self.term_stats)
+
+    @cached_property
+    def _sorted_terms(self) -> List[str]:
+        """The term dictionary's terms in Spark's string order (UTF-8
+        bytes, which is Python's code-point order)."""
+        return sorted(self._term_dict)
+
 
 def spread_input(docs: DataFrame) -> DataFrame:
     """Repartition a narrow input up to the session's parallelism when
@@ -242,21 +269,28 @@ def spread_input(docs: DataFrame) -> DataFrame:
     small parquet file would otherwise serialize the CPU-heavy
     tokenize into ONE task (measured 17 s single-core vs ~1 s spread
     at sf0.1). No-op at scale, where input partitions >> cores."""
-    sc = docs.sparkSession.sparkContext
-    target = sc.defaultParallelism
-    if docs.rdd.getNumPartitions() < target:
-        return docs.repartition(target)
-    return docs
+    return _spread(docs)[0]
+
+
+def _spread(docs: DataFrame) -> Tuple[DataFrame, int]:
+    """spread_input(docs) and its partition count, read from the plan
+    without running a job."""
+    target = docs.sparkSession.sparkContext.defaultParallelism
+    n = docs.rdd.getNumPartitions()
+    if n < target:
+        return docs.repartition(target), target
+    return docs, n
 
 
 def _tokenize_python(
     docs: DataFrame, id_col: str, text_col: str,
     analyzer: Callable, keep_positions: bool,
     lang_col: str = None,
-) -> DataFrame:
-    """Arrow-batched tokenize → exploded postings rows. With lang_col,
-    the analyzer is called as analyzer(text, lang) so per-row stemmer
-    selection happens inside the same vectorized batch."""
+) -> Tuple[DataFrame, int]:
+    """Arrow-batched tokenize → (exploded postings rows, the tokenize
+    input's partition count). With lang_col, the analyzer is called as
+    analyzer(text, lang) so per-row stemmer selection happens inside
+    the same vectorized batch."""
     import pandas as pd
 
     def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
@@ -283,8 +317,8 @@ def _tokenize_python(
     cols = [F.col(id_col).cast("long").alias(id_col), F.col(text_col)]
     if lang_col:
         cols.append(F.col(lang_col))
-    return spread_input(docs.select(*cols)).mapInPandas(
-        gen, POSTINGS_SCHEMA)
+    spread, n = _spread(docs.select(*cols))
+    return spread.mapInPandas(gen, POSTINGS_SCHEMA), n
 
 
 def build_index(
@@ -304,33 +338,40 @@ def build_index(
     (analyzer must accept (text, lang); default multilingual_analyzer).
     """
     fn = resolve_analyzer(analyzer, lang_col)
-    postings = _tokenize_python(docs, id_col, text_col, fn,
-                                keep_positions, lang_col=lang_col).persist()
+    tokens, n = _tokenize_python(docs, id_col, text_col, fn,
+                                 keep_positions, lang_col=lang_col)
+    # an explicit count makes this REPARTITION_BY_NUM, which AQE keeps
+    # as is: the cached postings report HashPartitioning(doc_id, n)
+    postings = tokens.repartition(n, "doc_id").persist()
 
-    # doclen = Σ wdf over the doc's full termlist (incl. Z-stems).
-    doclens = (
+    # doclen = Σ wdf over the doc's full termlist (incl. Z-stems); a doc
+    # with no terms keeps doclen 0. Partition-local: no shuffle of the
+    # postings.
+    per_doc = (
         docs.select(F.col(id_col).cast("long").alias("doc_id"))
         .join(
             postings.groupBy("doc_id").agg(
-                F.sum("wdf").cast("long").alias("doclen")),
+                F.sum("wdf").cast("long").alias("doclen"),
+                F.max("wdf").alias("wdf_max")),
             "doc_id", "left")
         .fillna(0, subset=["doclen"])
     )
+    doclens = per_doc.select("doc_id", "doclen")
 
     term_stats = postings.groupBy("term").agg(
         F.count(F.lit(1)).cast("long").alias("tf"),
         F.sum("wdf").cast("long").alias("cf"),
     )
 
-    row = doclens.agg(
+    row = per_doc.agg(
         F.count(F.lit(1)).alias("doccount"),
         F.coalesce(F.sum("doclen"), F.lit(0)).alias("total_doclen"),
         F.coalesce(F.min("doclen"), F.lit(0)).alias("doclen_lb"),
         F.coalesce(F.max("doclen"), F.lit(0)).alias("doclen_ub"),
+        F.coalesce(F.max("wdf_max"), F.lit(0)).alias("wdf_ub"),
     ).head()
-    wdf_ub = postings.agg(F.max("wdf")).head()[0] or 0
     stats = IndexStats(row.doccount, row.total_doclen, row.doclen_lb,
-                       row.doclen_ub, wdf_ub)
+                       row.doclen_ub, row.wdf_ub)
 
     return InvertedIndex(
         postings, doclens, term_stats, stats,

@@ -5,7 +5,7 @@ Spark restatement of the reference match
 
 - stats gathering (prepare_sub_matches, :205-240) = a lookup in the
   driver-side term dictionary (index/termdict.py), collected once per
-  Enquire; termweights are computed driver-side in float64 exactly like
+  index; termweights are computed driver-side in float64 exactly like
   BM25Weight::init.
 - the PostList tree = a composition of relational operators (§2.2 SURVEY):
   AND → count-of-matching-children == n over one shared postings scan
@@ -35,7 +35,9 @@ plans any query with at most 60 py4j calls whatever its size
 (tests/test_plans.py pins this).
 
 - a Term, or an And/Or/Synonym/Max over distinct plain Terms, is ONE
-  postings scan (term IN (...)) + at most one shuffle (GROUP BY doc_id);
+  postings scan (term IN (...)) + one GROUP BY doc_id, which shuffles
+  nothing over a doc-partitioned index (build_index's postings) and at
+  most once over any other;
 - Phrase/Near add one position list per element to that aggregation
   and a WHERE over SQL higher-order functions checks the window, so no
   query runs a Python UDF;
@@ -52,7 +54,6 @@ import math
 import threading
 import weakref
 from dataclasses import dataclass
-from functools import cached_property
 from typing import Dict, List, Optional, Tuple
 
 from pyspark.sql import DataFrame, SparkSession
@@ -60,7 +61,7 @@ from pyspark.sql import functions as F
 
 from xapian_spark.index.build import InvertedIndex
 from xapian_spark.index.termdict import (
-    TermFreqs, collect_term_dict, sql_string, term_freqs, term_in_sql,
+    TermFreqs, sql_string, term_freqs, term_in_sql,
 )
 from xapian_spark.query import ops
 from xapian_spark.query.bm25 import BM25Weight, Sql, sql, sql_col, sql_double
@@ -144,15 +145,12 @@ class Enquire:
 
     # ------------------------------------------------------------------
 
-    @cached_property
-    def _term_dict(self) -> Optional[TermFreqs]:
-        return collect_term_dict(self.index.term_stats)
-
     def _full_term_dict(self) -> Optional[TermFreqs]:
-        """The whole term dictionary, collected once per Enquire; None
-        past termdict.TERM_DICT_CACHE_MAX (stats gathering then runs
-        one filtered collect per query)."""
-        return self._term_dict
+        """The whole term dictionary, collected once per index and
+        shared by every Enquire over it; None past
+        termdict.TERM_DICT_CACHE_MAX (stats gathering then runs one
+        filtered collect per query)."""
+        return self.index._term_dict
 
     def _gather_stats(self, terms: List[str]) -> _QueryStats:
         st = self.index.stats
@@ -334,12 +332,6 @@ class Enquire:
 
         raise TypeError(f"cannot compile {type(node).__name__}")
 
-    @cached_property
-    def _sorted_terms(self) -> List[str]:
-        """The held term dictionary's terms in Spark's string order
-        (UTF-8 bytes, which is Python's code-point order)."""
-        return sorted(self._term_dict)
-
     def _expand(self, node: ops.Wildcard) -> List[str]:
         """The terms a wildcard expands to, sorted."""
         cap = node.max_expansion or ops.DEFAULT_MAX_WILDCARD_EXPANSION
@@ -358,7 +350,7 @@ class Enquire:
         (`by_tf`) by tf descending, then term: a bisect of the held term
         dictionary (no job), or past TERM_DICT_CACHE_MAX one capped
         collect, so a short prefix never pulls unbounded terms."""
-        tfs = self._term_dict
+        tfs = self._full_term_dict()
         if tfs is None:
             term_stats = _view(self.index.term_stats, "term_stats")
             order = "tf DESC, term" if by_tf else "term"
@@ -366,7 +358,7 @@ class Enquire:
                 f"SELECT term FROM {term_stats}"
                 f" WHERE startswith(term, {sql_string(prefix)})"
                 f" ORDER BY {order} LIMIT {n}").collect()]
-        terms = self._sorted_terms
+        terms = self.index._sorted_terms
         lo = bisect.bisect_left(terms, prefix)
         if not by_tf:
             return list(itertools.takewhile(
@@ -377,10 +369,12 @@ class Enquire:
 
     def _flat_sql(self, node, stats: _QueryStats, factor: float,
                   keep_n: bool = False) -> str:
-        """And/Or/Synonym/Max over plain Terms: ONE scan + ONE shuffle.
-        `keep_n` carries the per-doc matched-term count out of the
-        aggregation (the percent/cutoff paths need it — computing it
-        here avoids a second shuffle over the same postings)."""
+        """And/Or/Synonym/Max over distinct plain Terms: ONE scan + ONE
+        GROUP BY doc_id. A doc has one postings row per term, so
+        count(1) counts the distinct terms it matches. `keep_n` carries
+        that count out of the aggregation (the percent/cutoff paths need
+        it — computing it here avoids a second aggregation of the same
+        postings)."""
         terms = [(c.term, c.wqf, factor) for c in node.children]
         # drop absent terms (matcher prunes empty postlists)
         present = [t for t in terms if stats.termfreqs.get(t[0], (0, 0))[0]]
@@ -394,11 +388,11 @@ class Enquire:
 
         sp = self._scored_sql(present, stats)
         if isinstance(node, ops.Max):
-            n = ", count(DISTINCT term) AS _n" if keep_n else ""
+            n = ", count(1) AS _n" if keep_n else ""
             return (f"SELECT doc_id, max(score) AS score{n}"
                     f" FROM ({sp}) GROUP BY doc_id")
         agg = (f"SELECT doc_id, {SUM_SCORES_SQL} AS score,"
-               f" CAST(count(DISTINCT term) AS BIGINT) AS _n"
+               f" CAST(count(1) AS BIGINT) AS _n"
                f" FROM ({sp}) GROUP BY doc_id")
         if isinstance(node, ops.And):
             agg = f"SELECT * FROM ({agg}) WHERE _n = {len(present)}"
@@ -537,7 +531,7 @@ class Enquire:
             scored = (
                 f"SELECT s.doc_id, s.score, m._n"
                 f" FROM ({self._sql(query, stats, 1.0)}) s LEFT JOIN"
-                f" (SELECT doc_id, count(DISTINCT term) AS _n"
+                f" (SELECT doc_id, count(1) AS _n"
                 f" FROM {postings} WHERE {term_in_sql(qterms)}"
                 " GROUP BY doc_id) m ON s.doc_id = m.doc_id")
         if not self._has_extra():
