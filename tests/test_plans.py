@@ -170,9 +170,9 @@ def test_and_over_unpartitioned_postings_shuffles_once(disk_index):
     # from parquet) its plan shuffles once, by doc_id, not twice as
     # a count(DISTINCT term) aggregation would
     q = ops.And([ops.Term("table"), ops.Term("scan")])
-    for df in (Enquire(disk_index).get_mset(q, 0, 10),
-               Enquire(disk_index)._run(Enquire(disk_index)._scored(
-                   q, keep_n=True))):
+    enq = Enquire(disk_index)
+    for df in (enq.get_mset(q, 0, 10),
+               enq._run(enq._scored(q, keep_n=True))):
         assert len(re.findall(r"\bExchange\b", _plan(df))) == 1, _plan(df)
 
 
