@@ -227,6 +227,24 @@ def test_fresh_enquire_over_warm_index_runs_no_extra_jobs(
     assert "scan" in terms and jobs == []
 
 
+def test_segment_views_reuse_the_index_term_dict(spark, tmp_path):
+    # a SegmentIndex hands the term dictionary it already holds to each
+    # to_inverted_index() view, so a view's Enquire collects no second
+    # copy after a warm WandEnquire query
+    from xapian_spark.index.segments import build_segments
+    from xapian_spark.query.wand import WandEnquire
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    seg = build_segments(docs, str(tmp_path / "seg"), n_segments=4,
+                         analyzer="simple")
+    WandEnquire(seg).get_mset(["table", "scan"], 10).collect()
+    for i in range(2):
+        view = seg.to_inverted_index()
+        tfs, jobs = _jobs(spark, f"view-dict-{i}",
+                          Enquire(view)._full_term_dict)
+        assert tfs is seg._term_dict and jobs == []
+
+
 def test_value_range_pushdown(spark, tmp_path):
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     p = str(tmp_path / "docs")

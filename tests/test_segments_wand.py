@@ -310,3 +310,103 @@ def test_simple_overlong_term_dropped_by_both_builds(spark, tmp_path):
     assert got_flat == got_seg == [
         ("alpha", 1, 1, 2), ("alpha", 2, 1, 2), ("beta", 1, 1, 2),
         ("gamma", 2, 1, 2)]
+
+
+def test_empty_term_dropped_by_both_builds(spark, tmp_path):
+    """The empty term is reserved for the doclen pseudo-term: an
+    analyzer that emits it has it dropped by both builds, so it is
+    neither a posting nor a second doclen row, and doclen counts only
+    the kept terms."""
+    from xapian_spark.index.build import simple_analyzer
+
+    def with_empty(text):
+        return simple_analyzer(text) + [("", 1, [99])]
+
+    docs = spark.createDataFrame(
+        [(1, "alpha beta"), (2, "alpha gamma alpha")],
+        "doc_id long, text string")
+    flat = build_index(docs, analyzer=with_empty)
+    seg = build_segments(docs, str(tmp_path / "seg"), n_segments=1,
+                         analyzer=with_empty)
+    cols = ["term", "doc_id", "wdf", "doclen"]
+    want = [("alpha", 1, 1, 2), ("alpha", 2, 2, 3), ("beta", 1, 1, 2),
+            ("gamma", 2, 1, 3)]
+    assert sorted(tuple(r) for r in flat.postings.select(*cols)
+                  .collect()) == want
+    assert sorted(tuple(r) for r in seg.to_postings().select(*cols)
+                  .collect()) == want
+    for idx in (flat, seg.to_inverted_index()):
+        assert sorted(tuple(r) for r in idx.doclens.collect()) == \
+            [(1, 2), (2, 3)]
+        assert (idx.stats.doccount, idx.stats.total_doclen) == (2, 5)
+
+
+# ---------------------------------------------------------------------------
+# one segment pipeline: the input is evaluated once, in a pinned job count
+# ---------------------------------------------------------------------------
+
+def _counting_udf(spark, dtype):
+    """(identity pandas UDF over a `dtype` column, accumulator of the
+    rows it evaluated)."""
+    import pandas as pd
+
+    acc = spark.sparkContext.accumulator(0)
+
+    @F.pandas_udf(dtype)
+    def counted(s: pd.Series) -> pd.Series:
+        acc.add(len(s))
+        return s
+
+    return counted, acc
+
+
+def _job_ids(spark, group, action):
+    """(action(), the ids of the Spark jobs it ran)."""
+    sc = spark.sparkContext
+    try:
+        sc.setJobGroup(group, group)
+        out = action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_build_and_compact_evaluate_input_once(spark, tmp_path):
+    """build_segments routes (doc_id, text, seg_id) rows by seg_id with
+    no sampling pass, and tokenizes after the shuffle: each input row
+    is evaluated once. compact decodes each chunk once."""
+    from xapian_spark.index.segments import compact
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    n_docs = docs.count()
+    counted, acc = _counting_udf(spark, "string")
+    seg = build_segments(docs.withColumn("text", counted("text")),
+                         str(tmp_path / "seg"), n_segments=4,
+                         analyzer="simple")
+    assert acc.value == n_docs
+    assert seg.stats().doccount == n_docs
+
+    n_chunks = seg.chunks.count()
+    counted_bin, acc_bin = _counting_udf(spark, "binary")
+    src = SegmentIndex(spark, seg.path)
+    src.chunks = src.chunks.withColumn("data", counted_bin("data"))
+    out = compact(src, str(tmp_path / "compacted"), n_segments=2)
+    assert acc_bin.value == n_chunks
+    assert _decoded_postings(out) == _decoded_postings(seg)
+
+
+def test_build_and_compact_job_counts(spark, tmp_path):
+    """A fresh build_segments and a compact run a pinned number of
+    Spark jobs (the status-tracker pattern of
+    test_wand_batch_plans_without_jobs_one_task_per_segment)."""
+    from xapian_spark.index.segments import compact
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    seg, build_jobs = _job_ids(
+        spark, "seg-build",
+        lambda: build_segments(docs, str(tmp_path / "seg"), n_segments=4,
+                               analyzer="simple"))
+    _out, compact_jobs = _job_ids(
+        spark, "seg-compact",
+        lambda: compact(seg, str(tmp_path / "compacted"), n_segments=2))
+    assert (len(build_jobs), len(compact_jobs)) == (10, 10)

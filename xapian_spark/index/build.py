@@ -11,8 +11,9 @@ One tokenize path, shared with the segment build (segments.py): every
 analyzer — a name in ANALYZERS ("xapian", the default TermGenerator rules;
 "apitest"; "simple", lowercase + split on non-alnum, the DuckDB-oracle
 tokenization) or any callable — resolves through resolve_analyzer and runs
-per document through analyze_document inside an Arrow-batched mapInPandas
-(no per-row Python UDF calls).
+per document through analyze_document, and _doc_postings turns a pandas
+batch of documents into posting rows: per Arrow batch of a mapInPandas
+here (no per-row Python UDF calls), per segment task in the segment build.
 
 Scale notes (100 TB / 10^12 docs):
 - the tokenize → explode stage is embarrassingly parallel (no shuffle);
@@ -32,7 +33,7 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass
 from functools import cached_property
-from typing import Callable, Iterator, List, Optional, Tuple
+from typing import Callable, List, Optional, Tuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -53,6 +54,10 @@ POSTINGS_SCHEMA = StructType([
 # Matches the reference brass backend's max term length
 # (brass_database.cc:88); longer terms are dropped at index time.
 MAX_SAFE_TERM_LENGTH = 245
+
+# reserved pseudo-term: the segment index stores each doc's doclen as a
+# posting of it, so analyze_document drops it from every termlist
+DOCLEN_TERM = ""
 
 
 def xapian_analyzer(text: str):
@@ -202,10 +207,12 @@ def resolve_analyzer(analyzer, lang_col: Optional[str] = None) -> Callable:
 
 def analyze_document(fn: Callable, *args) -> Tuple[List, int]:
     """One document through an analyzer → ([(term, wdf, positions)],
-    doclen). Terms over MAX_SAFE_TERM_LENGTH bytes are dropped, and
-    doclen = Σ wdf over the kept terms (incl. Z-stems)."""
+    doclen). Terms over MAX_SAFE_TERM_LENGTH bytes and the reserved
+    DOCLEN_TERM are dropped, and doclen = Σ wdf over the kept terms
+    (incl. Z-stems)."""
     tl = [(t, w, p) for t, w, p in fn(*args)
-          if len(t.encode("utf-8")) <= MAX_SAFE_TERM_LENGTH]
+          if t != DOCLEN_TERM
+          and len(t.encode("utf-8")) <= MAX_SAFE_TERM_LENGTH]
     return tl, sum(w for _t, w, _p in tl)
 
 
@@ -282,43 +289,33 @@ def _spread(docs: DataFrame) -> Tuple[DataFrame, int]:
     return docs, n
 
 
-def _tokenize_python(
-    docs: DataFrame, id_col: str, text_col: str,
-    analyzer: Callable, keep_positions: bool,
-    lang_col: str = None,
-) -> Tuple[DataFrame, int]:
-    """Arrow-batched tokenize → (exploded postings rows, the tokenize
-    input's partition count). With lang_col, the analyzer is called as
-    analyzer(text, lang) so per-row stemmer selection happens inside
-    the same vectorized batch."""
+def _doc_postings(pdf, id_col: str, text_col: str, analyzer: Callable,
+                  keep_positions: bool, lang_col: Optional[str] = None,
+                  doclen_rows: bool = False):
+    """A pandas batch of documents → its posting rows (pandas,
+    POSTINGS_SCHEMA columns). With lang_col the analyzer is called as
+    analyzer(text, lang), per-row stemmer selection inside the batch.
+    With doclen_rows each document, zero-term ones too, also yields a
+    (DOCLEN_TERM, doc_id, doclen, doclen) row."""
     import pandas as pd
 
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            ids, terms, wdfs, doclens, poss = [], [], [], [], []
-            langs = pdf[lang_col] if lang_col else pdf[id_col]
-            for doc_id, text, lang in zip(pdf[id_col], pdf[text_col],
-                                          langs):
-                # doclen known at tokenize time — denormalized into every
-                # posting row so scoring never joins doclens at query time
-                tl, doclen = analyze_document(analyzer, text, lang) \
-                    if lang_col else analyze_document(analyzer, text)
-                for term, wdf, positions in tl:
-                    ids.append(doc_id)
-                    terms.append(term)
-                    wdfs.append(wdf)
-                    doclens.append(doclen)
-                    poss.append(positions if keep_positions else None)
-            yield pd.DataFrame(
-                {"term": terms, "doc_id": ids, "wdf": wdfs,
-                 "doclen": doclens, "positions": poss}
-            )
-
-    cols = [F.col(id_col).cast("long").alias(id_col), F.col(text_col)]
-    if lang_col:
-        cols.append(F.col(lang_col))
-    spread, n = _spread(docs.select(*cols))
-    return spread.mapInPandas(gen, POSTINGS_SCHEMA), n
+    ids, terms, wdfs, doclens, poss = [], [], [], [], []
+    langs = pdf[lang_col] if lang_col else pdf[id_col]
+    for doc_id, text, lang in zip(pdf[id_col], pdf[text_col], langs):
+        # doclen known at tokenize time — denormalized into every
+        # posting row so scoring never joins doclens at query time
+        tl, doclen = analyze_document(analyzer, text, lang) \
+            if lang_col else analyze_document(analyzer, text)
+        if doclen_rows:
+            tl.append((DOCLEN_TERM, doclen, None))
+        for term, wdf, positions in tl:
+            ids.append(doc_id)
+            terms.append(term)
+            wdfs.append(wdf)
+            doclens.append(doclen)
+            poss.append(positions if keep_positions else None)
+    return pd.DataFrame({"term": terms, "doc_id": ids, "wdf": wdfs,
+                         "doclen": doclens, "positions": poss})
 
 
 def build_index(
@@ -338,8 +335,15 @@ def build_index(
     (analyzer must accept (text, lang); default multilingual_analyzer).
     """
     fn = resolve_analyzer(analyzer, lang_col)
-    tokens, n = _tokenize_python(docs, id_col, text_col, fn,
-                                 keep_positions, lang_col=lang_col)
+    cols = [F.col(id_col).cast("long").alias(id_col), F.col(text_col)]
+    if lang_col:
+        cols.append(F.col(lang_col))
+    spread, n = _spread(docs.select(*cols))
+    tokens = spread.mapInPandas(
+        lambda batches: (_doc_postings(pdf, id_col, text_col, fn,
+                                       keep_positions, lang_col)
+                         for pdf in batches),
+        POSTINGS_SCHEMA)
     # an explicit count makes this REPARTITION_BY_NUM, which AQE keeps
     # as is: the cached postings report HashPartitioning(doc_id, n)
     postings = tokens.repartition(n, "doc_id").persist()

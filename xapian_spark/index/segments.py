@@ -16,11 +16,13 @@ Design (SURVEY §4.3 / §7):
   (`subdb = (did-1) % N`, xapian-core/matcher/multimatch.cc:175-176),
   so segment membership is a pure function of doc_id — deterministic,
   resumable, no coordination.
-- The per-segment inverter (one applyInPandas group) is the analog of
-  the reference's in-memory Inverter buffer
-  (backends/brass/brass_inverter.h:45-249): accumulate term→postings
-  for the segment, sort, delta+vbyte encode into ~2000-byte chunks
-  (brass_postlist.cc:93) with block-max metadata (codec.py).
+- One pipeline writes every segment, as every flush goes through the
+  reference's Inverter (backends/brass/brass_inverter.h:45-249):
+  _route_segments gives each segment one task, build.py's _doc_postings
+  turns its docs into posting rows, and _encode_segment sorts them and
+  delta+vbyte encodes ~2000-byte chunks (brass_postlist.cc:93) with
+  block-max metadata (codec.py). compact re-encodes through the same
+  router and encoder.
 - Doclens are stored as chunks of the reserved empty term "" — the
   reference likewise keeps doclens inside the postlist table
   (brass_postlist.cc doclen chunks).
@@ -32,12 +34,12 @@ Design (SURVEY §4.3 / §7):
   already recorded in the manifest (checkpointed segment manifests —
   the analog of revisioned B-trees + changesets, brass_version.cc).
 
-One wide op inverts the whole index: groupBy(seg_id).applyInPandas.
-Everything downstream (term stats, global stats, manifest metrics) is
-metadata-only aggregation over chunk rows. Measured end to end
-(perfbench --trace 1, local[4], 400 docs, 4 segments), a fresh build
-runs 11 Spark jobs: the format.json stamp, the chunks write and six
-adaptive query stages around it, the manifest write, and
+One wide op inverts the whole index: the router's shuffle of
+(doc_id, text, seg_id) rows, with tokenizing after it, so the input is
+evaluated once. Everything downstream is metadata-only aggregation over
+chunk rows. Measured (perfbench --trace 1, local[4], 400 docs, 4
+segments), a fresh build runs 10 Spark jobs: the format.json stamp, the
+chunks write and its adaptive query stages, the manifest write, and
 SegmentIndex's read-back of format.json (schema inference, then head).
 The first term_stats() adds 4 more.
 """
@@ -46,7 +48,7 @@ from __future__ import annotations
 
 import time
 from functools import cached_property
-from typing import Callable, Iterable, Optional
+from typing import Callable, Iterable, Optional, Tuple
 
 import numpy as np
 
@@ -58,7 +60,9 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from xapian_spark.index.build import analyze_document, resolve_analyzer
+from xapian_spark.index.build import (
+    DOCLEN_TERM, _doc_postings, resolve_analyzer,
+)
 from xapian_spark.index.codec import (
     CHUNK_TARGET_BYTES, CODEC_VERSION, decode_chunk, decode_positions,
     encode_chunks, encode_positions,
@@ -66,8 +70,6 @@ from xapian_spark.index.codec import (
 from xapian_spark.index.termdict import (
     TermFreqs, collect_term_dict, term_freqs,
 )
-
-DOCLEN_TERM = ""  # reserved pseudo-term: chunks hold (doc_id, doclen, doclen)
 
 CHUNKS_SCHEMA = StructType([
     StructField("term", StringType(), False),
@@ -100,14 +102,20 @@ MANIFEST_SCHEMA = StructType([
 ])
 
 
+def _hadoop_fs(spark: SparkSession, path: str) -> Tuple:
+    """(Hadoop FileSystem, Path) for `path` — the one handle behind the
+    existence checks, listings and deletes below."""
+    sc = spark.sparkContext
+    hpath = sc._jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(sc._jsc.hadoopConfiguration()), hpath
+
+
 def _path_exists(spark: SparkSession, path: str) -> bool:
     """Filesystem existence check via the Hadoop FS API — used instead
     of catching AnalysisException, so an existing-but-corrupt table
     raises loudly rather than silently reading as absent (tombstones
     that silently read as absent would resurrect deleted docs)."""
-    sc = spark.sparkContext
-    hpath = sc._jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(sc._jsc.hadoopConfiguration())
+    fs, hpath = _hadoop_fs(spark, path)
     return bool(fs.exists(hpath))
 
 
@@ -129,25 +137,19 @@ def _read_optional_partitioned(spark: SparkSession, path: str,
     never-indexed ids wrote an empty batch): returns None for both
     path-absent and no-partitions; a dir WITH partitions still reads
     strictly (corruption raises)."""
-    if not _path_exists(spark, path):
+    fs, hpath = _hadoop_fs(spark, path)
+    if not fs.exists(hpath):
         return None
-    sc = spark.sparkContext
-    hpath = sc._jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(sc._jsc.hadoopConfiguration())
-    statuses = fs.listStatus(hpath)
     if not any(st.getPath().getName().startswith(partition_prefix)
-               for st in statuses):
+               for st in fs.listStatus(hpath)):
         return None
     return spark.read.parquet(path)
 
 
 def _delete_path(spark: SparkSession, path: str) -> None:
     """Recursively delete a path if it exists (Hadoop FS)."""
-    sc = spark.sparkContext
-    hpath = sc._jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(sc._jsc.hadoopConfiguration())
-    if fs.exists(hpath):
-        fs.delete(hpath, True)
+    fs, hpath = _hadoop_fs(spark, path)
+    fs.delete(hpath, True)
 
 
 def _write_dynamic_overwrite(df: DataFrame, path: str,
@@ -214,9 +216,8 @@ def _encode_term(rows: dict, term: str, seg_id: int, ids: np.ndarray,
                  wdf: np.ndarray, doclen: np.ndarray, positions,
                  target_bytes: int) -> None:
     """One term's docid-ascending postings within one segment → chunk
-    rows appended to `rows` (CHUNKS_SCHEMA columns). The one chunk
-    encoder: the build, replace_documents and compact all write
-    through it.
+    rows appended to `rows` (CHUNKS_SCHEMA columns); _encode_segment
+    calls it once per term.
 
     Per-chunk cf = Σ wdf, so the global term dictionary is a
     metadata-only sum. The doclen pseudo-term stores each doc's doclen
@@ -267,37 +268,51 @@ def _decode_chunk_rows(pdf):
     })
 
 
-def _invert_segment(
-    pdf, analyzer: Callable, text_col: str, id_col: str,
-    target_bytes: int, keep_positions: bool = False,
-):
-    """One segment's docs (pandas) → chunk rows (pandas). The Inverter."""
+def _encode_segment(seg_id: int, postings, target_bytes: int):
+    """One segment's posting rows (pandas: term, doc_id, wdf, doclen,
+    positions; any order, at least one row) → its chunk rows (pandas,
+    CHUNKS_SCHEMA): one sort by (term, doc_id), then _encode_term per
+    term slice. A term stores pos_data iff any posting has positions.
+    Callers: the build (so replace and the streaming drain), compact."""
     import pandas as pd
 
-    pdf = pdf.sort_values(id_col)
-    doc_ids = pdf[id_col].to_numpy(dtype=np.int64)
-    terms_acc: dict = {}
-    doclens = np.zeros(doc_ids.size, dtype=np.int64)
-    for i, text in enumerate(pdf[text_col]):
-        tl, doclens[i] = analyze_document(analyzer, text)
-        for t, w, p in tl:
-            terms_acc.setdefault(t, ([], [], []))
-            terms_acc[t][0].append(i)
-            terms_acc[t][1].append(w)
-            terms_acc[t][2].append(p if keep_positions else None)
-
-    seg_id = int(pdf["seg_id"].iloc[0]) if "seg_id" in pdf else 0
+    p = postings.sort_values(["term", "doc_id"], ignore_index=True)
+    terms = p["term"].to_numpy()
+    ids = p["doc_id"].to_numpy(dtype=np.int64)
+    wdf = p["wdf"].to_numpy(dtype=np.int64)
+    doclen = p["doclen"].to_numpy(dtype=np.int64)
+    positions = p["positions"].to_numpy()
+    cuts = np.flatnonzero(terms[1:] != terms[:-1]) + 1
     rows = {k.name: [] for k in CHUNKS_SCHEMA.fields}
-    for term in sorted(terms_acc):
-        idxs, wdfs, plists = terms_acc[term]
-        _encode_term(rows, term, seg_id, doc_ids[idxs],
-                     np.asarray(wdfs, dtype=np.int64), doclens[idxs],
-                     plists if keep_positions else None, target_bytes)
-    # doclen pseudo-term: one posting per doc, doclen in the wdf slot
-    if doc_ids.size:
-        _encode_term(rows, DOCLEN_TERM, seg_id, doc_ids, doclens, doclens,
-                     None, target_bytes)
+    for lo, hi in zip(np.r_[0, cuts], np.r_[cuts, terms.size]):
+        plists = positions[lo:hi]
+        has_pos = any(pl is not None for pl in plists)
+        _encode_term(rows, terms[lo], seg_id, ids[lo:hi], wdf[lo:hi],
+                     doclen[lo:hi], plists if has_pos else None,
+                     target_bytes)
     return pd.DataFrame(rows)
+
+
+def _route_segments(rows: DataFrame, n: int, kernel: Callable,
+                    schema) -> DataFrame:
+    """kernel(seg_id, pdf) → pandas rows, once per seg_id over all of
+    its rows: the segment router of the build, compact and WAND.
+    repartitionById sends a row to partition seg_id mod n with no
+    sampling job (a range partitioning evaluates its input twice), and
+    AQE keeps its explicit count (it coalesces a groupBy(seg_id)
+    shuffle into one task). n consecutive seg_ids get a task each."""
+
+    def gen(batches):
+        import pandas as pd
+
+        parts = [b for b in batches if len(b)]
+        if not parts:
+            return
+        pdf = pd.concat(parts, ignore_index=True)
+        for seg, g in pdf.groupby("seg_id", sort=True):
+            yield kernel(int(seg), g)
+
+    return rows.repartitionById(n, "seg_id").mapInPandas(gen, schema)
 
 
 def _write_manifest(chunks: DataFrame, path: str, build_sec: float,
@@ -576,9 +591,13 @@ class SegmentIndex:
         the brass position-table analog)."""
         from xapian_spark.index.build import InvertedIndex
 
-        postings = self.to_postings()
-        return InvertedIndex(postings, self.doclens(), self.term_stats(),
-                             self.stats(), docs=docs)
+        view = InvertedIndex(self.to_postings(), self.doclens(),
+                             self.term_stats(), self.stats(), docs=docs)
+        if "_term_dict" in self.__dict__:
+            # the dictionary this index already collected: a view's
+            # Enquire gathers stats without collecting it again
+            view._term_dict = self._term_dict
+        return view
 
     def doclens(self) -> DataFrame:
         """(doc_id, doclen) decoded straight from the doclen pseudo-term
@@ -597,8 +616,9 @@ def compact(
     api/compactor.cc): merge a many-segment index into `n_segments`
     fuller segments — per-term posting lists re-merged docid-ascending
     and re-encoded into ~target_bytes chunks (the k-way priority-queue
-    merge of the reference becomes one decode → range-shuffle →
-    re-encode pass; tf/cf re-derive from chunk metadata as before).
+    merge of the reference becomes one decode → route → re-encode
+    pass through the build's segment router and chunk encoder; tf/cf
+    re-derive from chunk metadata as before).
 
     Head-term skew note: the unit of shuffle is the (doc, term) posting
     row, re-keyed by the doc's NEW segment — a term's postings spread
@@ -611,35 +631,15 @@ def compact(
         n_segments = max(1, index.chunks.select("seg_id")
                          .distinct().count() // 4)
 
-    def reencode(batches):
-        import pandas as pd
-
-        parts = list(batches)
-        if not parts:
-            return
-        pdf = pd.concat(parts)
-        if len(pdf) == 0:
-            return
-        for seg, g in pdf.groupby("seg_id", sort=True):
-            rows = {k.name: [] for k in CHUNKS_SCHEMA.fields}
-            g = g.sort_values(["term", "doc_id"])
-            for term, tg in g.groupby("term", sort=True):
-                plists = list(tg["positions"])
-                has_pos = any(p is not None for p in plists)
-                _encode_term(rows, term, int(seg),
-                             tg["doc_id"].to_numpy(dtype=np.int64),
-                             tg["wdf"].to_numpy(dtype=np.int64),
-                             tg["doclen"].to_numpy(dtype=np.int64),
-                             plists if has_pos else None, target_bytes)
-            yield pd.DataFrame(rows)
-
     t0 = time.time()
     # _decode drops tombstoned postings: compact is where deletes are
     # physically reclaimed (brass_compact's role for changesets)
-    (index._decode(index.chunks)
-     .withColumn("seg_id", _segment_of(F.col("doc_id"), n_segments))
-     .repartitionByRange(n_segments, "seg_id")
-     .mapInPandas(reencode, CHUNKS_SCHEMA)
+    postings = index._decode(index.chunks).withColumn(
+        "seg_id", _segment_of(F.col("doc_id"), n_segments))
+    (_route_segments(
+        postings, n_segments,
+        lambda seg, pdf: _encode_segment(seg, pdf, target_bytes),
+        CHUNKS_SCHEMA)
      .write.mode("overwrite").partitionBy("seg_id")
      .parquet(f"{out_path}/chunks"))
     _write_manifest(spark.read.parquet(f"{out_path}/chunks"), out_path,
@@ -731,29 +731,21 @@ def build_segments(
     if not done or todo.limit(1).count() > 0:
         t0 = time.time()
 
-        def gen(batches):
-            import pandas as pd
+        def invert(seg, pdf):
+            return _encode_segment(
+                seg, _doc_postings(pdf, id_col, text_col, fn,
+                                   keep_positions, doclen_rows=True),
+                target_bytes)
 
-            parts = list(batches)
-            if not parts:
-                return
-            pdf = pd.concat(parts)
-            if len(pdf) == 0:
-                return
-            for _seg, g in pdf.groupby("seg_id", sort=True):
-                yield _invert_segment(g, fn, text_col, id_col,
-                                      target_bytes, keep_positions)
-
-        # One segment per task: repartitionByRange on seg_id gives a
-        # near-perfect 1:1 segment→partition mapping (hash partitioning
-        # via groupBy Poisson-collides segments into shared tasks and
-        # the max-loaded task gates the build — measured 2x slower at
-        # 32 cores). The shuffle moves only (doc_id, text, seg_id); the
-        # CPU-heavy invert runs balanced, one task per segment.
-        chunk_df = (
-            todo.repartitionByRange(n_segments, "seg_id")
-            .mapInPandas(gen, CHUNKS_SCHEMA)
-        )
+        # One segment per task: the n_segments seg_ids are consecutive,
+        # so the router maps them 1:1 onto n_segments partitions (hash
+        # partitioning via groupBy Poisson-collides segments into shared
+        # tasks and the max-loaded task gates the build — measured 2x
+        # slower at 32 cores). The shuffle moves only (doc_id, text,
+        # seg_id); the CPU-heavy tokenize and encode run after it,
+        # balanced, one task per segment.
+        chunk_df = _route_segments(todo, n_segments, invert,
+                                   CHUNKS_SCHEMA)
         # Idempotent per-segment commit: dynamic partition overwrite
         # replaces exactly the seg_id partitions present in chunk_df,
         # so a crash (or foreachBatch retry) after the chunks write but

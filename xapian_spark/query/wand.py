@@ -42,7 +42,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from xapian_spark.index.codec import decode_chunk
-from xapian_spark.index.segments import SegmentIndex
+from xapian_spark.index.segments import SegmentIndex, _route_segments
 from xapian_spark.index.termdict import term_in
 from xapian_spark.query.bm25 import BM25Weight
 
@@ -133,13 +133,13 @@ def _member_sorted(ids: np.ndarray, keep_sorted: np.ndarray
     return m
 
 
-def _segment_dead(dead, pdf) -> Optional[np.ndarray]:
-    """Sorted docids tombstoned in the segment of one kernel group
-    (`dead` is SegmentIndex._dead_arrays()), or None when none are."""
-    if dead is None or not len(pdf):
+def _segment_dead(dead, seg_id: int) -> Optional[np.ndarray]:
+    """Sorted docids tombstoned in segment seg_id (`dead` is
+    SegmentIndex._dead_arrays()), or None when none are."""
+    if dead is None:
         return None
     ids, before = dead
-    seg_dead = ids[before >= int(pdf["seg_id"].iloc[0])]
+    seg_dead = ids[before >= seg_id]
     return seg_dead if seg_dead.size else None
 
 
@@ -260,30 +260,14 @@ def _take_topk(docs: np.ndarray, scores: np.ndarray, k: int
 
 def _per_segment(index: SegmentIndex, chunk_rows: DataFrame, kernel,
                  schema: str) -> DataFrame:
-    """kernel(pdf) → pandas rows, run once per segment over that
-    segment's chunk rows: one task per segment, up to the session's
-    parallelism (seg_ids past it share a task, modulo the partition
-    count).
-
-    The build's shape, not groupBy(seg_id).applyInPandas: AQE coalesces
-    that small shuffle into ONE partition, which scores every segment
-    one after another in a single task. An explicit-count
-    repartitionById is not coalesced, and routes each row by its seg_id
-    directly, so unlike repartitionByRange it needs no sampling job."""
+    """kernel(seg_id, pdf) → pandas rows, run once per segment over
+    that segment's chunk rows, through the build's segment router
+    (segments._route_segments): one task per segment, up to the
+    session's parallelism (seg_ids past it share a task, modulo the
+    partition count)."""
     n = max(1, min(index._segment_span(),
                    index.spark.sparkContext.defaultParallelism))
-
-    def gen(batches):
-        import pandas as pd
-
-        parts = [b for b in batches if len(b)]
-        if not parts:
-            return
-        pdf = pd.concat(parts, ignore_index=True)
-        for _seg, g in pdf.groupby("seg_id", sort=True):
-            yield kernel(g)
-
-    return chunk_rows.repartitionById(n, "seg_id").mapInPandas(gen, schema)
+    return _route_segments(chunk_rows, n, kernel, schema)
 
 
 class WandEnquire:
@@ -331,10 +315,10 @@ class WandEnquire:
 
         out_schema = "doc_id long, score double"
 
-        def kernel(pdf):
+        def kernel(seg, pdf):
             import pandas as pd
 
-            seg_dead = _segment_dead(dead, pdf)
+            seg_dead = _segment_dead(dead, seg)
             cursors = []
             for t, g in pdf.groupby("term"):
                 cursors.append(_TermCursor(
@@ -424,10 +408,10 @@ class WandEnquire:
             .select("term", "seg_id", "data")
         )
 
-        def kernel(pdf):
+        def kernel(seg, pdf):
             import pandas as pd
 
-            seg_dead = _segment_dead(dead, pdf)
+            seg_dead = _segment_dead(dead, seg)
             decoded = {}
             for t, g in pdf.groupby("term"):
                 ids_l, w_l, dl_l = [], [], []
